@@ -106,10 +106,6 @@ def chord2_sin2(c2: float) -> float:
     return c2 * (1.0 - 0.25 * c2)
 
 
-def chord2_cos(c2: float) -> float:
-    return 1.0 - 0.5 * c2
-
-
 def latlng_to_xyz(lat_deg: float, lng_deg: float) -> Vec:
     phi = math.radians(lat_deg)
     theta = math.radians(lng_deg)

@@ -48,12 +48,6 @@ def e_to_deg(e, k: int) -> np.ndarray:
     return np.asarray(e, dtype=np.float64) * _DEG_MUL[k]
 
 
-def rad_to_e(rad, k: int) -> np.ndarray:
-    """Radians → E{k} int32 (Angle-based conversion path)."""
-    v = np.asarray(rad, dtype=np.float64) / _RAD_MUL[k]
-    return _round_ties_away(v).astype(np.int32)
-
-
 def e_to_rad(e, k: int) -> np.ndarray:
     """E{k} → radians: e * (pi/180/1e{k})."""
     return np.asarray(e, dtype=np.float64) * _RAD_MUL[k]

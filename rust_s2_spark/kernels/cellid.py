@@ -434,38 +434,6 @@ def face_uv_to_xyz(f, u, v):
     return x, y, z
 
 
-def unorm(f, u):
-    """Outward normal of the constant-u plane on a face (non-unit)."""
-    zero = np.zeros(np.shape(u), dtype=np.float64)
-    one = np.ones(np.shape(u), dtype=np.float64)
-    xs = [u, one, one, -u, zero, zero]
-    ys = [-one, u, zero, zero, -u, -one]
-    zs = [zero, zero, u, one, one, -u]
-    return _select6(f, xs, ys, zs)
-
-
-def vnorm(f, v):
-    zero = np.zeros(np.shape(v), dtype=np.float64)
-    one = np.ones(np.shape(v), dtype=np.float64)
-    xs = [-v, zero, zero, v, one, one]
-    ys = [zero, -v, -one, -one, v, zero]
-    zs = [one, one, -v, zero, zero, v]
-    return _select6(f, xs, ys, zs)
-
-
-def _select6(f, xs, ys, zs):
-    x = np.empty(np.shape(f), dtype=np.float64)
-    y = np.empty(np.shape(f), dtype=np.float64)
-    z = np.empty(np.shape(f), dtype=np.float64)
-    for k in range(6):
-        m = f == k
-        if np.any(m):
-            x = np.where(m, xs[k], x)
-            y = np.where(m, ys[k], y)
-            z = np.where(m, zs[k], z)
-    return x, y, z
-
-
 # ---------------------------------------------------------------------------
 # Hilbert encode/decode
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import numpy as np
 
-DBL_EPSILON = 2.220446049250313e-16
 NEGATIVE = -1.0
 RIGHT = 2.0
 STRAIGHT = 4.0
@@ -100,18 +99,6 @@ def is_special(ca):
 def is_valid(ca):
     ca = np.asarray(ca, dtype=np.float64)
     return ((ca >= 0) & (ca <= 4.0)) | is_special(ca)
-
-
-def max_point_error(ca):
-    """Error bound for chord² built from two near-unit points
-    (ref chordangle.rs:220-227)."""
-    return 2.5 * DBL_EPSILON * np.asarray(ca, dtype=np.float64) + 16.0 * (
-        DBL_EPSILON * DBL_EPSILON
-    )
-
-
-def max_angle_error(ca):
-    return DBL_EPSILON * np.asarray(ca, dtype=np.float64)
 
 
 def successor(ca):

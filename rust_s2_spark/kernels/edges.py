@@ -454,26 +454,6 @@ def regular_points(center, radius_rad: float, n: int) -> np.ndarray:
     return pts / np.linalg.norm(pts, axis=1, keepdims=True)
 
 
-def true_centroid(a, b, c) -> np.ndarray:
-    """True centroid of a spherical triangle × its area
-    (ref point.rs:305-345)."""
-    a = np.atleast_2d(np.asarray(a, dtype=np.float64))
-    b = np.atleast_2d(np.asarray(b, dtype=np.float64))
-    c = np.atleast_2d(np.asarray(c, dtype=np.float64))
-    ra = np.ones(a.shape[0])
-    # standard formula: sum over edges of (angle * unit normal) / 2
-    out = np.zeros_like(a)
-    for u, v in ((a, b), (b, c), (c, a)):
-        normal = _cross(u, v)
-        nn = _norm(normal)
-        ang = np.arctan2(nn, _dot(u, v))
-        with np.errstate(invalid="ignore", divide="ignore"):
-            unit = normal / np.where(nn == 0, 1.0, nn)[..., None]
-        out = out + unit * (0.5 * ang)[..., None]
-    _ = ra
-    return out
-
-
 def ortho(p) -> np.ndarray:
     """Unit vector orthogonal to each p, with the reference's exact seed
     vector (0.012, 0.0053, 0.00457) + largest-component rule

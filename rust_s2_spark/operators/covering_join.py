@@ -296,15 +296,6 @@ def region_join_ancestors(
     return out.drop("__anc", "ccell", "rinterior")
 
 
-def cells_per_region(df_joined: DataFrame, agg_level: int, cell_col: str = "cell_id"):
-    from ..functions import s2_parent
-
-    return (
-        df_joined.groupBy("region_id", s2_parent(cell_col, agg_level).alias("cell"))
-        .count()
-    )
-
-
 def within_distance_pairs(
     df: DataFrame,
     radius_deg: float,

@@ -6,9 +6,16 @@ every intermediate bit-for-bit.
 
 * exact_dedup          — hash-groupBy keep-first
 * minhash_lsh_pairs    — shingle → per-band minhash → bucket join
-* ngram_jaccard        — exact n-gram Jaccard for candidate verification
+* ngram_jaccard        — exact n-gram Jaccard for candidate verification:
+                         per-doc shingle sets joined to each pair side,
+                         size(array_intersect) — no shingle-keyed shuffle
 * phash_hamming_pairs  — near-dup images by phash hamming distance
-* simhash64            — 64-bit simhash over token md5s (Spark native)
+* simhash64            — 64-bit simhash over token md5s (Spark native):
+                         one vote aggregate over (doc, bit) rows
+
+minhash and Jaccard both read ``_doc_shingles``, one per-doc aggregate
+over a single shingle pass (band signatures + the distinct shingle
+set); ``ensemble_dedup_vote`` builds it once for both.
 """
 
 from __future__ import annotations
@@ -17,6 +24,11 @@ import itertools
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# minhash_lsh_pairs' banding defaults; ensemble_dedup_vote uses the same
+# values, so its candidate set stays the one minhash_lsh_pairs proposes
+_ROWS_PER_BAND = 4
+_MAX_BUCKET = 1_000
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -28,20 +40,16 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles(
-    df: DataFrame, text_col: str, n: int, id_col: str | None = None,
-    distinct: bool = True,
-) -> DataFrame:
-    """Character n-gram md5s per row: (id cols..., shingle).
+def shingles(df: DataFrame, text_col: str, n: int) -> DataFrame:
+    """Character n-gram md5s per row: (id cols..., shingle), one row
+    per position — a doc's repeated n-grams stay repeated. The
+    consumer (``_doc_shingles``) is duplicate-insensitive: a min over
+    dup shingles is unchanged, and collect_set drops the dups per doc.
 
     explode(sequence) + top-level substring/md5 keeps the hashing in
     whole-stage codegen (a lambda inside transform() runs interpreted),
     and the text column is PRUNED before any shuffle — downstream
     carries (id, 32-byte hash), never the documents themselves.
-
-    ``distinct=False`` skips the dedup shuffle entirely — correct for
-    duplicate-insensitive consumers (minhash: min over dup shingles is
-    unchanged); Jaccard set sizes need distinct=True.
     """
     keys = [c for c in df.columns if c != text_col]
     # the shingle explode multiplies rows ~1000x and every shingle pays
@@ -58,49 +66,40 @@ def shingles(
     ).alias("__pos")
     with_pos = df.select("*", pos)
     sh = F.md5(F.expr(f"substring({text_col}, __pos, {n})")).alias("shingle")
-    out = with_pos.select(*keys, sh)
-    return out.dropDuplicates(keys + ["shingle"]) if distinct else out
+    return with_pos.select(*keys, sh)
 
 
-def minhash_lsh_pairs(
+def _doc_shingles(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 5,
-    bands: int = 8,
-    rows_per_band: int = 4,
-    max_bucket: int | None = 1_000,
-    materialize_sigs: bool = True,
+    n: int,
+    bands: int,
+    rows_per_band: int,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs via banded minhash (b bands ×
-    r rows): minhash h_i = min(md5('s{i}:' || shingle)); band
-    signature = md5(h_{rb} || ... || h_{rb+r-1}). Collision
-    probability per band ≈ J^r, so common-vocabulary corpora don't
-    explode the buckets. Rows sharing a (band, signature) bucket
-    become candidate pairs (a < b). All portable SQL (DuckDB
-    oracle-able); one shingle pass computes every minhash (map-side
-    partial min aggregation).
+    """The per-doc shingle aggregate that minhash and Jaccard share:
+    (id, shingle_set, sig0..sig{bands-1}) from ONE groupBy over the
+    non-distinct shingle stream.
 
-    ``materialize_sigs`` (default): the per-doc signature table (one
-    row per doc — ~1000× smaller than the shingle stream) is
-    localCheckpoint'ed before the bucket self-join, so the shingle +
-    minhash pipeline runs ONCE instead of once per join side (~6×
-    end-to-end at sf0.1). Pass False to keep the plan fully lazy
-    (plan-inspection tests).
+    ``shingle_set`` is collect_set(shingle) — the distinct shingle md5s
+    the exact Jaccard needs, deduplicated inside the per-doc aggregate
+    instead of by a (doc, shingle) dropDuplicates shuffle. The band
+    signatures come from bands × rows_per_band minhashes (see
+    ``minhash_lsh_pairs``); a min over duplicate shingles equals the
+    min over distinct ones, so the partial aggregation absorbs the
+    duplicates map-side. A consumer that reads only one side gets the
+    other pruned from the aggregate by Catalyst.
     """
     nh = bands * rows_per_band
-    # min over duplicate shingles equals min over distinct shingles, so
-    # the dedup shuffle is skipped — partial min-agg absorbs dups map-side
-    sh = shingles(df.select(id_col, text_col), text_col, n, distinct=False)
+    sh = shingles(df.select(id_col, text_col), text_col, n)
     # minhash h_i: slice four independent 32-bit (8-hex) values out of
     # each md5 instead of hashing once per i — 128 bits of md5 feed 4
     # minhashes, so ceil(nh/4) md5 calls per shingle instead of nh
-    aggs = []
+    aggs = [F.collect_set("shingle").alias("shingle_set")]
     for i in range(nh):
         grp, sl = divmod(i, 4)
         src = F.md5(F.concat(F.lit(f"g{grp}:"), F.col("shingle")))
         aggs.append(F.min(F.substring(src, 1 + 8 * sl, 8)).alias(f"h{i}"))
-    wide = sh.groupBy(id_col).agg(*aggs)
     band_sigs = [
         F.md5(
             F.concat(
@@ -109,7 +108,49 @@ def minhash_lsh_pairs(
         ).alias(f"sig{b}")
         for b in range(bands)
     ]
-    wide = wide.select(id_col, *band_sigs)
+    return sh.groupBy(id_col).agg(*aggs).select(id_col, "shingle_set", *band_sigs)
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int = 5,
+    bands: int = 8,
+    rows_per_band: int = _ROWS_PER_BAND,
+    max_bucket: int | None = _MAX_BUCKET,
+    materialize_sigs: bool = True,
+) -> DataFrame:
+    """Candidate near-duplicate pairs via banded minhash (b bands ×
+    r rows): minhash h_i = min over shingles of the (i mod 4)-th 8-hex
+    slice of md5('g{i div 4}:' || shingle); band
+    signature = md5(h_{rb} || ... || h_{rb+r-1}). Collision
+    probability per band ≈ J^r, so common-vocabulary corpora don't
+    explode the buckets. Rows sharing a (band, signature) bucket
+    become candidate pairs (a < b). All portable SQL (DuckDB
+    oracle-able); one shingle pass computes every minhash (map-side
+    partial min aggregation, see ``_doc_shingles``).
+
+    ``materialize_sigs`` (default): the per-doc signature table (one
+    row per doc — ~1000× smaller than the shingle stream) is
+    localCheckpoint'ed before the bucket self-join, so the shingle +
+    minhash pipeline runs ONCE instead of once per join side (~6×
+    end-to-end at sf0.1). Pass False to keep the plan fully lazy
+    (plan-inspection tests).
+    """
+    docs = _doc_shingles(df, text_col, id_col, n, bands, rows_per_band)
+    return _band_pairs(docs, id_col, bands, max_bucket, materialize_sigs)
+
+
+def _band_pairs(
+    docs: DataFrame,
+    id_col: str,
+    bands: int,
+    max_bucket: int | None,
+    materialize_sigs: bool,
+) -> DataFrame:
+    """minhash_lsh_pairs' bucket self-join over ``_doc_shingles`` rows."""
+    wide = docs.select(id_col, *[f"sig{b}" for b in range(bands)])
     if materialize_sigs:
         wide = wide.localCheckpoint(eager=True)
     sigs = wide.select(
@@ -160,29 +201,35 @@ def _cap_buckets(df: DataFrame, keys: list[str], max_bucket: int | None) -> Data
 def ngram_jaccard(
     df: DataFrame, pairs: DataFrame, text_col: str, id_col: str, n: int = 5
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for candidate pairs."""
-    sh = shingles(df.select(id_col, text_col), text_col, n).select(
-        F.col(id_col).alias("__id"), "shingle"
-    )
-    sizes = sh.groupBy("__id").agg(F.count("*").alias("sz"))
-    # intersection size via join on shingle, then count per pair
-    a_sh = sh.withColumnRenamed("__id", "a")
-    b_sh = sh.withColumnRenamed("__id", "b")
-    inter = (
-        pairs.join(a_sh, "a").join(b_sh, ["b", "shingle"]).groupBy("a", "b").agg(
-            F.count("*").alias("inter_sz")
+    """Exact n-gram Jaccard similarity for candidate pairs.
+
+    Each pair joins the per-doc shingle sets of ``_doc_shingles`` once
+    per side and intersects them in place:
+    inter = size(array_intersect(S_a, S_b)), jaccard = inter /
+    (|S_a| + |S_b| - inter). No shuffle is keyed on the shingle. Pairs
+    that share no shingle (inter = 0) get no row. ``pairs`` holds
+    DISTINCT (a, b) rows; a repeated pair is judged once per copy.
+    Returns (a, b, jaccard)."""
+    docs = _doc_shingles(df, text_col, id_col, n, bands=0, rows_per_band=0)
+    return _pair_jaccard(docs, pairs, id_col)
+
+
+def _pair_jaccard(docs: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """ngram_jaccard over ``_doc_shingles`` rows."""
+    def side(key: str) -> DataFrame:
+        return docs.select(
+            F.col(id_col).alias(key), F.col("shingle_set").alias(f"__s{key}")
         )
+
+    j = pairs.select("a", "b").join(side("a"), "a").join(side("b"), "b")
+    inter = F.size(F.array_intersect("__sa", "__sb")).cast("long")
+    sizes = F.size("__sa").cast("long") + F.size("__sb").cast("long")
+    jaccard = F.col("__i") / (F.col("__n") - F.col("__i"))
+    return (
+        j.select("a", "b", inter.alias("__i"), sizes.alias("__n"))
+        .where(F.col("__i") > 0)
+        .select("a", "b", jaccard.alias("jaccard"))
     )
-    out = (
-        inter.join(sizes.withColumnRenamed("__id", "a").withColumnRenamed("sz", "sz_a"), "a")
-        .join(sizes.withColumnRenamed("__id", "b").withColumnRenamed("sz", "sz_b"), "b")
-        .withColumn(
-            "jaccard",
-            F.col("inter_sz")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter_sz")),
-        )
-    )
-    return out.select("a", "b", "jaccard")
 
 
 def _phash_band_plan(max_dist: int) -> tuple[int, int]:
@@ -290,6 +337,12 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     (conv() on 16 hex chars would overflow the signed long in ANSI mode,
     so the two 32-bit halves are combined with shiftleft/OR — exact);
     each bit votes ±1; sign of the vote per bit forms the fingerprint.
+
+    The votes are ONE sum over (doc, bit) rows — every token is
+    exploded over bits 0..63 — and a second groupBy ORs the bits whose
+    vote is positive. 64 per-bit aggregate columns and a 64-deep OR
+    chain would cost over a second of driver planning per call. Docs
+    with no token get no row.
     """
     # same hazard as shingles(): the token explode multiplies rows and
     # every token pays an md5 — a single-file corpus would run all of it
@@ -305,20 +358,17 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     hi = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
     lo = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
     h = F.shiftleft(hi, 32).bitwiseOR(lo)
-    tokens = tokens.withColumn("th", h)
-    votes = [
-        F.sum(
-            F.when(F.shiftrightunsigned(F.col("th"), b).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"v{b}")
-        for b in range(64)
-    ]
-    agg = tokens.groupBy(id_col).agg(*votes)
-    sim = F.lit(0).cast("long")
-    for b in range(64):
-        bit = F.shiftleft(F.lit(1).cast("long"), b)
-        sim = sim.bitwiseOR(F.when(F.col(f"v{b}") > 0, bit).otherwise(F.lit(0).cast("long")))
-    return agg.select(F.col(id_col), sim.alias("simhash"))
+    # hash in its own projection: an expression beside the explode
+    # would be evaluated once per (token, bit) row, not once per token
+    votes = (
+        tokens.select(F.col(id_col), h.alias("th"))
+        .select(id_col, "th", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit"))
+        .groupBy(id_col, "bit")
+        .agg(F.expr("sum(IF(shiftrightunsigned(th, bit) & 1 = 1, 1, -1))").alias("v"))
+    )
+    return votes.groupBy(id_col).agg(
+        F.expr("bit_or(IF(v > 0, shiftleft(1L, bit), 0L))").alias("simhash")
+    )
 
 
 def _union_find_labels(rows: list) -> list[tuple[int, int]]:
@@ -563,11 +613,15 @@ def ensemble_dedup_vote(
     shingle-set coincidences with different token distributions).
 
     All three signals are existing operators (candidates join the
-    simhash table twice — broadcastable); outputs are deterministic
-    (rounded jaccard, integer hamming, boolean keep).
+    simhash table twice — broadcastable); minhash and Jaccard read one
+    shared per-doc shingle aggregate (``_doc_shingles``). Outputs are
+    deterministic (rounded jaccard, integer hamming, boolean keep).
     Returns (a, b, jaccard, hamming, keep)."""
-    pairs = minhash_lsh_pairs(docs, text_col, id_col, n=n, bands=bands)
-    jac = ngram_jaccard(docs, pairs, text_col, id_col, n=n)
+    shingled = _doc_shingles(docs, text_col, id_col, n, bands, _ROWS_PER_BAND)
+    # materializing changes only how often the signatures are computed,
+    # never the pairs
+    pairs = _band_pairs(shingled, id_col, bands, _MAX_BUCKET, materialize_sigs=True)
+    jac = _pair_jaccard(shingled, pairs, id_col)
     sh = simhash64(docs, text_col, id_col)
     # LEFT joins: a token-less (empty/whitespace) doc has NO simhash row
     # — with inner joins the most common duplicate class (blank docs)

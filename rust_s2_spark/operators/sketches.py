@@ -24,8 +24,9 @@ Arithmetic discipline (the repo-wide rule: no libm in hashed outputs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, IntegralType, StringType
 
 
 def _hll_alpha(m: int) -> float:
@@ -243,16 +244,22 @@ def heavy_hitters(
     driver oracle is the exhaustive GROUP BY ... HAVING — fully
     algorithm-independent.
 
-    The internal bucketing is NATIVE xxhash64 on the raw column
-    (``_hh_bucket``), not the md5 string contract: the recall
-    guarantee holds under ANY deterministic hash, the exact verify
-    reproduces the same (key, n) rows whatever the filter let through,
-    and nothing downstream replays these counters — unlike
+    The internal bucketing is NATIVE xxhash64 (``_hh_bucket``), not
+    the md5 string contract: the recall guarantee holds under ANY
+    deterministic hash of the result key, the exact verify reproduces
+    the same (key, n) rows whatever the filter let through, and
+    nothing downstream replays these counters — unlike
     ``cm_sketch_estimate``/the streaming counters, whose ESTIMATES are
-    oracle-replayed and therefore stay on ``_cm_bucket`` md5. Dropping
-    the per-row cast-to-string + md5 + hex conv chain roughly halves
-    the operator's map cost (measured: the est filter's overhead over
-    a plain scan fell ~4x at bench scale).
+    oracle-replayed and therefore stay on ``_cm_bucket`` md5. The
+    result key is ``CAST(value AS STRING)``; ``_hh_hash_key`` hashes
+    the raw column where that cast is injective (integral, boolean,
+    string) and the cast elsewhere — for arrays, maps, structs or
+    binary two raw values can print alike, and bucketing them apart
+    would split one key's count so a true heavy hitter could fall
+    below the threshold in every counter. Skipping the per-row
+    cast-to-string + md5 + hex conv chain roughly halves the
+    operator's map cost (measured: the est filter's overhead over a
+    plain scan fell ~4x at bench scale).
 
     NULL keys are excluded (explicit isNotNull on the candidate scan —
     the md5 path dropped them via null buckets; xxhash64 never returns
@@ -280,23 +287,24 @@ def heavy_hitters(
         raise ValueError(f"unknown heavy_hitters mode {mode!r}")
     if mode == "auto":
         mode = "literal" if d * w <= HH_LITERAL_BUDGET else "join"
+    if mode == "literal" and d * w > HH_LITERAL_BUDGET:
+        raise ValueError(
+            f"d*w = {d * w} > {HH_LITERAL_BUDGET} literal budget: the "
+            "lookup expression would stall whole-stage codegen; use "
+            "mode='join' (threshold-pruned broadcast semi joins)"
+        )
     v = f"CAST(`{value_col}` AS STRING)"
+    hkey = _hh_hash_key(df, value_col)
     if mode == "literal":
-        if d * w > HH_LITERAL_BUDGET:
-            raise ValueError(
-                f"d*w = {d * w} > {HH_LITERAL_BUDGET} literal budget: the "
-                "lookup expression would stall whole-stage codegen; use "
-                "mode='join' (threshold-pruned broadcast semi joins)"
-            )
         counts = {
             (r["i"], r["b"]): r["c"]
-            for r in _hh_counters(df, value_col, d, w).collect()
+            for r in _hh_counters(df, value_col, hkey, d, w).collect()
         }
         est = F.least(
             *[
                 F.element_at(
                     F.lit([int(counts.get((i, b), 0)) for b in range(w)]),
-                    (_hh_bucket(i, F.col(value_col), w) + 1).cast("int"),
+                    (_hh_bucket(i, hkey, w) + 1).cast("int"),
                 )
                 for i in range(d)
             ]
@@ -315,7 +323,7 @@ def heavy_hitters(
         # sum to n, so rows with c >= threshold number <= d*n/threshold
         # (a heavy-hitter threshold makes this a handful; <= d*w always).
         rows = (
-            _hh_counters(df, value_col, d, w)
+            _hh_counters(df, value_col, hkey, d, w)
             .where(F.col("c") >= threshold)
             .select("i", "b")
             .collect()
@@ -333,7 +341,7 @@ def heavy_hitters(
             )
             cand = cand.join(
                 F.broadcast(hb),
-                _hh_bucket(i, F.col(value_col), w) == F.col(f"__hb{i}"),
+                _hh_bucket(i, hkey, w) == F.col(f"__hb{i}"),
                 "left_semi",
             )
     return (
@@ -343,22 +351,36 @@ def heavy_hitters(
     )
 
 
-def _hh_bucket(i: int, col, w: int):
-    """heavy_hitters' INTERNAL CM bucketing: pmod(xxhash64(i, value), w)
-    on the raw column — native, no cast-to-string/md5/hex-conv per row.
+def _hh_hash_key(df: DataFrame, value_col: str) -> Column:
+    """What ``_hh_bucket`` hashes: the raw column where
+    CAST(value AS STRING) is injective (so equal result keys are equal
+    raw values), else the cast itself — every row of one result key
+    must land in one bucket."""
+    dtype = df.select(value_col).schema[0].dataType
+    if isinstance(dtype, (IntegralType, BooleanType, StringType)):
+        return F.col(value_col)
+    return F.col(value_col).cast("string")
+
+
+def _hh_bucket(i: int, key: Column, w: int):
+    """heavy_hitters' INTERNAL CM bucketing: pmod(xxhash64(i, key), w)
+    on the ``_hh_hash_key`` expression — native, no md5/hex-conv per row.
     Only valid where nothing replays the counters (heavy_hitters' exact
     verify makes the hash invisible in the result); the oracle-replayed
     sketches stay on the ``_cm_bucket`` md5 contract."""
-    return F.pmod(F.xxhash64(F.lit(i), col), F.lit(w))
+    return F.pmod(F.xxhash64(F.lit(i), key), F.lit(w))
 
 
-def _hh_counters(df: DataFrame, value_col: str, d: int, w: int) -> DataFrame:
+def _hh_counters(
+    df: DataFrame, value_col: str, key: Column, d: int, w: int
+) -> DataFrame:
     """The d x w counter table of ``heavy_hitters`` (xxhash64
-    bucketing; null keys excluded to match the candidate scan)."""
+    bucketing of ``key``; null keys excluded to match the candidate
+    scan)."""
     col = F.col(value_col)
     tags = F.array(
         *[
-            F.struct(F.lit(i).alias("i"), _hh_bucket(i, col, w).alias("b"))
+            F.struct(F.lit(i).alias("i"), _hh_bucket(i, key, w).alias("b"))
             for i in range(d)
         ]
     )

@@ -12,8 +12,6 @@ image side when the table is already cell-partitioned.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -23,13 +21,6 @@ from pyspark.sql.types import ArrayType, LongType
 
 from ..geometry import RegionCoverer
 from ..kernels import cellid as k
-from ..kernels import metric as metrics
-
-
-def tile_level_for_footprint(radius_rad: float) -> int:
-    """Deepest level whose min cell width still covers the footprint
-    radius — makes the 3×3 ring exact."""
-    return max(0, min(30, metrics.MIN_WIDTH.max_level(radius_rad)))
 
 
 def image_tiles(

@@ -515,6 +515,60 @@ def test_ensemble_vote_blank_docs_get_verdicts(spark):
         assert out[p].keep is True
 
 
+_AWKWARD_DOCS = [
+    (0, None),
+    (1, ""),
+    (2, ""),
+    (3, "   "),
+    (4, " \t\n "),
+    (5, " " * 8),
+    (6, " " * 9),
+    (7, "abc"),
+    (8, "abc"),
+    (9, "abcd"),
+    (10, "the quick brown fox jumps over the lazy dog"),
+    (11, "the quick brown fox jumps over the lazy dog"),
+    (12, "the quick brown fox jumps over the lazy cat"),
+    (13, None),
+    (14, "  lead and trail  "),
+]
+
+
+def test_dedup_awkward_docs_match_oracles(spark):
+    """Null text, empty text, whitespace-only text, text shorter than
+    n and exact-duplicate texts: ensemble_dedup_vote and simhash64
+    return what the driver oracles o_dedup_vote and o_simhash return in
+    DuckDB on the same rows."""
+    import duckdb
+    import pandas as pd
+
+    from rust_s2_spark.operators.dedup import ensemble_dedup_vote, simhash64
+    from rust_s2_spark.plans.driver_queries import o_dedup_vote, o_simhash
+
+    docs = spark.createDataFrame(_AWKWARD_DOCS, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(_AWKWARD_DOCS, columns=["doc_id", "text"])
+    )
+
+    want_sim = {tuple(r) for r in con.execute(o_simhash()).fetchall()}
+    got_sim = {tuple(r) for r in simhash64(docs, "text", "doc_id").collect()}
+    assert got_sim == want_sim
+
+    want = sorted(con.execute(o_dedup_vote()).fetchall())
+    got = sorted(tuple(r) for r in ensemble_dedup_vote(docs, "text", "doc_id").collect())
+    assert [(a, b, h, k) for a, b, _, h, k in got] == [
+        (a, b, h, k) for a, b, _, h, k in want
+    ]
+    for g, w in zip(got, want):
+        assert g[2] == pytest.approx(w[2], abs=1e-9), (g, w)
+    # the awkward classes really are in play: the two empty docs, the
+    # two whitespace runs longer than n, the two short and the two
+    # long exact duplicates each form a pair with Jaccard 1
+    assert {(1, 2), (5, 6), (7, 8), (10, 11)} <= {(a, b) for a, b, *_ in got}
+    con.close()
+
+
 def test_decontaminate_and_repetition_semantics(spark):
     """Planted decontamination + Gopher-repetition cases: only the doc
     sharing an n-gram with the benchmark is flagged (with the right

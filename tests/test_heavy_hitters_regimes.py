@@ -73,3 +73,31 @@ def test_join_regime_plan_is_mapside_before_groupby(keyed):
     # the only shuffle is the candidate groupBy (the fixture's own
     # round-robin repartition is input prep, not the operator's)
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+@pytest.mark.parametrize("mode", ["literal", "join"])
+def test_non_injective_cast_keeps_true_heavy_hitter(spark, mode):
+    """The result key is CAST(value AS STRING), and that cast is not
+    injective: the arrays ["a, b"] and ["a", "b"] both print as
+    "[a, b]". With 40 rows of each, the key "[a, b]" has 80 rows and
+    passes the threshold of 60. The Count-Min filter must bucket on
+    the same string as the exact verify; bucketing the raw arrays
+    splits the key's rows into two counters of 40 and drops it."""
+    rows = [(["a, b"],)] * 40 + [(["a", "b"],)] * 40 + [(["c"],)] * 10
+    df = spark.createDataFrame(rows, "v array<string>")
+    got = {
+        (r["key"], r["n"])
+        for r in heavy_hitters(df, "v", 60, d=4, w=64, mode=mode).collect()
+    }
+    assert got == {("[a, b]", 80)}
+
+
+@pytest.mark.parametrize("dtype,vals", [("bigint", [1, 2]), ("string", ["1", "2"])])
+def test_injective_key_buckets_raw_column(spark, dtype, vals):
+    """Where CAST(value AS STRING) is injective the filter hashes the
+    raw column: the per-row cast to string would only add map cost."""
+    df = spark.createDataFrame([(vals[0],), (vals[1],), (vals[1],)], f"v {dtype}")
+    out = heavy_hitters(df, "v", 2, d=4, w=64, mode="literal")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "xxhash64(0, v#" in plan, plan
+    assert {(r["key"], r["n"]) for r in out.collect()} == {("2", 2)}

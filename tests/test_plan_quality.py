@@ -280,6 +280,42 @@ def test_pack_documents_single_shuffle_one_python(spark):
     assert plan.count("FlatMapGroupsInPandas") == 1
 
 
+def _small_docs(spark):
+    return spark.createDataFrame(
+        [(i, f"document number {i} with some shared text") for i in range(50)],
+        "doc_id long, text string",
+    )
+
+
+def test_simhash_one_vote_aggregate(spark):
+    """simhash64 votes in ONE sum over (doc, bit) rows — not 64 per-bit
+    aggregate columns, whose expression tree costs seconds of driver
+    planning per call."""
+    from rust_s2_spark.operators.dedup import simhash64
+
+    plan = (
+        simhash64(_small_docs(spark), "text", "doc_id")
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("sum(") == 1, plan.count("sum(")
+
+
+def test_dedup_vote_no_shingle_shuffle(spark):
+    """ensemble_dedup_vote intersects per-doc shingle sets in place:
+    no exchange is hash-partitioned on the shingle (the candidate ×
+    shingle join and the (doc, shingle) dropDuplicates are gone)."""
+    from rust_s2_spark.operators.dedup import ensemble_dedup_vote
+
+    plan = _plan(ensemble_dedup_vote(_small_docs(spark), "text", "doc_id"))
+    parts = [
+        line for line in plan.splitlines() if "Exchange hashpartitioning(" in line
+    ]
+    assert parts, plan
+    assert not [line for line in parts if "shingle" in line], parts
+
+
 def test_minhash_bucket_cap_adds_no_python(stored, spark):
     from rust_s2_spark.operators.dedup import minhash_lsh_pairs
 
