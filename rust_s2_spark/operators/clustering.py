@@ -30,6 +30,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.frames import local_frame
 from .covering_join import within_distance_pairs
 from .dedup import connected_components
 
@@ -245,8 +246,9 @@ def suggest_eps(
         .withColumn("__rb", F.row_number().over(w))
     )
     spark = df.sparkSession
-    tdf = spark.createDataFrame(
-        [(q, b, r - c) for q, r, b, c in targets],
+    tdf = local_frame(
+        spark,
+        list(zip(*[(q, b, r - c) for q, r, b, c in targets])),
         "q double, __bin int, __rb int",
     )
     return (

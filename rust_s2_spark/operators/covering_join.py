@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..functions import chord2_expr, s2_biased, xyz_cols
 from ..geometry import Cap, CellUnion, Rect, RegionCoverer
 from ..kernels import cellid as k
+from ..plans.frames import local_frame
 
 DEFAULT_COVERER = RegionCoverer(min_level=0, max_level=30, level_mod=1, max_cells=24)
 
@@ -144,19 +145,21 @@ def region_join(
     Non-cap regions fall back to a per-region predicate chain.
     """
     all_caps = all(isinstance(r, Cap) for r in regions)
-    rows = []
+    cols: list[list] = [[] for _ in range(8 if all_caps else 4)]
     for rid, region in zip(region_ids, regions):
         rr = covering_ranges(region, coverer)
-        for lo, hi, inner in zip(rr.lo, rr.hi, rr.interior):
-            if all_caps:
-                cx, cy, cz = region.center
-                rows.append((rid, lo, hi, inner, cx, cy, cz, region.radius2))
-            else:
-                rows.append((rid, lo, hi, inner))
+        n = len(rr.lo)
+        cols[0] += [rid] * n
+        cols[1] += rr.lo
+        cols[2] += rr.hi
+        cols[3] += rr.interior
+        if all_caps:
+            for col, v in zip(cols[4:], (*region.center, region.radius2)):
+                col += [v] * n
     schema = "region_id long, rlo long, rhi long, rinterior boolean"
     if all_caps:
         schema += ", rcx double, rcy double, rcz double, rr2 double"
-    ranges_df = spark.createDataFrame(rows, schema)
+    ranges_df = local_frame(spark, cols, schema)
 
     j = df.join(
         F.broadcast(ranges_df),
@@ -220,8 +223,6 @@ def region_join_ancestors(
     interior rows skip the exact filter) — right for few large regions.
     """
     all_caps = all(isinstance(r, Cap) for r in regions)
-    rows = []
-    levels: set[int] = set()
     batch_fast = (
         fast
         and all_caps
@@ -238,15 +239,16 @@ def region_join_ancestors(
         cz = np.array([r.center[2] for r in regions])
         r2 = np.array([r.radius2 for r in regions])
         pad, cnt = k.cap_fast_covering_xyz(cx, cy, cz, r2)
-        for m, rid in enumerate(region_ids):
-            ids = pad[m, : cnt[m]]
-            for cid, lvl in zip(ids.view(np.int64), k.level(ids)):
-                levels.add(int(lvl))
-                rows.append(
-                    (rid, int(cid), False, float(cx[m]), float(cy[m]),
-                     float(cz[m]), float(r2[m]))
-                )
+        reg = np.repeat(np.arange(len(regions)), cnt)
+        ids = pad[np.arange(pad.shape[1]) < cnt[:, None]]
+        cols = [
+            np.asarray(region_ids, dtype=np.int64)[reg],
+            ids.view(np.int64),
+            np.zeros(len(ids), dtype=bool),
+            cx[reg], cy[reg], cz[reg], r2[reg],
+        ]
     else:
+        cols = [[] for _ in range(7 if all_caps else 3)]
         for rid, region in zip(region_ids, regions):
             if fast:
                 outer = coverer.fast_covering(region)
@@ -255,20 +257,19 @@ def region_join_ancestors(
                 outer = coverer.covering(region)
                 inner = coverer.interior_covering(region)
                 flags = inner.contains_ids(outer.ids)
-            lvls = k.level(outer.ids)
-            for cid, lvl, flag in zip(outer.ids.view(np.int64), lvls, flags):
-                levels.add(int(lvl))
-                if all_caps:
-                    ccx, ccy, ccz = region.center
-                    rows.append(
-                        (rid, int(cid), bool(flag), ccx, ccy, ccz, region.radius2)
-                    )
-                else:
-                    rows.append((rid, int(cid), bool(flag)))
+            n = len(outer.ids)
+            cols[0] += [rid] * n
+            cols[1] += outer.ids.view(np.int64).tolist()
+            cols[2] += flags.tolist()
+            if all_caps:
+                for col, v in zip(cols[3:], (*region.center, region.radius2)):
+                    col += [v] * n
+    cells = np.asarray(cols[1], dtype=np.int64).view(np.uint64)
+    levels = {int(lv) for lv in k.level(cells)}
     schema = "region_id long, ccell long, rinterior boolean"
     if all_caps:
         schema += ", rcx double, rcy double, rcz double, rr2 double"
-    cov_df = spark.createDataFrame(rows, schema)
+    cov_df = local_frame(spark, cols, schema)
 
     from ..functions import s2_parent
 

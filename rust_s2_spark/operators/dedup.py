@@ -25,6 +25,8 @@ import itertools
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.frames import local_frame
+
 # minhash_lsh_pairs' banding defaults; ensemble_dedup_vote uses the same
 # values, so its candidate set stays the one minhash_lsh_pairs proposes
 _ROWS_PER_BAND = 4
@@ -371,11 +373,12 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _union_find_labels(rows: list) -> list[tuple[int, int]]:
+def _union_find_labels(rows: list) -> tuple[list, list]:
     """Exact driver-side union-find (path halving + union by attaching
-    to the smaller root): returns (v, component) with component = the
-    MINIMUM member id — precisely the large-star/small-star fixed
-    point's labeling, so the two paths are interchangeable row-for-row.
+    to the smaller root): returns the columns (v, component) with
+    component = the MINIMUM member id — precisely the large-star/
+    small-star fixed point's labeling, so the two paths are
+    interchangeable row-for-row.
     """
     parent: dict = {}
 
@@ -395,7 +398,8 @@ def _union_find_labels(rows: list) -> list[tuple[int, int]]:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    return [(v, find(v)) for v in parent]
+    vertices = list(parent)
+    return vertices, [find(v) for v in vertices]
 
 
 def connected_components(
@@ -483,9 +487,7 @@ def connected_components(
         schema = edges.select(
             F.col("a").alias("v"), F.col("a").alias("component")
         ).schema
-        return spark.createDataFrame(
-            labels, schema
-        ).localCheckpoint(eager=True)
+        return local_frame(spark, labels, schema).localCheckpoint(eager=True)
     vertices = (
         edges.select(F.col("a").alias("v"))
         .unionByName(edges.select(F.col("b").alias("v")))

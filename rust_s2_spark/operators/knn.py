@@ -21,6 +21,7 @@ table's cell_id partitioning, so only the (small) candidate side moves.
 from __future__ import annotations
 
 import math
+import weakref
 
 import numpy as np
 import pandas as pd
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions import chord2_expr, s2_parent, xyz_cols
 from ..kernels import cellid as k
 from ..kernels import metric as metrics
+from ..plans.frames import local_frame
 
 
 def _candidate_cells(lat: np.ndarray, lng: np.ndarray, level: int) -> list[np.ndarray]:
@@ -151,65 +153,66 @@ def knn_join(
     persisted: list[DataFrame] = []
     pending = np.arange(len(qids))
     attempt = 0
-    while len(pending) > 0:
-        lvl = max(0, level - 2 * attempt)
-        cand = _candidate_cells(qlat[pending], qlng[pending], lvl)
-        rows = []
-        for i, cells in zip(pending, cand):
-            for c in cells.view(np.int64):
-                rows.append((int(qids[i]), float(qlat[i]), float(qlng[i]), int(c)))
-        cand_df = spark.createDataFrame(
-            rows, "query_id long, qlat double, qlng double, cand_cell long"
-        )
-        qx, qy, qz = xyz_cols("qlat", "qlng")
-        px, py, pz = xyz_cols(lat_col, lng_col)
-        src = _pushdown_candidate_ranges(df, cand, lvl, biased_col)
-        j = src.withColumn("__pcell", s2_parent("cell_id", lvl)).join(
-            F.broadcast(cand_df), F.col("__pcell") == F.col("cand_cell"), "inner"
-        )
-        scored = j.withColumn("dist_chord2", chord2_expr(px, py, pz, qx, qy, qz))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("dist_chord2").asc(), F.col(id_col).asc()
-        )
-        ranked = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= kk)
-            .select("query_id", "rank", id_col, "dist_chord2")
-            .persist()
-        )
-        persisted.append(ranked)
-        # a query is final when it found k results AND the k-th distance
-        # is inside the ring's guaranteed coverage radius
-        safe = _safe_chord2(lvl)
-        is_last = lvl == 0 or attempt >= max_widen
-        if is_last:
-            done_ids = {int(q) for q in qids[pending]}
-        else:
-            stats = ranked.groupBy("query_id").agg(
-                F.count("*").alias("n"), F.max("dist_chord2").alias("dmax")
-            ).collect()  # ≤ |pending| rows — bounded by the driver-side query list
-            done_ids = {
-                int(r["query_id"])
-                for r in stats
-                if r["n"] >= kk and r["dmax"] <= safe
-            }
-        if done_ids:
-            done_df = spark.createDataFrame(
-                [(q,) for q in sorted(done_ids)], "query_id long"
+    try:
+        while len(pending) > 0:
+            lvl = max(0, level - 2 * attempt)
+            cand = _candidate_cells(qlat[pending], qlng[pending], lvl)
+            rep = np.repeat(pending, [len(c) for c in cand])
+            cand_df = local_frame(
+                spark,
+                [qids[rep], qlat[rep], qlng[rep], np.concatenate(cand).view(np.int64)],
+                "query_id long, qlat double, qlng double, cand_cell long",
             )
-            slice_df = ranked.join(F.broadcast(done_df), "query_id", "left_semi")
-            resolved = slice_df if resolved is None else resolved.unionByName(slice_df)
-        pending = pending[[int(q) not in done_ids for q in qids[pending]]]
-        attempt += 1
-    assert resolved is not None
-    out = resolved.select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        id_col,
-        "dist_chord2",
-    ).localCheckpoint(eager=True)  # ≤ |queries|·k rows, frees the caches below
-    for p in persisted:
-        p.unpersist()
+            qx, qy, qz = xyz_cols("qlat", "qlng")
+            px, py, pz = xyz_cols(lat_col, lng_col)
+            src = _pushdown_candidate_ranges(df, cand, lvl, biased_col)
+            j = src.withColumn("__pcell", s2_parent("cell_id", lvl)).join(
+                F.broadcast(cand_df), F.col("__pcell") == F.col("cand_cell"), "inner"
+            )
+            scored = j.withColumn("dist_chord2", chord2_expr(px, py, pz, qx, qy, qz))
+            w = Window.partitionBy("query_id").orderBy(
+                F.col("dist_chord2").asc(), F.col(id_col).asc()
+            )
+            ranked = (
+                scored.withColumn("rank", F.row_number().over(w))
+                .where(F.col("rank") <= kk)
+                .select("query_id", "rank", id_col, "dist_chord2")
+                .persist()
+            )
+            persisted.append(ranked)
+            # a query is final when it found k results AND the k-th distance
+            # is inside the ring's guaranteed coverage radius
+            safe = _safe_chord2(lvl)
+            is_last = lvl == 0 or attempt >= max_widen
+            if is_last:
+                done_ids = {int(q) for q in qids[pending]}
+            else:
+                stats = ranked.groupBy("query_id").agg(
+                    F.count("*").alias("n"), F.max("dist_chord2").alias("dmax")
+                ).collect()  # ≤ |pending| rows: bounded by the driver-side query list
+                done_ids = {
+                    int(r["query_id"])
+                    for r in stats
+                    if r["n"] >= kk and r["dmax"] <= safe
+                }
+            if done_ids:
+                done_df = local_frame(spark, [sorted(done_ids)], "query_id long")
+                slice_df = ranked.join(F.broadcast(done_df), "query_id", "left_semi")
+                resolved = (
+                    slice_df if resolved is None else resolved.unionByName(slice_df)
+                )
+            pending = pending[[int(q) not in done_ids for q in qids[pending]]]
+            attempt += 1
+        assert resolved is not None
+        out = resolved.select(
+            "query_id",
+            F.col("rank").cast("int").alias("rank"),
+            id_col,
+            "dist_chord2",
+        ).localCheckpoint(eager=True)  # ≤ |queries|·k rows, frees the caches below
+    finally:
+        for p in persisted:
+            p.unpersist()
     return out
 
 
@@ -494,6 +497,14 @@ def _attempt_var(
     )
 
 
+# Per-source-frame memos for knn_join_df: the bounded level-7
+# histogram, and the probe-prep UDFs whose closures carry it. Keyed
+# weakly on the DataFrame object (fact frame or injected stats), so an
+# entry lives exactly as long as the frame it was computed from.
+_L7_HIST: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_PREP_UDFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def knn_join_df(
     df: DataFrame,
     queries: DataFrame,
@@ -583,12 +594,12 @@ def knn_join_df(
     # repeated-workload memo (streaming batches, repeat calls with one
     # injected stats frame — or repeat calls against one fact frame):
     # the bounded histogram is collected ONCE per source DataFrame
-    # object and memoized on it. DataFrames are immutable plans, so
-    # the capture only goes stale if the underlying FILES are
-    # rewritten under a live frame — and even then start levels are
-    # pure performance, never correctness.
+    # object (see _L7_HIST). DataFrames are immutable plans, so the
+    # capture only goes stale if the underlying FILES are rewritten
+    # under a live frame — and even then start levels are pure
+    # performance, never correctness.
     src = stats if stats is not None else df
-    cached = getattr(src, "_s2_l7_hist", None)
+    cached = _L7_HIST.get(src)
     if cached is not None:
         cells7, n7 = cached
     elif stats is None:
@@ -601,7 +612,7 @@ def knn_join_df(
             np.uint64
         )
         n7 = np.array([r["count"] for r in hist_rows], dtype=np.int64)
-        df._s2_l7_hist = (cells7, n7)
+        _L7_HIST[df] = (cells7, n7)
     else:
         hist_rows = (
             stats.where(F.col("level") == F.lit(L_DET))
@@ -612,7 +623,7 @@ def knn_join_df(
             np.uint64
         )
         n7 = np.array([r["count"] for r in hist_rows], dtype=np.int64)
-        stats._s2_l7_hist = (cells7, n7)
+        _L7_HIST[stats] = (cells7, n7)
     n_tot = int(n7.sum()) if len(n7) else 0
     if stats is not None and n_tot == 0:
         # empty stats — including an entirely empty frame — can never
@@ -651,10 +662,7 @@ def knn_join_df(
     # the prep UDF closure carries the histogram (~MBs at full level-7
     # occupancy) — reuse the constructed UDF across repeat calls with
     # the same source frame and k instead of re-pickling per call
-    prep_cache = getattr(src, "_s2_prep_udfs", None)
-    if prep_cache is None:
-        prep_cache = {}
-        src._s2_prep_udfs = prep_cache
+    prep_cache = _PREP_UDFS.setdefault(src, {})
     prep = prep_cache.get(target)
     if prep is None:
         prep = _probe_prep_udf(cells7, n7, target)
@@ -680,124 +688,126 @@ def knn_join_df(
     # fewer driver action per call; later rounds know it from the
     # round counts
     active: list[int] | None = None
-    while True:
-        cand = pending.select(
-            query_id_col, qlat_col, qlng_col, "__jl",
-            F.explode("__ring").alias("__tc"),
-        )
-        lv_arg = (
-            pending.select(F.col("__jl").alias("__lvl")).distinct()
-            if active is None
-            else active
-        )
-        ranked = _attempt_var(
-            df, cand, kk, lv_arg,
-            lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col,
-        ).persist()
-        persisted.append(ranked)
-        if (
-            active is not None and all(lv == 0 for lv in active)
-        ) or attempt >= max_widen:
-            slices.append(ranked.select(*sel))
-            break
-        slices.append(ranked.where(F.col("__ok")).select(*sel))
-        # kd-DERIVED widening: a probe that found >= k rows but whose
-        # k-th distance exceeds the ring's coverage retries at the
-        # finest level whose one-ring contract covers that distance —
-        # the new ring provably holds every point within kd, and the
-        # new k-th can only shrink, so that retry RESOLVES by
-        # construction (one extra round, never a widening walk).
-        # Probes with < k rows are in genuinely sparse territory and
-        # jump 4 levels (256× ring area) instead. ONE aggregation
-        # serves both the resolved-id set and the kd lookup.
-        from .covering_join import radius_level_expr
-
-        pstats = ranked.groupBy(query_id_col).agg(
-            F.max("__ok").alias("__pok"),
-            F.max("__n").alias("__pn"),
-            F.max("__kd").alias("__pkd"),
-        )
-        nxt = (
-            pending.where(F.col("__jl") > 0)
-            .join(pstats, query_id_col, "left")
-            .where(~F.coalesce(F.col("__pok"), F.lit(False)))
-            .withColumn(
-                "__jl",
-                F.when(
-                    F.col("__pn") >= kk,
-                    F.greatest(
-                        F.lit(0),
-                        F.least(
-                            F.col("__jl") - 1,
-                            radius_level_expr(F.col("__pkd")),
-                        ),
-                    ),
-                ).otherwise(F.greatest(F.lit(0), F.col("__jl") - F.lit(4))),
-            )
-            # a kd-derived retry RESOLVES by construction (the ring
-            # provably covers the previous k-th distance) — carry the
-            # flag so the next round can skip its resolve-check job
-            .withColumn(
-                "__gtd",
-                (F.coalesce(F.col("__pn"), F.lit(0)) >= kk)
-                & F.col("__pkd").isNotNull(),
-            )
-            .drop("__pok", "__pn", "__pkd")
-        ).persist()
-        persisted.append(nxt)
-        # THE round action: ≤ 31 rows to the driver (level histogram of
-        # the unresolved tail); materializes this round's pipeline
-        counts = nxt.groupBy("__jl").agg(
-            F.count("*").alias("count"),
-            F.min(F.col("__gtd").cast("int")).alias("g"),
-        ).collect()
-        if not counts:
-            break
-        n_pend = sum(int(r["count"]) for r in counts)
-        active = sorted(int(r["__jl"]) for r in counts)
-        all_gtd = all(int(r["g"]) == 1 for r in counts)
-        attempt += 1
-        if n_pend <= _TAIL_COLLECT_MAX:
-            rows = nxt.select(
-                query_id_col, qlat_col, qlng_col, "__jl", "__gtd"
-            ).collect()
-            slices.extend(
-                _tail_literal_rounds(
-                    spark, df, rows, kk, attempt, max_widen, persisted,
-                    lat_col, lng_col, id_col,
-                    query_id_col, qlat_col, qlng_col,
-                    queries.schema[query_id_col].dataType,
-                    cells7, n7,
-                )
-            )
-            break
-        pending = nxt.drop("__ring").withColumn(
-            "__ring", _ring_var_udf(F.col(qlat_col), F.col(qlng_col), F.col("__jl"))
-        )
-        if all_gtd:
-            # every remaining probe retries at its kd-derived level —
-            # the round is final by construction: emit and stop
+    try:
+        while True:
             cand = pending.select(
                 query_id_col, qlat_col, qlng_col, "__jl",
                 F.explode("__ring").alias("__tc"),
             )
-            slices.append(
-                _attempt_var(
-                    df, cand, kk, active,
-                    lat_col, lng_col, id_col,
-                    query_id_col, qlat_col, qlng_col,
-                ).select(*sel)
+            lv_arg = (
+                pending.select(F.col("__jl").alias("__lvl")).distinct()
+                if active is None
+                else active
             )
-            break
-    out = slices[0] if len(slices) == 1 else _union_all(slices)
-    out = out.select(
-        query_id_col,
-        F.col("rank").cast("int").alias("rank"),
-        id_col,
-        "dist_chord2",
-    ).localCheckpoint(eager=True)  # ≤ |probes|·k rows; frees the caches below
-    for p in persisted:
-        p.unpersist()
+            ranked = _attempt_var(
+                df, cand, kk, lv_arg,
+                lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col,
+            ).persist()
+            persisted.append(ranked)
+            if (
+                active is not None and all(lv == 0 for lv in active)
+            ) or attempt >= max_widen:
+                slices.append(ranked.select(*sel))
+                break
+            slices.append(ranked.where(F.col("__ok")).select(*sel))
+            # kd-DERIVED widening: a probe that found >= k rows but whose
+            # k-th distance exceeds the ring's coverage retries at the
+            # finest level whose one-ring contract covers that distance —
+            # the new ring provably holds every point within kd, and the
+            # new k-th can only shrink, so that retry RESOLVES by
+            # construction (one extra round, never a widening walk).
+            # Probes with < k rows are in genuinely sparse territory and
+            # jump 4 levels (256× ring area) instead. ONE aggregation
+            # serves both the resolved-id set and the kd lookup.
+            from .covering_join import radius_level_expr
+
+            pstats = ranked.groupBy(query_id_col).agg(
+                F.max("__ok").alias("__pok"),
+                F.max("__n").alias("__pn"),
+                F.max("__kd").alias("__pkd"),
+            )
+            nxt = (
+                pending.where(F.col("__jl") > 0)
+                .join(pstats, query_id_col, "left")
+                .where(~F.coalesce(F.col("__pok"), F.lit(False)))
+                .withColumn(
+                    "__jl",
+                    F.when(
+                        F.col("__pn") >= kk,
+                        F.greatest(
+                            F.lit(0),
+                            F.least(
+                                F.col("__jl") - 1,
+                                radius_level_expr(F.col("__pkd")),
+                            ),
+                        ),
+                    ).otherwise(F.greatest(F.lit(0), F.col("__jl") - F.lit(4))),
+                )
+                # a kd-derived retry RESOLVES by construction (the ring
+                # provably covers the previous k-th distance) — carry the
+                # flag so the next round can skip its resolve-check job
+                .withColumn(
+                    "__gtd",
+                    (F.coalesce(F.col("__pn"), F.lit(0)) >= kk)
+                    & F.col("__pkd").isNotNull(),
+                )
+                .drop("__pok", "__pn", "__pkd")
+            ).persist()
+            persisted.append(nxt)
+            # THE round action: ≤ 31 rows to the driver (level histogram of
+            # the unresolved tail); materializes this round's pipeline
+            counts = nxt.groupBy("__jl").agg(
+                F.count("*").alias("count"),
+                F.min(F.col("__gtd").cast("int")).alias("g"),
+            ).collect()
+            if not counts:
+                break
+            n_pend = sum(int(r["count"]) for r in counts)
+            active = sorted(int(r["__jl"]) for r in counts)
+            all_gtd = all(int(r["g"]) == 1 for r in counts)
+            attempt += 1
+            if n_pend <= _TAIL_COLLECT_MAX:
+                rows = nxt.select(
+                    query_id_col, qlat_col, qlng_col, "__jl", "__gtd"
+                ).collect()
+                slices.extend(
+                    _tail_literal_rounds(
+                        spark, df, rows, kk, attempt, max_widen, persisted,
+                        lat_col, lng_col, id_col,
+                        query_id_col, qlat_col, qlng_col,
+                        queries.schema[query_id_col].dataType,
+                        cells7, n7,
+                    )
+                )
+                break
+            pending = nxt.drop("__ring").withColumn(
+                "__ring", _ring_var_udf(F.col(qlat_col), F.col(qlng_col), F.col("__jl"))
+            )
+            if all_gtd:
+                # every remaining probe retries at its kd-derived level —
+                # the round is final by construction: emit and stop
+                cand = pending.select(
+                    query_id_col, qlat_col, qlng_col, "__jl",
+                    F.explode("__ring").alias("__tc"),
+                )
+                slices.append(
+                    _attempt_var(
+                        df, cand, kk, active,
+                        lat_col, lng_col, id_col,
+                        query_id_col, qlat_col, qlng_col,
+                    ).select(*sel)
+                )
+                break
+        out = slices[0] if len(slices) == 1 else _union_all(slices)
+        out = out.select(
+            query_id_col,
+            F.col("rank").cast("int").alias("rank"),
+            id_col,
+            "dist_chord2",
+        ).localCheckpoint(eager=True)  # ≤ |probes|·k rows; frees the caches below
+    finally:
+        for p in persisted:
+            p.unpersist()
     return out
 
 
@@ -908,12 +918,11 @@ def _tail_literal_rounds(
     while len(pend) > 0:
         lv = jl[pend]
         rings = _ring_cells_np(qlat[pend], qlng[pend], lv)
-        cand_rows = [
-            (qids[i], float(qlat[i]), float(qlng[i]), int(lv_i), int(c))
-            for i, lv_i, ring in zip(pend, lv, rings)
-            for c in ring
+        rep = np.repeat(pend, [len(r) for r in rings])
+        cols = [
+            [qids[i] for i in rep], qlat[rep], qlng[rep], jl[rep], np.concatenate(rings)
         ]
-        cand_df = F.broadcast(spark.createDataFrame(cand_rows, cand_schema))
+        cand_df = F.broadcast(local_frame(spark, cols, cand_schema))
         active = sorted(int(x) for x in np.unique(lv))
         src = df
         if min(active) > 0 and "cell_id_biased" in df.columns:

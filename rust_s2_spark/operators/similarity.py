@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans.frames import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -746,9 +748,10 @@ def ivf_pq_topk(
                 for r in q_head
             ]
         )
-        qdf = df.sparkSession.createDataFrame(
-            [(i + 1, r[query_id_col]) for i, r in enumerate(q_head)],
-            ["__qpos", query_id_col],
+        qdf = local_frame(
+            df.sparkSession,
+            [range(1, len(q_head) + 1), [r[query_id_col] for r in q_head]],
+            queries.select(F.lit(0).cast("long").alias("__qpos"), query_id_col).schema,
         )
         qprobe = (
             ivf_probe(qdf.join(queries, query_id_col), centroids, nprobe, vec_col, "__cids")
@@ -829,9 +832,10 @@ def pq_topk(
                 for r in q_head
             ]
         )
-        qdf = df.sparkSession.createDataFrame(
-            [(i + 1, r[query_id_col]) for i, r in enumerate(q_head)],
-            ["__qpos", query_id_col],
+        qdf = local_frame(
+            df.sparkSession,
+            [range(1, len(q_head) + 1), [r[query_id_col] for r in q_head]],
+            queries.select(F.lit(0).cast("long").alias("__qpos"), query_id_col).schema,
         )
         tbl = F.element_at(tables, F.col("__qpos").cast("int"))
     else:

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, IntegralType, StringType
 
+from ..plans.frames import local_frame
+
 
 def _hll_alpha(m: int) -> float:
     if m >= 128:
@@ -328,8 +330,9 @@ def heavy_hitters(
             .select("i", "b")
             .collect()
         )
-        heavy = df.sparkSession.createDataFrame(
-            [(int(r["i"]), int(r["b"])) for r in rows],
+        heavy = local_frame(
+            df.sparkSession,
+            [[r["i"] for r in rows], [r["b"] for r in rows]],
             "i INT, b BIGINT",
         )
         cand = df.select(F.col(value_col)).where(

@@ -21,6 +21,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from ..geometry import RegionCoverer
 from ..kernels import cellid as k
+from ..plans.frames import local_frame
 
 
 def image_tiles(
@@ -59,8 +60,6 @@ def raster_vector_assign(
         min_level=level, max_level=level, level_mod=1, max_cells=10_000
     )
     cov = rc.covering(region)
-    tiles = spark.createDataFrame(
-        [(int(c),) for c in cov.ids.view(np.int64)], "tile_cell long"
-    )
+    tiles = local_frame(spark, [cov.ids.view(np.int64)], "tile_cell long")
     tiled = image_tiles(images, level)
     return tiled.join(F.broadcast(tiles), "tile_cell", "inner")

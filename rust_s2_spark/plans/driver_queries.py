@@ -35,6 +35,7 @@ from ..geometry import Cap, RegionCoverer
 from ..kernels import cellid as k
 from ..operators.covering_join import cap_exact_predicate, region_filter
 from ..sources.images import images_from_orders, oracle_images_sql, _derivation_sql
+from .frames import local_frame
 from .oracle_sql import hilbert_oracle_query, trig_free_xyz_sql
 
 U64 = np.uint64
@@ -114,9 +115,7 @@ def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_golden_latlng(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame(
-        [(lat, lng) for _, lat, lng in LATLNG_GOLDEN], "lat double, lng double"
-    )
+    df = local_frame(spark, list(zip(*LATLNG_GOLDEN))[1:], "lat double, lng double")
     return df.select(
         "lat",
         "lng",
@@ -139,7 +138,7 @@ def o_golden_latlng() -> str:
 
 
 def q_golden_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame([(t,) for t, _ in TOKEN_GOLDEN], "token string")
+    df = local_frame(spark, [[t for t, _ in TOKEN_GOLDEN]], "token string")
     out = df.select("token", s2_cell_from_token("token").alias("cell_id"))
     return out.withColumn("token_back", s2_cell_to_token("cell_id"))
 
@@ -153,14 +152,14 @@ def o_golden_tokens() -> str:
 
 
 def q_golden_parent_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ids = [(_signed(cid),) for cid, _, _ in LATLNG_GOLDEN] + [
-        (_signed(c),) for c in PITTSBURG
+    ids = [_signed(cid) for cid, _, _ in LATLNG_GOLDEN] + [
+        _signed(c) for c in PITTSBURG
     ]
     # explode a literal array instead of crossJoin-ing two local
     # frames: CartesianProduct over python-parallelized RDDs
     # re-evaluates the right side per partition PAIR (16x16 python
     # worker spawns, ~8 s for 114 output rows)
-    df = spark.createDataFrame(ids, "cell_id long")
+    df = local_frame(spark, [ids], "cell_id long")
     j = df.select(
         "cell_id",
         F.explode(F.array(*[F.lit(l) for l in PARENT_LEVELS])).alias("lvl"),
@@ -212,7 +211,7 @@ def q_golden_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         for a in PITTSBURG
         for b in PITTSBURG
     ]
-    df = spark.createDataFrame(rows, "a long, b long")
+    df = local_frame(spark, list(zip(*rows)), "a long, b long")
     a_rmin, a_rmax = s2_range_min("a"), s2_range_max("a")
     b_rmin, b_rmax = s2_range_min("b"), s2_range_max("b")
     bias = F.lit(MIN_LONG)
@@ -871,7 +870,7 @@ def q_cell_avg_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Average cell area per level (metric table, native SQL)."""
     from ..kernels import metric as metrics
 
-    lv = spark.createDataFrame([(l,) for l in range(0, 31, 3)], "lvl int")
+    lv = local_frame(spark, [range(0, 31, 3)], "lvl int")
     return lv.select(
         "lvl",
         (F.lit(metrics.AVG_AREA.deriv) * F.pow(F.lit(2.0), F.lit(-2) * F.col("lvl")))
@@ -1256,7 +1255,8 @@ def q_covering_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured sweep put 96-192 partitions ahead of both one-task-per-
     # row (459 task overheads) and coarse chunks (heavy-case collisions)
     n_parts = min(len(params), max(96, 2 * spark.sparkContext.defaultParallelism))
-    cdf = spark.createDataFrame(params, "js string, kind string").repartition(n_parts)
+    cdf = local_frame(spark, list(zip(*params)), "js string, kind string")
+    cdf = cdf.repartition(n_parts)
 
     def gen(batches):
         from ..geometry import RegionCoverer as RC
@@ -1309,7 +1309,7 @@ def q_tiling_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiles = k.cellunion_from_range(d["begin"], d["end"])
         for i, t in enumerate(k.to_token(tiles)):
             rows.append((d["case"], i, str(t)))
-    return spark.createDataFrame(rows, "case int, ord int, token string")
+    return local_frame(spark, list(zip(*rows)), "case int, ord int, token string")
 
 
 def o_tiling_range() -> str:
@@ -1334,8 +1334,9 @@ def q_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         + [("vertex", d["id"], d["level"]) for d in _golden_records("vertex_neighbors")]
         + [("all", d["id"], d["level"]) for d in _golden_records("all_neighbors")]
     )
-    src = spark.createDataFrame(
-        [(kind, _signed(i), lvl) for kind, i, lvl in inputs],
+    src = local_frame(
+        spark,
+        list(zip(*[(kind, _signed(i), lvl) for kind, i, lvl in inputs])),
         "kind string, id long, level int",
     ).repartition(4)
 
@@ -1397,7 +1398,9 @@ def q_cellunion_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             for i, t in enumerate(cu.tokens()):
                 rows.append((d["case"], op, i, str(t)))
-    return spark.createDataFrame(rows, "case int, op string, ord int, token string")
+    return local_frame(
+        spark, list(zip(*rows)), "case int, op string, ord int, token string"
+    )
 
 
 def o_cellunion_algebra() -> str:
@@ -1424,8 +1427,8 @@ def q_cell_area_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex = float(k.cell_area_exact(arr)[0])
         av = float(k.cell_area_average(arr)[0])
         rows.append((_signed(d["id"]), round(math.log10(ex), 6), av * 1e18))
-    return spark.createDataFrame(
-        rows, "id long, log10_exact double, avg_x18 double"
+    return local_frame(
+        spark, list(zip(*rows)), "id long, log10_exact double, avg_x18 double"
     )
 
 
@@ -1489,8 +1492,9 @@ def q_region_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(reg.intersects_cell(cell)),
             )
         )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark,
+        list(zip(*rows)),
         "region string, ridx int, cell long, contains_cell boolean, intersects_cell boolean",
     )
 
@@ -1645,9 +1649,7 @@ def q_raster_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_level=RASTER_LEVEL, max_level=RASTER_LEVEL, level_mod=1, max_cells=10_000
     )
     cov = rc.covering(cap)
-    tiles = spark.createDataFrame(
-        [(int(c),) for c in cov.ids.view(np.int64)], "tile_cell long"
-    )
+    tiles = local_frame(spark, [cov.ids.view(np.int64)], "tile_cell long")
     spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView("orders")
     pts = spark.sql(trig_free_xyz_sql())
     enc = pts.select("key_id", s2_cell_from_xyz("x", "y", "z").alias("cell_id"))
@@ -5292,7 +5294,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merges, _ = train_bpe_merges(_docs(spark, sf_dir), "text", BPE_N_MERGES)
     rows = [(i + 1, a, b) for i, (a, b) in enumerate(merges)]
-    return spark.createDataFrame(rows, "rank int, a string, b string")
+    return local_frame(spark, list(zip(*rows)), "rank int, a string, b string")
 
 
 def o_bpe_train() -> str:

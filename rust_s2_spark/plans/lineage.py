@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import s2_biased, s2_parent
+from .frames import local_frame
 
 LINEAGE_SCHEMA = (
     "step string, bucket long, n_rows long, n_bytes long, "
@@ -107,9 +108,7 @@ def write_with_lineage(
     df = df.withColumn("bucket", s2_parent("cell_id", bucket_level))
     done = completed_buckets(spark, base, step)
     if done:
-        done_df = spark.createDataFrame(
-            [(int(b),) for b in sorted(done)], "bucket long"
-        )
+        done_df = local_frame(spark, [sorted(done)], "bucket long")
         df = df.join(F.broadcast(done_df), "bucket", "left_anti")
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -124,13 +123,7 @@ def write_with_lineage(
     # stats from the files just written — columnar scan, no recompute
     out = read_output(spark, base)
     if done:
-        out = out.join(
-            F.broadcast(
-                spark.createDataFrame([(int(b),) for b in sorted(done)], "bucket long")
-            ),
-            "bucket",
-            "left_anti",
-        )
+        out = out.join(F.broadcast(done_df), "bucket", "left_anti")
     stats = (
         out.groupBy("bucket")
         .agg(
@@ -156,9 +149,8 @@ def write_with_lineage(
         for r in stats
     ]
     if rows:
-        spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("append").parquet(
-            _lineage_path(base)
-        )
+        lineage = local_frame(spark, list(zip(*rows)), LINEAGE_SCHEMA)
+        lineage.write.mode("append").parquet(_lineage_path(base))
     if stats_levels is not None:
         from .stats import write_cell_stats
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import s2_parent
 from ..kernels import cellid as k
+from .frames import local_frame
 
 
 def hot_cells(
@@ -147,9 +148,8 @@ def adaptive_split(
             break
         lo = k.bias_u64(k.range_min(cells))
         hi = k.bias_u64(k.range_max(cells))
-        ranges = spark.createDataFrame(
-            [(int(c), int(a), int(b)) for c, a, b in zip(cells.view(np.int64), lo, hi)],
-            "cell long, lo long, hi long",
+        ranges = local_frame(
+            spark, [cells.view(np.int64), lo, hi], "cell long, lo long, hi long"
         )
         counts = {
             r["cell"]: r["n"]

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import s2_biased, s2_cell_from_latlng, s2_parent
+from ..plans.frames import local_frame
 
 
 def assign_cells(
@@ -361,8 +362,10 @@ def streaming_knn(
     # aggregation) inside EVERY micro-batch's knn_join_df — exactly
     # the per-batch cost this parameter exists to eliminate. The
     # result is bounded (≤ Σ 6·4^L rows), so collect + rebuild.
-    stats = spark.createDataFrame(
-        [(int(r["level"]), int(r["cell"]), int(r["n"])) for r in stats.collect()],
+    rows = stats.collect()
+    stats = local_frame(
+        spark,
+        [[r[c] for r in rows] for c in ("level", "cell", "n")],
         "level int, cell long, n long",
     )
 

@@ -152,3 +152,59 @@ def test_adversarial_geometry_and_k_overflow(spark):
         assert got.equals(want), f"k={kk}\n{got}\n{want}"
         per = got.groupby("query_id").size()
         assert (per == min(kk, len(facts_rows))).all()
+
+
+class _TailBoom(RuntimeError):
+    pass
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def test_failed_call_releases_persisted_frames(spark, images, probes, monkeypatch):
+    """A knn_join_df call that raises mid-widening (here: in the
+    driver-literal tail, after round 1 has materialized its persisted
+    probe and rank frames) must leave no persisted RDD behind."""
+    from rust_s2_spark.operators import knn
+
+    def boom(*args, **kwargs):
+        raise _TailBoom()
+
+    monkeypatch.setattr(knn, "_tail_literal_rounds", boom)
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(_TailBoom):  # the tail is reached: round 1 ran
+        knn_join_df(images, probes, 3, radius_guess_deg=2.0).count()
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"persisted RDDs left after the failed call: {leaked}"
+
+
+def test_histogram_memo_reused_off_the_frame(images, probes, monkeypatch):
+    """The level-7 histogram and the probe-prep UDF are memoized per
+    source frame in module-level weak maps: a repeat call reuses both,
+    no attribute is stored on the DataFrame, and the entries go away
+    with the frame."""
+    import gc
+
+    from rust_s2_spark.operators import knn
+
+    facts = images.select("*")  # a frame object no other test holds
+    probe_head = probes.limit(20)
+    first = knn_join_df(facts, probe_head, 3).collect()
+    hist = knn._L7_HIST[facts]
+    prep = knn._PREP_UDFS[facts][8 * 3]
+
+    def no_rebuild(*args, **kwargs):
+        raise AssertionError("repeat call rebuilt the probe-prep UDF")
+
+    monkeypatch.setattr(knn, "_probe_prep_udf", no_rebuild)
+    again = knn_join_df(facts, probe_head, 3).collect()
+    assert sorted(again) == sorted(first)
+    assert knn._L7_HIST[facts] is hist
+    assert knn._PREP_UDFS[facts][8 * 3] is prep
+    assert not [a for a in vars(facts) if a.startswith("_s2_")]
+
+    n_memo = len(knn._L7_HIST)
+    del facts
+    gc.collect()
+    assert len(knn._L7_HIST) == n_memo - 1

@@ -33,6 +33,14 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_literal_side_is_local(plan: str) -> None:
+    """The driver-built covering table must be an Arrow LocalRelation:
+    a ``Scan ExistingRDD`` is a pickled Python RDD, and every query
+    reading it starts Python-worker tasks just to unpickle literals."""
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
 def test_region_filter_pushes_ranges(stored):
     cap = Cap.from_latlng_degrees(40.7128, -74.0060, 3.0)
     plan = _plan(region_filter(stored, cap))
@@ -63,6 +71,7 @@ def test_region_join_broadcasts_ranges(stored, spark):
     plan = _plan(region_join(spark, stored, caps, [0]))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan  # fact table must not shuffle
+    _assert_literal_side_is_local(plan)
 
 
 def test_native_keys_stay_in_codegen(stored):
@@ -151,6 +160,7 @@ def test_region_join_ancestors_is_equi_join(stored, spark):
     assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
     # ancestor explode is native (Generate over bit arithmetic), no Python
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    _assert_literal_side_is_local(plan)
 
 
 def test_region_join_ancestors_matches_range_join(stored, spark):
@@ -612,6 +622,7 @@ def test_region_anti_join_is_left_anti_equi_join(stored, spark):
     assert "LeftAnti" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+    _assert_literal_side_is_local(plan)
 
 
 def test_region_anti_filter_single_scan_no_join(stored):
