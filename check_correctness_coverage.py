@@ -41,9 +41,10 @@ TWIN_COVERED_BY = {
     # test_within_distance_df.py pins the two orchestrations produce
     # the identical pair set in the self configuration
     "within_distance_df": "within_distance",
-    # variable-radius form of the same ring+chord machinery; per-branch
-    # behavior identical to within_distance_join_df at that level,
-    # brute-force equality across mixed levels pinned in pytest
+    # variable-radius form on the same ring-join core (one ring UDF
+    # with a per-row level, one equi-join, same chord² gate as
+    # within_distance_join_df); brute-force equality across mixed
+    # levels pinned in pytest
     "within_distance_var": "within_distance",
     # the identical operator lifted stateless onto a probe stream (the
     # wrapper delegates to within_distance_join_df verbatim); its own

@@ -824,7 +824,8 @@ def cap_fast_covering_xyz(x, y, z, radius2):
 
 
 def all_neighbors(ids: np.ndarray, lvl) -> list[np.ndarray]:
-    """Per-row array of all neighbors (including diagonal) at lvl >= level."""
+    """Per-row array of all neighbors (including diagonal) at lvl >= level,
+    ascending and duplicate-free."""
     lvl = int(lvl)
     f, i, j, _ = to_face_ij_orientation(ids)
     size = size_ij(level(ids))
@@ -866,7 +867,16 @@ def all_neighbors(ids: np.ndarray, lvl) -> list[np.ndarray]:
 
     mat = parent(np.stack(cols, axis=1), lvl)
     vmat = np.stack(valid, axis=1)
-    return [np.unique(mat[r][vmat[r]]) for r in range(len(ids))]
+    # per-row sorted unique of the valid entries without a per-row
+    # np.unique: invalid slots and repeats of the previous sorted value
+    # become 0 (no cell id is 0), a second sort moves them to the front,
+    # and each row is the tail after them
+    srt = np.sort(np.where(vmat, mat, np.uint64(0)), axis=1)
+    rep = np.zeros_like(vmat)
+    rep[:, 1:] = srt[:, 1:] == srt[:, :-1]
+    srt = np.sort(np.where(rep, np.uint64(0), srt), axis=1)
+    skip = np.count_nonzero(srt == 0, axis=1)
+    return [srt[r, s:] for r, s in enumerate(skip)]
 
 
 # ---------------------------------------------------------------------------

@@ -14,19 +14,34 @@ the *biased* long column, then either
 
 At 100 TB both shapes avoid any shuffle of the fact table: the filter
 is scan-local, and the ranges table broadcasts.
+
+The distance operators share ONE ring-join core (``_ring_join``): at
+the finest level L whose min cell width covers the radius, a probe's
+own level-L cell plus its ``all_neighbors`` ring (the six faces at
+L = 0) holds every qualifying point. One ring definition
+(``_ring_cells_np``, executor-side through the single ``_ring_udf``
+stage, level constant or per row — no level-0 branch) feeds one
+equi-join of the ring cells against the fact side's ancestors and one
+chord² score: ``within_distance_pairs`` (self-join, a < b),
+``within_distance_join_df`` (constant level), the variable-radius
+``within_distance_join_df_var`` (per-row level) and kNN's widening
+attempts (operators/knn.py) are thin callers.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import chord2_expr, s2_biased, xyz_cols
-from ..geometry import Cap, CellUnion, Rect, RegionCoverer
+from ..functions import chord2_expr, s2_parent, xyz_cols
+from ..geometry import Cap, Rect, RegionCoverer
 from ..kernels import cellid as k
+from ..kernels import metric as metrics
 from ..plans.frames import local_frame
 
 DEFAULT_COVERER = RegionCoverer(min_level=0, max_level=30, level_mod=1, max_cells=24)
@@ -270,9 +285,6 @@ def region_join_ancestors(
     if all_caps:
         schema += ", rcx double, rcy double, rcz double, rr2 double"
     cov_df = local_frame(spark, cols, schema)
-
-    from ..functions import s2_parent
-
     anc = F.explode(
         F.array(*[s2_parent(cell_col, lv) for lv in sorted(levels)])
     ).alias("__anc")
@@ -297,6 +309,109 @@ def region_join_ancestors(
     return out.drop("__anc", "ccell", "rinterior")
 
 
+def _ring_cells_np(lat, lng, lvls) -> list[np.ndarray]:
+    """Per-row candidate ring at a per-row (or one scalar) level: the
+    own level-L cell, then its ``all_neighbors`` ring (cellid.rs) — the
+    six face cells at level 0, where the 3×3 ring only reaches 5 of the
+    6 faces. numpy in, int64 arrays out. Each ring is duplicate-free
+    without a per-row unique pass (``all_neighbors`` dedups and never
+    returns the own cell), which kNN's exact ring row sums rely on.
+
+    The only ring definition in the package: the executor-side
+    ``_ring_udf`` and kNN's driver-side literal rounds both call it, so
+    the two paths cannot drift."""
+    leafs = k.cell_from_latlng(
+        np.asarray(lat, dtype=np.float64), np.asarray(lng, dtype=np.float64)
+    )
+    lvls = np.broadcast_to(np.asarray(lvls, dtype=np.int64), leafs.shape)
+    out: list[np.ndarray] = [None] * len(leafs)  # type: ignore[list-item]
+    faces = k.from_face(np.arange(6, dtype=np.uint64)).view(np.int64)
+    for lv in np.unique(lvls):
+        idx = np.nonzero(lvls == lv)[0]
+        if lv <= 0:
+            for i in idx:
+                out[i] = faces
+        else:
+            p = k.parent(leafs[idx], int(lv))
+            rings = k.all_neighbors(p, int(lv))
+            pv = p.view(np.int64)
+            for n, i in enumerate(idx):
+                out[i] = np.concatenate([pv[n : n + 1], rings[n].view(np.int64)])
+    return out
+
+
+def _ring_udf(lat_col: str, lng_col: str, level: int | Column) -> Column:
+    """pandas UDF (lat, lng, level) → array<long>: ``_ring_cells_np`` on
+    the executors, ONE Python crossing per probe batch. ``level`` is a
+    constant or a per-row column."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, LongType
+
+    @pandas_udf(ArrayType(LongType()))
+    def _ring(lat: pd.Series, lng: pd.Series, lv: pd.Series) -> pd.Series:
+        return pd.Series(
+            _ring_cells_np(
+                lat.to_numpy(np.float64),
+                lng.to_numpy(np.float64),
+                lv.to_numpy(np.int64),
+            )
+        )
+
+    lv = F.lit(level) if isinstance(level, int) else level
+    return _ring(F.col(lat_col), F.col(lng_col), lv)
+
+
+def _ring_join(
+    facts: DataFrame,
+    cand: DataFrame,
+    active: "int | list[int] | DataFrame",
+    id_col: str,
+    lat_col: str,
+    lng_col: str,
+    cell_col: str,
+    qlat_col: str,
+    qlng_col: str,
+) -> DataFrame:
+    """The ring-join core behind the within-distance family and kNN.
+
+    The guarantee (the paper's ring contract): at the finest level L
+    whose min cell width covers the radius, the probe's own level-L
+    cell plus its ``all_neighbors`` ring holds every qualifying point.
+    ``cand`` carries probe rows already exploded to those ring cells as
+    ``__tc``, each probe at its own level. The fact side is scanned ONCE
+    and explodes to ``s2_parent(cell_col, L)`` for every L in
+    ``active`` — one int, a list, or a lazy one-column (``__lvl``)
+    level frame broadcast against it, so the driver never collects the
+    set. A cell id encodes its level, so ONE equi-join column can never
+    match across levels; a fact row has one ancestor per level and ring
+    cells are distinct, so a (probe, fact) pair matches at most once per
+    probe level and no dedup pass exists.
+
+    Returns the fact columns (id, lat, lng, ``__pc``), the ``cand``
+    columns and ``dist_chord2`` (fact to probe, native SQL)."""
+    if isinstance(active, DataFrame):
+        facts = facts.crossJoin(F.broadcast(active))
+        pcell = s2_parent(cell_col, F.col("__lvl"))
+    elif isinstance(active, int) or len(active) == 1:
+        pcell = s2_parent(cell_col, active if isinstance(active, int) else active[0])
+    else:
+        pcell = F.explode(F.array(*[s2_parent(cell_col, lv) for lv in active]))
+    f = facts.select(id_col, lat_col, lng_col, pcell.alias("__pc"))
+    j = f.join(cand, F.col("__pc") == F.col("__tc"), "inner")
+    px, py, pz = xyz_cols(lat_col, lng_col)
+    qx, qy, qz = xyz_cols(qlat_col, qlng_col)
+    return j.withColumn("dist_chord2", chord2_expr(px, py, pz, qx, qy, qz))
+
+
+def _radius_level(radius_deg: float) -> tuple[int, float]:
+    """(ring level, chord² threshold) of a constant radius: L is the
+    finest level whose min cell width covers the radius."""
+    rad = math.radians(radius_deg)
+    lvl = max(0, min(30, metrics.MIN_WIDTH.max_level(rad)))
+    s = 2.0 * math.sin(0.5 * min(rad, math.pi))
+    return lvl, s * s
+
+
 def within_distance_pairs(
     df: DataFrame,
     radius_deg: float,
@@ -308,68 +423,27 @@ def within_distance_pairs(
     """Spatial self-join: all pairs (a < b) within ``radius_deg`` of each
     other — the classic within-distance join.
 
-    Level L is chosen so the min cell width at L is at least the radius;
-    then any qualifying pair lies in the same or edge/vertex-adjacent
-    level-L cells (the kNN ring guarantee). Each point emits its own
-    cell plus its ≤8-cell neighbor ring as join targets; candidates =
-    equi-join of targets against own cells (ONE shuffle on the cell key,
-    broadcastable if one side is small, salt-able if skewed); the exact
-    chord² predicate then keeps true pairs, and a<b dedupes the
-    symmetric ring double-finds.
+    The ring core as a self-join: every point is a probe whose ring at
+    the radius level (one ring UDF over its lat/lng; the six faces at
+    level 0) joins every point's ``s2_parent(cell_col, L)`` — ONE
+    shuffle on the cell key, broadcastable if one side is small,
+    salt-able if skewed. The exact chord² predicate keeps true pairs,
+    and a<b dedupes the symmetric ring double-finds.
     """
-    import math as _math
-
-    from ..functions import chord2_expr, s2_all_neighbors, s2_parent, xyz_cols
-    from ..kernels import metric as metrics
-
-    rad = _math.radians(radius_deg)
-    lvl = max(0, min(30, metrics.MIN_WIDTH.max_level(rad)))
-    s = 2.0 * _math.sin(0.5 * min(rad, _math.pi))
-    chord2_max = s * s
-
-    pts = df.select(
-        F.col(id_col).alias("pid"),
-        F.col(lat_col).alias("plat"),
-        F.col(lng_col).alias("plng"),
-        s2_parent(cell_col, lvl).alias("pcell"),
+    lvl, chord2_max = _radius_level(radius_deg)
+    cand = df.select(
+        F.col(id_col).alias("__qid"),
+        F.col(lat_col).alias("__qlat"),
+        F.col(lng_col).alias("__qlng"),
+        F.explode(_ring_udf(lat_col, lng_col, lvl)).alias("__tc"),
     )
-    if lvl == 0:
-        # level 0: the ring guarantee needs all faces — fall back to the
-        # full 6-cell fan-out (radius is a large fraction of the sphere)
-        faces = [int(x) for x in k.from_face(np.arange(6)).view(np.int64)]
-        targets = pts.select(
-            "pid",
-            "plat",
-            "plng",
-            F.explode(F.array(*[F.lit(f) for f in faces])).alias("tcell"),
-        )
-    else:
-        # all_neighbors requires a cell AT the ring level — ring around
-        # the level-L parent, not the leaf
-        targets = pts.select(
-            "pid",
-            "plat",
-            "plng",
-            F.explode(
-                F.array_union(
-                    F.array(F.col("pcell")),
-                    s2_all_neighbors(F.col("pcell"), lvl),
-                )
-            ).alias("tcell"),
-        )
-    other = pts.select(
-        F.col("pid").alias("qid"),
-        F.col("plat").alias("qlat"),
-        F.col("plng").alias("qlng"),
-        F.col("pcell").alias("tcell"),
+    j = _ring_join(
+        df, cand, lvl, id_col, lat_col, lng_col, cell_col, "__qlat", "__qlng"
     )
-    j = targets.join(other, "tcell").where(F.col("pid") < F.col("qid"))
-    px, py, pz = xyz_cols("plat", "plng")
-    qx, qy, qz = xyz_cols("qlat", "qlng")
-    d2 = chord2_expr(px, py, pz, qx, qy, qz)
     return (
-        j.where(d2 <= F.lit(chord2_max))
-        .select(F.col("pid").alias("a"), F.col("qid").alias("b"))
+        j.where(F.col("__qid") < F.col(id_col))
+        .where(F.col("dist_chord2") <= F.lit(chord2_max))
+        .select(F.col("__qid").alias("a"), F.col(id_col).alias("b"))
         .distinct()
     )
 
@@ -392,53 +466,26 @@ def within_distance_join_df(
     ``within_distance_pairs`` and the fixed-radius counterpart of
     ``knn_join_df`` (reference semantics: point_index range query).
 
-    Same ring guarantee, ONE round, no widening: level L is the finest
-    whose min cell width covers the radius, so every qualifying fact
-    lies in the probe's own level-L cell or its ≤8-neighbor ring. The
-    probe side explodes its ring executor-side (pandas-UDF kernels);
-    the fact side computes one native parent column; candidates are ONE
-    equi-join on the cell key (shuffle co-locatable with the table's
-    cell partitioning, AQE-broadcastable when the probe side is small,
+    The ring core at one constant level, ONE round, no widening: the
+    probe side explodes its ring executor-side in ONE pandas-UDF stage
+    (the six faces at level 0, no separate branch); the fact side
+    computes one native parent column; candidates are ONE equi-join on
+    the cell key (shuffle co-locatable with the table's cell
+    partitioning, AQE-broadcastable when the probe side is small,
     salt-able if skewed); the exact chord² predicate keeps true pairs.
-    A (probe, fact) pair can match only once — the fact has ONE parent
-    cell and the ring targets are distinct — so no dedup pass exists.
+    Runs no driver action, so ``streaming_within_distance`` lifts it
+    onto a probe stream unchanged.
     """
-    import math as _math
-
-    from ..functions import (
-        chord2_expr,
-        s2_all_neighbors,
-        s2_cell_from_latlng,
-        s2_parent,
-        xyz_cols,
-    )
-    from ..kernels import metric as metrics
-
-    rad = _math.radians(radius_deg)
-    lvl = max(0, min(30, metrics.MIN_WIDTH.max_level(rad)))
-    s = 2.0 * _math.sin(0.5 * min(rad, _math.pi))
-    chord2_max = s * s
-
-    if lvl == 0:
-        faces = [int(x) for x in k.from_face(np.arange(6)).view(np.int64)]
-        ring = F.array(*[F.lit(f) for f in faces])
-    else:
-        qparent = s2_parent(
-            s2_cell_from_latlng(F.col(qlat_col), F.col(qlng_col)), lvl
-        )
-        ring = F.array_union(F.array(qparent), s2_all_neighbors(qparent, lvl))
+    lvl, chord2_max = _radius_level(radius_deg)
     cand = probes.select(
-        query_id_col, qlat_col, qlng_col, F.explode(ring).alias("__tcell")
+        query_id_col, qlat_col, qlng_col,
+        F.explode(_ring_udf(qlat_col, qlng_col, lvl)).alias("__tc"),
     )
-    facts = df.withColumn("__pcell", s2_parent(cell_col, lvl))
-    j = facts.join(cand, F.col("__pcell") == F.col("__tcell"), "inner")
-    px, py, pz = xyz_cols(lat_col, lng_col)
-    qx, qy, qz = xyz_cols(qlat_col, qlng_col)
-    d2 = chord2_expr(px, py, pz, qx, qy, qz)
-    return (
-        j.withColumn("dist_chord2", d2)
-        .where(F.col("dist_chord2") <= F.lit(chord2_max))
-        .select(query_id_col, id_col, "dist_chord2")
+    j = _ring_join(
+        df, cand, lvl, id_col, lat_col, lng_col, cell_col, qlat_col, qlng_col
+    )
+    return j.where(F.col("dist_chord2") <= F.lit(chord2_max)).select(
+        query_id_col, id_col, "dist_chord2"
     )
 
 
@@ -451,14 +498,10 @@ def radius_level_expr(chord2_col) -> Column:
     ``size(filter(ladder, t >= c2)) - 1``. Shared by
     ``within_distance_join_df_var`` and the boundary-sweep test so the
     two cannot drift."""
-    import math as _math
-
-    from ..kernels import metric as metrics
-
     ladder = []
     for lvl in range(31):
         w = metrics.MIN_WIDTH.value(lvl)
-        s = 2.0 * _math.sin(0.5 * min(w, _math.pi))
+        s = 2.0 * math.sin(0.5 * min(w, math.pi))
         ladder.append(s * s)
     ladder_arr = F.array(*[F.lit(float(t)) for t in ladder])
     c2 = chord2_col if isinstance(chord2_col, Column) else F.col(chord2_col)
@@ -490,15 +533,16 @@ def within_distance_join_df_var(
     against the 31 Python-precomputed min-width chord² literals (no
     log/asin — a native size(filter(...)) over a literal array).
 
-    ONE scan of the fact side regardless of how many radius classes the
-    probes span: each fact row explodes to its ancestors at exactly the
-    ACTIVE levels (the probe-side level histogram, ≤ 31 values
-    driver-collected as a bounded list — the ``region_join_ancestors``
-    shape), and candidates are ONE equi-join on the composite
-    (level, cell) key. The probe side (the small side) explodes its
-    ring per active level. Per (probe, level) the exactness guarantee
-    is exactly ``within_distance_join_df``'s one-round ring contract,
-    and a fact row has ONE ancestor at the probe's level while ring
+    The ring core with a per-row level: ONE ring-UDF stage explodes
+    every probe's ring at its own level (the six faces at level 0), and
+    ONE scan of the fact side explodes each fact row to its ancestors
+    at exactly the ACTIVE levels (the probe-side level histogram, ≤ 31
+    values driver-collected as a bounded list — the
+    ``region_join_ancestors`` shape), however many radius classes the
+    probes span. Candidates are ONE equi-join on the cell key alone —
+    a cell id encodes its level. Per probe the exactness guarantee is
+    exactly ``within_distance_join_df``'s one-round ring contract, and
+    a fact row has ONE ancestor at the probe's level while ring
     targets are distinct — so no dedup pass exists.
 
     Probes with a NULL threshold are dropped up front: a pure-arithmetic
@@ -516,15 +560,8 @@ def within_distance_join_df_var(
     for ANY clamp ≤ the exact level: ``levels`` can be a superset,
     subset, or guess of the true histogram and only performance moves
     (a probe clamped far coarser joins a wider ring; a level nothing
-    clamps to costs one unused ancestor struct per fact row).
+    clamps to costs one unused ancestor per fact row).
     """
-    from ..functions import (
-        chord2_expr,
-        s2_all_neighbors,
-        s2_cell_from_latlng,
-        s2_parent,
-        xyz_cols,
-    )
     c2 = F.col(chord2_col)
     p = probes.where(c2.isNotNull()).select(
         query_id_col,
@@ -543,7 +580,7 @@ def within_distance_join_df_var(
                 F.col(id_col),
                 F.lit(0.0).alias("dist_chord2"),
             ).limit(0)
-        p = p.withColumn("__jl", F.col("__lvl"))
+        jl = F.col("__lvl")
     else:
         active = sorted({int(x) for x in levels} | {0})
         if any(not (0 <= x <= 30) for x in active):
@@ -551,52 +588,16 @@ def within_distance_join_df_var(
         # coarsest-safe clamp: largest provided level ≤ the exact
         # level (level 0 is in the set, so the filter is never empty)
         arr = F.array(*[F.lit(x) for x in active])
-        p = p.withColumn(
-            "__jl", F.array_max(F.filter(arr, lambda x: x <= F.col("__lvl")))
-        )
-    # probe side (small side): ring explode per active level, tagged
-    # with the level it joins at
-    cand = None
-    for lvl in active:
-        pl = p.where(F.col("__jl") == lvl)
-        if lvl == 0:
-            faces = [int(x) for x in k.from_face(np.arange(6)).view(np.int64)]
-            ring = F.array(*[F.lit(f) for f in faces])
-        else:
-            qparent = s2_parent(
-                s2_cell_from_latlng(F.col(qlat_col), F.col(qlng_col)), lvl
-            )
-            ring = F.array_union(
-                F.array(qparent), s2_all_neighbors(qparent, lvl)
-            )
-        c = pl.select(
-            query_id_col, qlat_col, qlng_col, "__c2",
-            F.lit(lvl).alias("__qlvl"),
-            F.explode(ring).alias("__tcell"),
-        )
-        cand = c if cand is None else cand.unionByName(c)
-    # fact side: ONE scan — ancestors at exactly the active levels,
-    # one native Generate (no Python, no per-level rescans)
-    anc = F.array(*[
-        F.struct(
-            F.lit(lvl).alias("__jlvl"),
-            s2_parent(cell_col, lvl).alias("__pcell"),
-        )
-        for lvl in active
-    ])
-    facts = df.select("*", F.inline(anc))
-    px, py, pz = xyz_cols(lat_col, lng_col)
-    qx, qy, qz = xyz_cols(qlat_col, qlng_col)
-    j = facts.join(
-        cand,
-        (F.col("__jlvl") == F.col("__qlvl"))
-        & (F.col("__pcell") == F.col("__tcell")),
-        "inner",
+        jl = F.array_max(F.filter(arr, lambda x: x <= F.col("__lvl")))
+    cand = p.select(
+        query_id_col, qlat_col, qlng_col, "__c2",
+        F.explode(_ring_udf(qlat_col, qlng_col, jl)).alias("__tc"),
     )
-    return (
-        j.withColumn("dist_chord2", chord2_expr(px, py, pz, qx, qy, qz))
-        .where(F.col("dist_chord2") <= F.col("__c2"))
-        .select(query_id_col, id_col, "dist_chord2")
+    j = _ring_join(
+        df, cand, active, id_col, lat_col, lng_col, cell_col, qlat_col, qlng_col
+    )
+    return j.where(F.col("dist_chord2") <= F.col("__c2")).select(
+        query_id_col, id_col, "dist_chord2"
     )
 
 

@@ -28,28 +28,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions import chord2_expr, s2_parent, xyz_cols
+from ..functions import s2_parent
 from ..kernels import cellid as k
 from ..kernels import metric as metrics
 from ..plans.frames import local_frame
-
-
-def _candidate_cells(lat: np.ndarray, lng: np.ndarray, level: int) -> list[np.ndarray]:
-    """Per-query candidate cells: own cell + all neighbors at level.
-
-    At level 0 the 3×3 neighbor ring only reaches 5 of the 6 faces (the
-    antipodal face is two steps away), yet _safe_chord2(0) promises the
-    whole sphere — so level 0 uses all six face cells explicitly.
-    """
-    if level <= 0:
-        faces = k.from_face(np.arange(6, dtype=np.uint64))
-        return [faces.copy() for _ in range(len(lat))]
-    ids = k.parent(k.cell_from_latlng(lat, lng), level)
-    rings = k.all_neighbors(ids, level)
-    return [
-        np.unique(np.concatenate([[ids[i]], rings[i]])).astype(np.uint64)
-        for i in range(len(ids))
-    ]
+from .covering_join import _ring_cells_np, _ring_join, _ring_udf, radius_level_expr
 
 
 def _safe_chord2(level: int) -> float:
@@ -156,20 +139,18 @@ def knn_join(
     try:
         while len(pending) > 0:
             lvl = max(0, level - 2 * attempt)
-            cand = _candidate_cells(qlat[pending], qlng[pending], lvl)
+            cand = _ring_cells_np(qlat[pending], qlng[pending], lvl)
             rep = np.repeat(pending, [len(c) for c in cand])
             cand_df = local_frame(
                 spark,
-                [qids[rep], qlat[rep], qlng[rep], np.concatenate(cand).view(np.int64)],
-                "query_id long, qlat double, qlng double, cand_cell long",
+                [qids[rep], qlat[rep], qlng[rep], np.concatenate(cand)],
+                "query_id long, qlat double, qlng double, __tc long",
             )
-            qx, qy, qz = xyz_cols("qlat", "qlng")
-            px, py, pz = xyz_cols(lat_col, lng_col)
             src = _pushdown_candidate_ranges(df, cand, lvl, biased_col)
-            j = src.withColumn("__pcell", s2_parent("cell_id", lvl)).join(
-                F.broadcast(cand_df), F.col("__pcell") == F.col("cand_cell"), "inner"
+            scored = _ring_join(
+                src, F.broadcast(cand_df), lvl,
+                id_col, lat_col, lng_col, "cell_id", "qlat", "qlng",
             )
-            scored = j.withColumn("dist_chord2", chord2_expr(px, py, pz, qx, qy, qz))
             w = Window.partitionBy("query_id").orderBy(
                 F.col("dist_chord2").asc(), F.col(id_col).asc()
             )
@@ -219,92 +200,12 @@ def knn_join(
 # --------------------------------------------------------------------------
 # DataFrame-native query side: the probe set is itself a (possibly huge)
 # DataFrame — millions of rows — so NOTHING per-query may touch the
-# driver. Ring explode happens executor-side (s2_all_neighbors pandas
-# UDF over the vectorized kernel), the parent equi-join co-locates with
-# the fact table's cell partitioning, and widening retries only the
-# unresolved probes via a left_anti join on the resolved-id set. The
-# only driver-side values per round are two scalars (pending count /
-# round index); reference parity: same exactness contract as knn_join
-# (point_index.rs kNN semantics), different orchestration shape.
-
-
-def _attempt_ranked_df(
-    df: DataFrame,
-    pending: DataFrame,
-    lvl: int,
-    kk: int,
-    lat_col: str,
-    lng_col: str,
-    id_col: str,
-    query_id_col: str,
-    qlat_col: str,
-    qlng_col: str,
-) -> DataFrame:
-    """One widening attempt, fully relational: explode each pending
-    probe's candidate ring (own cell + 3×3 neighbors at ``lvl``; all six
-    faces at level 0), equi-join the fact table on parent-at-lvl, score
-    chord², keep window rank ≤ kk. Exposed standalone so the plan test
-    can pin that the probe side is a real scan (no LocalTableScan /
-    driver materialization)."""
-    from ..functions import s2_all_neighbors, s2_cell_from_latlng
-
-    if lvl <= 0:
-        faces = k.from_face(np.arange(6, dtype=np.uint64)).view(np.int64)
-        ring = F.array(*[F.lit(int(c)) for c in faces])
-    else:
-        qparent = s2_parent(
-            s2_cell_from_latlng(F.col(qlat_col), F.col(qlng_col)), lvl
-        )
-        ring = F.array_union(
-            F.array(qparent), s2_all_neighbors(qparent, lvl)
-        )
-    cand = pending.select(
-        query_id_col, qlat_col, qlng_col, F.explode(ring).alias("__cand_cell")
-    )
-    qx, qy, qz = xyz_cols(qlat_col, qlng_col)
-    px, py, pz = xyz_cols(lat_col, lng_col)
-    j = df.withColumn("__pcell", s2_parent("cell_id", lvl)).join(
-        cand, F.col("__pcell") == F.col("__cand_cell"), "inner"
-    )
-    scored = j.withColumn("dist_chord2", chord2_expr(px, py, pz, qx, qy, qz))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist_chord2").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= kk)
-        .select(query_id_col, "rank", id_col, "dist_chord2")
-    )
-
-
-def _ring_cells_np(
-    lat: np.ndarray, lng: np.ndarray, lvls: np.ndarray
-) -> list[np.ndarray]:
-    """Per-row candidate ring at a PER-ROW level: own cell + all
-    neighbors at lvls[i] (the six face cells at level 0 — the 3×3 ring
-    only reaches 5 of the 6 faces there). numpy in, int64 arrays out;
-    shared by the executor-side probe-prep UDF and the driver-side
-    literal tail rounds so the two paths cannot drift."""
-    leafs = k.cell_from_latlng(
-        np.asarray(lat, dtype=np.float64), np.asarray(lng, dtype=np.float64)
-    )
-    lvls = np.asarray(lvls, dtype=np.int64)
-    out: list[np.ndarray] = [None] * len(leafs)  # type: ignore[list-item]
-    faces = k.from_face(np.arange(6, dtype=np.uint64)).view(np.int64)
-    for lv in np.unique(lvls):
-        idx = np.nonzero(lvls == lv)[0]
-        if lv <= 0:
-            for i in idx:
-                out[i] = faces
-        else:
-            p = k.parent(leafs[idx], int(lv))
-            rings = k.all_neighbors(p, int(lv))
-            pv = p.view(np.int64)
-            for n, i in enumerate(idx):
-                out[i] = np.unique(
-                    np.concatenate([pv[n : n + 1], rings[n].view(np.int64)])
-                )
-    return out
+# driver. Rings come from the ring-join core (covering_join._ring_udf
+# executor-side, _ring_cells_np for the driver-literal tail), the
+# parent equi-join co-locates with the fact table's cell partitioning,
+# and widening retries only the unresolved probes; reference parity:
+# same exactness contract as knn_join (point_index.rs kNN semantics),
+# different orchestration shape.
 
 
 # Tail rounds with at most this many pending probes run the driver-
@@ -429,41 +330,17 @@ def _attempt_var(
     qlat_col: str,
     qlng_col: str,
 ) -> DataFrame:
-    """One widening attempt over probes carrying per-row ring levels:
-    ``cand`` = (query_id, qlat, qlng, __jl, __tc) with __tc the ring
-    cells at each probe's own level. The fact side is scanned ONCE and
-    explodes to its ancestors at exactly the ``active`` levels (cell
-    ids encode their level, so the single-column equi-join can never
-    match across levels). Scoring + window rank as before, plus the
-    resolution flags computed IN the same window pass (no extra
-    shuffle): __n = candidate count, __kd = k-th distance, __ok =
-    resolved under the _safe_chord2 coverage contract (level-0 probes
-    are always final — their ring is the whole sphere)."""
-    if isinstance(active, DataFrame):
-        # lazy level set (a ≤31-row distinct over the probe side,
-        # broadcast): the fact side explodes to one ancestor per active
-        # level WITHOUT the driver ever collecting the set — one fewer
-        # job per call than the literal-list form the tail rounds use
-        facts = df.crossJoin(F.broadcast(active)).select(
-            id_col, lat_col, lng_col,
-            s2_parent("cell_id", F.col("__lvl")).alias("__pc"),
-        )
-    elif len(active) == 1:
-        facts = df.select(
-            id_col, lat_col, lng_col,
-            s2_parent("cell_id", active[0]).alias("__pc"),
-        )
-    else:
-        facts = df.select(
-            id_col, lat_col, lng_col,
-            F.explode(
-                F.array(*[s2_parent("cell_id", lv) for lv in active])
-            ).alias("__pc"),
-        )
-    j = facts.join(cand, F.col("__pc") == F.col("__tc"), "inner")
-    qx, qy, qz = xyz_cols(qlat_col, qlng_col)
-    px, py, pz = xyz_cols(lat_col, lng_col)
-    scored = j.withColumn("dist_chord2", chord2_expr(px, py, pz, qx, qy, qz))
+    """One widening attempt: the ring core (``covering_join._ring_join``)
+    over probes carrying per-row ring levels — ``cand`` = (query_id,
+    qlat, qlng, __jl, __tc) with __tc the ring cells at each probe's
+    own level — then window rank ≤ kk plus the resolution flags
+    computed IN the same window pass (no extra shuffle): __n =
+    candidate count, __kd = k-th distance, __ok = resolved under the
+    _safe_chord2 coverage contract (level-0 probes are always final —
+    their ring is the whole sphere)."""
+    scored = _ring_join(
+        df, cand, active, id_col, lat_col, lng_col, "cell_id", qlat_col, qlng_col
+    )
     # partitioned by (probe, attempted level): in the relational rounds
     # each probe carries ONE level so this equals partitioning by probe;
     # the literal tail attempts TWO levels per probe in one pass and
@@ -719,8 +596,6 @@ def knn_join_df(
             # Probes with < k rows are in genuinely sparse territory and
             # jump 4 levels (256× ring area) instead. ONE aggregation
             # serves both the resolved-id set and the kd lookup.
-            from .covering_join import radius_level_expr
-
             pstats = ranked.groupBy(query_id_col).agg(
                 F.max("__ok").alias("__pok"),
                 F.max("__n").alias("__pn"),
@@ -781,7 +656,7 @@ def knn_join_df(
                 )
                 break
             pending = nxt.drop("__ring").withColumn(
-                "__ring", _ring_var_udf(F.col(qlat_col), F.col(qlng_col), F.col("__jl"))
+                "__ring", _ring_udf(qlat_col, qlng_col, F.col("__jl"))
             )
             if all_gtd:
                 # every remaining probe retries at its kd-derived level —
@@ -816,24 +691,6 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
-
-
-def _ring_var_udf(qlat, qlng, jl):
-    """Executor-side per-row-level ring (relational big-tail retries)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    @pandas_udf(ArrayType(LongType()))
-    def _ring(lat: pd.Series, lng: pd.Series, lv: pd.Series) -> pd.Series:
-        return pd.Series(
-            _ring_cells_np(
-                lat.to_numpy(np.float64),
-                lng.to_numpy(np.float64),
-                lv.to_numpy(np.int64),
-            )
-        )
-
-    return _ring(qlat, qlng, jl)
 
 
 def _tail_literal_rounds(
@@ -924,17 +781,7 @@ def _tail_literal_rounds(
         ]
         cand_df = F.broadcast(local_frame(spark, cols, cand_schema))
         active = sorted(int(x) for x in np.unique(lv))
-        src = df
-        if min(active) > 0 and "cell_id_biased" in df.columns:
-            all_cells = np.concatenate(rings).view(np.uint64)
-            ranges = _merged_biased_ranges(all_cells)
-            if len(ranges) <= _MAX_PUSHED_RANGES:
-                pred = F.lit(False)
-                for lo, hi in ranges:
-                    pred = pred | F.col("cell_id_biased").between(
-                        F.lit(lo), F.lit(hi)
-                    )
-                src = df.where(pred)
+        src = _pushdown_candidate_ranges(df, rings, min(active), "cell_id_biased")
         ranked = _attempt_var(
             src, cand_df, kk, active,
             lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col,

@@ -159,6 +159,12 @@ def polyline_crossing_join(
     (kernels/edges.simple_crossing — pure double arithmetic, bit-equal
     to the oracle's SQL port) decides on candidates only.
 
+    Not on the within-distance ring core (covering_join._ring_join):
+    that core joins probe rings against fact ANCESTORS, while this join
+    dedups sample cells before the ring and joins ring to ring, so it
+    would need a flag to fit. It keeps ``s2_all_neighbors`` over the
+    deduped sample cells.
+
     Why fine cells: a ring at the segment-length level makes the join
     all-pairs-dense for clustered tracks (measured 1,169 s on 10k
     city-clustered trajectories); candidate pairs shrink roughly

@@ -195,15 +195,15 @@ def test_knn_attempt_pushes_candidate_ranges(stored):
     """Each kNN widening attempt must push its candidate rings' merged
     leaf ranges to the scan — never rescan the full table per attempt."""
     from rust_s2_spark.kernels import metric as metrics
+    from rust_s2_spark.operators.covering_join import _ring_cells_np
     from rust_s2_spark.operators.knn import (
-        _candidate_cells,
         _merged_biased_ranges,
         _pushdown_candidate_ranges,
     )
 
     lat = np.array([40.7128]); lng = np.array([-74.0060])
     lvl = metrics.MIN_WIDTH.max_level(np.radians(2.0))
-    cand = _candidate_cells(lat, lng, lvl)
+    cand = _ring_cells_np(lat, lng, np.full(1, lvl))
     src = _pushdown_candidate_ranges(stored, cand, lvl, "cell_id_biased")
     plan = _plan(src)
     scan = plan[plan.find("PushedFilters") :][:200]
@@ -259,6 +259,74 @@ def test_within_distance_is_equi_join(stored, spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+
+
+def _literal_cell_facts(spark):
+    """Facts whose cell ids are literals (no encode UDF in the plan),
+    so every Python node left in a within-distance plan is the ring
+    core's own."""
+    rng = np.random.default_rng(11)
+    lat = rng.uniform(-60.0, 60.0, 300)
+    lng = rng.uniform(-180.0, 180.0, 300)
+    cells = k.cell_from_latlng(lat, lng).view(np.int64)
+    return spark.createDataFrame(
+        [
+            (i, float(a), float(b), int(c))
+            for i, (a, b, c) in enumerate(zip(lat, lng, cells))
+        ],
+        "image_id long, lat double, lng double, cell_id long",
+    )
+
+
+def test_within_distance_family_one_python_stage(spark):
+    """All three within-distance forms cross into Python ONCE: the ring
+    core's single ring UDF (lat, lng, level) → ring, with a constant
+    level, a per-row level over four radius classes, or as a self-join
+    — never an encode UDF chained into a neighbor UDF, nor one pair of
+    them per active level. The variable-radius join is an equi-join on
+    ONE key (a cell id encodes its level; no (level, cell) composite)."""
+    import math
+    import re
+
+    from rust_s2_spark.operators.covering_join import (
+        radius_level_expr,
+        within_distance_join_df,
+        within_distance_join_df_var,
+        within_distance_pairs,
+    )
+
+    facts = _literal_cell_facts(spark)
+
+    def c2(deg):
+        s = 2.0 * math.sin(0.5 * math.radians(deg))
+        return s * s
+
+    c2col = F.element_at(
+        F.array(*[F.lit(c2(r)) for r in (0.2, 1.5, 8.0, 30.0)]),
+        (F.col("image_id") % 4).cast("int") + 1,
+    )
+    probes = facts.where(F.col("image_id") % 7 == 0).select(
+        F.col("image_id").alias("query_id"),
+        F.col("lat").alias("qlat"),
+        F.col("lng").alias("qlng"),
+        c2col.alias("chord2_max"),
+    )
+    assert probes.select(radius_level_expr("chord2_max")).distinct().count() == 4
+
+    def n_python(df):
+        return _plan(df).count("ArrowEvalPython [")
+
+    assert n_python(within_distance_join_df(facts, probes, 2.0)) == 1
+    assert n_python(within_distance_pairs(facts, 2.0)) == 1
+    var_plan = _plan(within_distance_join_df_var(facts, probes))
+    assert var_plan.count("ArrowEvalPython [") == 1, var_plan
+    keys = re.findall(
+        r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)"
+        r" \[([^\]]*)\], \[([^\]]*)\]",
+        var_plan,
+    )
+    assert keys, var_plan
+    assert all("," not in lk and "," not in rk for lk, rk in keys), keys
 
 
 def test_connected_components_round_shape(spark):

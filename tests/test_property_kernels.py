@@ -133,3 +133,39 @@ def test_curve_leaf_ranges_are_contiguous(lat, lng, lvl):
     wrapped = lo < int(k.range_min(c)[0])  # advance_wrap cycled past the end
     if not wrapped:
         assert lo == hi + 2, (hex(hi), hex(lo))
+
+
+# biased toward faces 4-5 (sign bit set: lng ≈ -90° on the equator is
+# face 4, lat ≈ -90° is face 5), the poles and the antimeridian
+edge_lat_s = st.one_of(
+    st.sampled_from([90.0, -90.0, -89.999, 0.0, -45.0]),
+    st.floats(min_value=-90.0, max_value=90.0, allow_nan=False),
+)
+edge_lng_s = st.one_of(
+    st.sampled_from([180.0, -180.0, -90.0, -135.0, -45.0]),
+    st.floats(min_value=-180.0, max_value=180.0, allow_nan=False),
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    rows=st.lists(st.tuples(edge_lat_s, edge_lng_s, level_s), min_size=1, max_size=6)
+)
+def test_ring_cells_own_cell_plus_all_neighbors(rows):
+    """The ring-join core's ring, batched with per-row levels: exactly
+    {own level-L cell} ∪ all_neighbors as a set, no duplicate (kNN sums
+    row counts over it), and the six face cells at level 0."""
+    from rust_s2_spark.operators.covering_join import _ring_cells_np
+
+    lat, lng, lvl = (np.array(c) for c in zip(*rows))
+    rings = _ring_cells_np(lat, lng, lvl)
+    faces = {int(f) for f in k.from_face(np.arange(6))}
+    for (la, ln, lv), ring in zip(rows, rings):
+        assert len(np.unique(ring)) == len(ring), (la, ln, lv)
+        got = {int(x) for x in ring.view(np.uint64)}
+        if lv == 0:
+            assert got == faces
+        else:
+            own = k.parent(_leaf(la, ln), lv)
+            nbrs = {int(x) for x in k.all_neighbors(own, lv)[0]}
+            assert got == {int(own[0])} | nbrs, (la, ln, lv)

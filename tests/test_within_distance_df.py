@@ -101,8 +101,44 @@ def test_self_configuration_equals_self_join(spark, images):
     assert df_pairs == self_pairs
 
 
-def test_adversarial_geometry(spark):
-    """Pole and antimeridian probes against a tiny synthetic table."""
+def _run_form(form, facts, probes, radius):
+    """One within-distance form as sorted (query_id, image_id) rows."""
+    from rust_s2_spark.operators.covering_join import within_distance_join_df_var
+
+    if form == "df":
+        out = within_distance_join_df(facts, probes, radius)
+    elif form == "var":
+        out = within_distance_join_df_var(
+            facts, probes.withColumn("chord2_max", F.lit(_c2_of(radius)))
+        )
+    else:
+        # self-join over facts ∪ probes; probe ids (≥ 100) exceed fact
+        # ids, so a cross pair (a < b) reads (fact, probe)
+        as_facts = probes.select(
+            F.col("query_id").alias("image_id"),
+            F.col("qlat").alias("lat"),
+            F.col("qlng").alias("lng"),
+        ).withColumn("cell_id", s2_cell_from_latlng("lat", "lng"))
+        out = (
+            within_distance_pairs(facts.unionByName(as_facts), radius)
+            .where((F.col("a") < 100) & (F.col("b") >= 100))
+            .select(F.col("b").alias("query_id"), F.col("a").alias("image_id"))
+        )
+    return (
+        out.select("query_id", "image_id")
+        .toPandas()
+        .astype("int64")
+        .sort_values(["query_id", "image_id"])
+        .reset_index(drop=True)
+    )
+
+
+@pytest.mark.parametrize("form", ["df", "var", "pairs"])
+def test_adversarial_geometry(spark, form):
+    """Pole, antimeridian and face 4-5 (sign bit set) probes against a
+    tiny synthetic table, through every within-distance form; rows with
+    NULL or NaN coordinates match nothing and raise nothing."""
+    nan = float("nan")
     facts = spark.createDataFrame(
         [
             (1, 89.5, 10.0),
@@ -110,27 +146,40 @@ def test_adversarial_geometry(spark):
             (3, 0.0, 179.9),
             (4, 0.0, -179.9),
             (5, -45.0, 45.0),
+            (6, 0.0, -90.0),      # face 4
+            (7, 0.5, -89.5),      # face 4
+            (8, -89.0, 30.0),     # face 5
+            (9, -89.5, -150.0),   # face 5
+            (10, None, 10.0),
+            (11, 5.0, None),
+            (12, nan, 0.0),
+            (13, 0.0, nan),
         ],
         "image_id long, lat double, lng double",
     ).withColumn("cell_id", s2_cell_from_latlng("lat", "lng"))
     probes = spark.createDataFrame(
-        [(100, 90.0, 0.0), (101, 0.0, 180.0)],
+        [
+            (100, 90.0, 0.0),
+            (101, 0.0, 180.0),
+            (102, 0.0, -90.5),    # face 4
+            (103, -90.0, 0.0),    # face 5, south pole
+            (104, None, 0.0),
+            (105, 0.0, None),
+            (106, nan, nan),
+        ],
         "query_id long, qlat double, qlng double",
     )
-    got = (
-        within_distance_join_df(facts, probes, 2.0)
-        .select("query_id", "image_id")
-        .toPandas()
-        .astype("int64")
-        .sort_values(["query_id", "image_id"])
-        .reset_index(drop=True)
-    )
+    got = _run_form(form, facts, probes, 2.0)
     want = _brute_pairs(facts, probes, 2.0)
-    assert got.equals(want)
+    assert got.equals(want), (got, want)
     # pole probe must see both near-pole points (crossing faces),
     # antimeridian probe both sides of the date line
     assert set(got[got.query_id == 100].image_id) == {1, 2}
     assert set(got[got.query_id == 101].image_id) == {3, 4}
+    assert set(got[got.query_id == 102].image_id) == {6, 7}
+    assert set(got[got.query_id == 103].image_id) == {8, 9}
+    assert not set(got.query_id) & {104, 105, 106}
+    assert not set(got.image_id) & {10, 11, 12, 13}
 
 
 def test_variable_radius_matches_brute_force(spark, images):
