@@ -50,7 +50,8 @@ TWIN_COVERED_BY = {
     # wrapper delegates to within_distance_join_df verbatim); its own
     # driver query also carries the same exhaustive oracle shape
     "stream_within_distance": "within_distance",
-    # foreachBatch runs knn_join_df verbatim per micro-batch;
+    # foreachBatch runs knn_join_df's own body (_knn_join_df_lazy,
+    # the core knn_join_df checkpoints) per micro-batch;
     # test_streaming_knn.py pins multi-batch == one-shot batch operator
     # == brute force, so the recorded knn_df gate extends to the lift
     "stream_knn": "knn_df",

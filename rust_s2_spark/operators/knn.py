@@ -1,25 +1,28 @@
-"""kNN join: k nearest images per query point (SURVEY.md §2.8).
+"""Exact k-nearest-neighbour joins (SURVEY.md §2.8): the k nearest fact
+rows per probe point, deterministic tie-break on id.
 
-Plan (Spark-first, no per-row Python):
-1. Driver-side: pick a seed cell level from the expected neighbor
-   radius (MIN_WIDTH metric), compute each query's candidate ring =
-   its cell + all_neighbors at that level (tiny, per query).
-2. Broadcast-join the exploded (query_id, candidate_cell) table
-   against the fact table on parent-at-level equality (native bit
-   arithmetic — equi-join, broadcastable).
-3. chord² distance (native SQL) + window rank ≤ k.
-4. Exactness: a 3×3 all_neighbors ring around the query's cell is
-   guaranteed to contain every point within one cell min-width of the
-   query. A query's top-k is final only when its k-th distance is
-   below that bound; otherwise the ring is widened (coarser level)
-   and only the unresolved queries are retried.
+Every form rests on one exactness contract. A probe's candidate ring
+is its own cell plus all_neighbors at some level (the ring-join core,
+``covering_join._ring_cells_np`` / ``_ring_udf`` / ``_ring_join``); the
+3×3 ring holds every point within one cell min-width of the probe, so
+a probe's top-k is final only when its k-th distance is inside that
+bound (``_safe_chord2``). Otherwise the ring coarsens and only the
+unresolved probes retry; level 0 covers the sphere, so widening ends.
 
-At scale the equi-join on the parent column co-locates with the
-table's cell_id partitioning, so only the (small) candidate side moves.
+- ``knn_join``: probes are a driver-side list. Each widening attempt
+  broadcasts the rings as a literal frame and prunes the fact scan to
+  the rings' merged leaf ranges.
+- ``knn_join_df``: probes are a DataFrame. Each probe starts at a level
+  read off the bounded level-7 density histogram. Up to
+  ``_TAIL_COLLECT_MAX`` probes run the driver-literal rounds from the
+  start; larger probe sets run relational rounds on the executors and
+  hand their unresolved tail to the same literal rounds.
+- ``mutual_knn_pairs`` and ``idw_interpolate`` compose ``knn_join_df``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import math
 import weakref
 
@@ -198,22 +201,21 @@ def knn_join(
 
 
 # --------------------------------------------------------------------------
-# DataFrame-native query side: the probe set is itself a (possibly huge)
-# DataFrame — millions of rows — so NOTHING per-query may touch the
-# driver. Rings come from the ring-join core (covering_join._ring_udf
-# executor-side, _ring_cells_np for the driver-literal tail), the
-# parent equi-join co-locates with the fact table's cell partitioning,
-# and widening retries only the unresolved probes; reference parity:
-# same exactness contract as knn_join (point_index.rs kNN semantics),
-# different orchestration shape.
+# DataFrame-native query side: the probe set is itself a DataFrame, and
+# may hold millions of rows. Rings come from the ring-join core
+# (covering_join._ring_udf executor-side, _ring_cells_np for the
+# driver-literal rounds), the parent equi-join co-locates with the fact
+# table's cell partitioning, and widening retries only the unresolved
+# probes; reference parity: same exactness contract as knn_join
+# (point_index.rs kNN semantics), different orchestration shape.
 
 
-# Tail rounds with at most this many pending probes run the driver-
-# literal path (rings computed in numpy, candidate frame broadcast,
-# fact scan pruned via the merged-range pushdown) instead of another
-# relational pass over the full probe pipeline.
+# The one regime threshold of knn_join_df: a probe set, or an unresolved
+# tail of the relational rounds, of at most this many rows runs the
+# driver-literal rounds (rings computed in numpy, candidate frame
+# broadcast, fact scan pruned via the merged-range pushdown) instead of
+# a relational pass over the probe pipeline.
 _TAIL_COLLECT_MAX = 2048
-_WIDEN_STEP = 2
 _LOG4 = math.log(4.0)
 
 
@@ -250,12 +252,65 @@ def _start_level_np(
     return np.clip(lvl, 0, 30).astype(np.int64)
 
 
-def _probe_prep_udf(cells7: np.ndarray, n7: np.ndarray, target: int):
+def _density_tables(cells7: np.ndarray, n7: np.ndarray) -> tuple:
+    """(level-7 cells, counts, level-4 cells, counts), each pair sorted
+    by cell: the bounded level-7 histogram (≤ 6·4^7 cells whatever the
+    corpus size) and its level-4 rollup."""
+    order = np.argsort(cells7)
+    c7s = cells7[order]
+    n7s = n7[order].astype(np.int64)
+    c4s, inv = np.unique(k.parent(c7s, 4), return_inverse=True)
+    n4s = np.zeros(len(c4s), dtype=np.int64)
+    np.add.at(n4s, inv, n7s)
+    return c7s, n7s, c4s, n4s
+
+
+def _lookup(cells: np.ndarray, tc: np.ndarray, tn: np.ndarray) -> np.ndarray:
+    """Count of each cell in the sorted table (tc, tn); 0 when absent."""
+    if len(tc) == 0:
+        return np.zeros(len(cells), dtype=np.int64)
+    pos = np.clip(np.searchsorted(tc, cells), 0, len(tc) - 1)
+    return np.where(tc[pos] == cells, tn[pos], 0)
+
+
+def _ring_density(leafs: np.ndarray, lvl: int, tc: np.ndarray, tn: np.ndarray):
+    """(own-cell count, 3×3 ring sum incl. own) per row."""
+    p = k.parent(leafs, lvl)
+    rings = k.all_neighbors(p, lvl)
+    lens = np.fromiter((len(r) for r in rings), dtype=np.int64, count=len(rings))
+    flat = np.concatenate(rings) if len(rings) else np.array([], dtype=np.uint64)
+    vals = _lookup(flat, tc, tn)
+    offs = np.zeros(len(rings), dtype=np.int64)
+    np.cumsum(lens[:-1], out=offs[1:])
+    ringsum = (
+        np.add.reduceat(vals, offs)
+        if len(flat)
+        else np.zeros(len(rings), dtype=np.int64)
+    )
+    ringsum = np.where(lens > 0, ringsum, 0)
+    own = _lookup(p, tc, tn)
+    return own, ringsum + own
+
+
+def _probe_start_levels(
+    lat: np.ndarray, lng: np.ndarray, tables: tuple, target: int
+) -> np.ndarray:
+    """Each probe's start level (``_start_level_np``) from its own-cell
+    count and 3×3 ring sum in the ``_density_tables`` at levels 7 and 4.
+    The probe-prep UDF runs it on the executors and the literal regime
+    on the driver."""
+    c7s, n7s, c4s, n4s = tables
+    leafs = k.cell_from_latlng(lat, lng)
+    o7, s7 = _ring_density(leafs, 7, c7s, n7s)
+    o4, s4 = _ring_density(leafs, 4, c4s, n4s)
+    return _start_level_np(o7, s7, o4, s4, target)
+
+
+def _probe_prep_udf(tables: tuple, target: int):
     """pandas UDF (qlat, qlng) → struct(jl int, ring array<long>): the
     density-derived start level plus the round-0 candidate ring, ONE
-    Python crossing per probe batch. The bounded level-7 histogram
-    (≤ 6·4^7 cells regardless of corpus size) rides in the closure as
-    sorted numpy arrays; its level-4 rollup is derived here once."""
+    Python crossing per probe batch. The ``_density_tables`` ride in the
+    closure as sorted numpy arrays."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (
         ArrayType,
@@ -264,38 +319,6 @@ def _probe_prep_udf(cells7: np.ndarray, n7: np.ndarray, target: int):
         StructField,
         StructType,
     )
-
-    order = np.argsort(cells7)
-    c7s = cells7[order]
-    n7s = n7[order].astype(np.int64)
-    p4 = k.parent(c7s, 4)
-    c4s, inv = np.unique(p4, return_inverse=True)
-    n4s = np.zeros(len(c4s), dtype=np.int64)
-    np.add.at(n4s, inv, n7s)
-
-    def _lookup(cells: np.ndarray, tc: np.ndarray, tn: np.ndarray) -> np.ndarray:
-        if len(tc) == 0:
-            return np.zeros(len(cells), dtype=np.int64)
-        pos = np.clip(np.searchsorted(tc, cells), 0, len(tc) - 1)
-        return np.where(tc[pos] == cells, tn[pos], 0)
-
-    def _ring_density(leafs: np.ndarray, lvl: int, tc, tn):
-        """(own-cell count, 3×3 ring sum incl. own) per row."""
-        p = k.parent(leafs, lvl)
-        rings = k.all_neighbors(p, lvl)
-        lens = np.fromiter((len(r) for r in rings), dtype=np.int64, count=len(rings))
-        flat = np.concatenate(rings) if len(rings) else np.array([], dtype=np.uint64)
-        vals = _lookup(flat, tc, tn)
-        offs = np.zeros(len(rings), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offs[1:])
-        ringsum = (
-            np.add.reduceat(vals, offs)
-            if len(flat)
-            else np.zeros(len(rings), dtype=np.int64)
-        )
-        ringsum = np.where(lens > 0, ringsum, 0)
-        own = _lookup(p, tc, tn)
-        return own, ringsum + own
 
     schema = StructType(
         [
@@ -308,10 +331,7 @@ def _probe_prep_udf(cells7: np.ndarray, n7: np.ndarray, target: int):
     def _prep(qlat: pd.Series, qlng: pd.Series) -> pd.DataFrame:
         lat = qlat.to_numpy(np.float64)
         lng = qlng.to_numpy(np.float64)
-        leafs = k.cell_from_latlng(lat, lng)
-        o7, s7 = _ring_density(leafs, 7, c7s, n7s)
-        o4, s4 = _ring_density(leafs, 4, c4s, n4s)
-        jl = _start_level_np(o7, s7, o4, s4, target)
+        jl = _probe_start_levels(lat, lng, tables, target)
         rings = _ring_cells_np(lat, lng, jl)
         return pd.DataFrame({"jl": jl.astype(np.int32), "ring": rings})
 
@@ -374,10 +394,11 @@ def _attempt_var(
     )
 
 
-# Per-source-frame memos for knn_join_df: the bounded level-7
-# histogram, and the probe-prep UDFs whose closures carry it. Keyed
-# weakly on the DataFrame object (fact frame or injected stats), so an
-# entry lives exactly as long as the frame it was computed from.
+# Per-source-frame memos for knn_join_df: the density tables of the
+# bounded level-7 histogram, and the probe-prep UDFs whose closures
+# carry them. Keyed weakly on the DataFrame object (fact frame or
+# injected stats), so an entry lives exactly as long as the frame it
+# was computed from.
 _L7_HIST: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _PREP_UDFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
@@ -406,6 +427,9 @@ def knn_join_df(
     candidate pools under one rank window and produce interleaved
     wrong ranks — deduplicate or re-key the probe frame first.
 
+    A probe whose ``qlat`` or ``qlng`` is NULL or NaN has no nearest
+    neighbours and returns no rows, as in the within-distance joins.
+
     ``stats``: precomputed density statistics from
     ``plans.stats.build_cell_stats(df, levels=(7,))`` (table metadata,
     maintained at write time next to the lineage table). When given,
@@ -431,35 +455,74 @@ def knn_join_df(
     Exactness: identical widening contract to ``knn_join`` — a probe is
     final only when it holds ≥ k results whose k-th distance fits inside
     the ring's guaranteed coverage (_safe_chord2); otherwise the ring
-    coarsens by three levels and ONLY unresolved probes retry. Level 0
-    covers the sphere, so termination is unconditional.
+    coarsens and ONLY unresolved probes retry. Level 0 covers the
+    sphere, so termination is unconditional.
 
-    Start levels (round-10 rework; pure performance, exactness is
-    level-independent): each probe derives its OWN start level from the
-    local density around it — the bounded level-7 histogram (≤ 6·4^7
-    cells whatever the corpus size) rides into one pandas UDF as sorted
-    numpy arrays, and per probe the 3×3 ring sums at level 7 and at its
+    Start levels (pure performance, exactness is level-independent):
+    each probe derives its OWN start level from the local density
+    around it — per probe, the 3×3 ring sums in the bounded level-7
+    histogram (≤ 6·4^7 cells whatever the corpus size) and in its
     level-4 rollup pick the finest level whose ring still expects
-    ≥ 8k rows (rounded down to the even grid so the fact side explodes
-    to a handful of distinct levels). The previous two-class scheme
-    (global-average level + one hot-cell level) started sparse probes
-    far too fine — the global average is dominated by the cities — and
-    burned 3-4 full-table widening rounds per call; per-probe levels
-    resolve almost every probe in round 1. The ``radius_guess_deg``
-    fineness floor is gone for the same reason: local density evidence
-    beats the caller's guess, and a too-fine floor only adds rounds.
+    ≥ 8k rows. A global-average level starts sparse probes far too
+    fine (the average is dominated by the cities) and burns 3-4
+    full-table widening rounds per call; per-probe levels resolve
+    almost every probe in the first round. ``radius_guess_deg`` is
+    accepted for signature parity with ``knn_join`` and not used:
+    local density evidence beats the caller's guess, and a too-fine
+    floor only adds rounds.
 
-    Scale shape: round 1 is ONE scan of the fact side (exploded to its
-    ancestors at exactly the active levels — cell ids encode their
-    level so one equi-join column suffices), one shuffle join, one
-    window pass that also computes the resolution flags (no separate
-    aggregation shuffle). Unresolved tails ≤ 2048 probes switch to the
-    driver-literal path: rings in numpy, a broadcast candidate frame,
-    and the merged-range OR-of-BETWEEN pushdown pruning the fact scan
-    (knn_join's shape). Driver traffic = the bounded histogram up
-    front, one ≤31-row level histogram per round, and the tail probes
-    once they fit the literal threshold.
+    Scale shape: one action first collects at most
+    ``_TAIL_COLLECT_MAX`` + 1 probe rows, and the probe count picks the
+    regime.
+
+    - Literal regime (≤ ``_TAIL_COLLECT_MAX`` probes, e.g. a streaming
+      micro-batch): start levels are computed on the driver, and every
+      round is driver-literal — rings in numpy, a broadcast candidate
+      frame, the merged-range OR-of-BETWEEN pushdown pruning the fact
+      scan (knn_join's shape), one ≤ |probes|-row flag collect per
+      unresolved round. The probe source is read once, and no Python
+      worker runs.
+    - Relational regime (more probes): the first round is ONE scan of
+      the fact side (exploded to its ancestors at exactly the active
+      levels — cell ids encode their level so one equi-join column
+      suffices), one pandas-UDF stage for start levels and rings, one
+      shuffle join, and one window pass that also computes the
+      resolution flags. Each round sends a ≤ 31-row level histogram to
+      the driver; once the unresolved tail fits ``_TAIL_COLLECT_MAX``
+      it is collected and finishes in the literal rounds.
+
+    Driver traffic is the bounded histogram up front, plus the probes
+    themselves only once they number at most ``_TAIL_COLLECT_MAX``.
     """
+    with _knn_join_df_lazy(
+        df, queries, kk,
+        lat_col=lat_col, lng_col=lng_col, id_col=id_col,
+        query_id_col=query_id_col, qlat_col=qlat_col, qlng_col=qlng_col,
+        max_widen=max_widen, stats=stats, n_rows=n_rows,
+    ) as out:
+        # ≤ |probes|·k rows; the round frames are released on exit
+        return out.localCheckpoint(eager=True)
+
+
+@contextlib.contextmanager
+def _knn_join_df_lazy(
+    df: DataFrame,
+    queries: DataFrame,
+    kk: int,
+    lat_col: str = "lat",
+    lng_col: str = "lng",
+    id_col: str = "image_id",
+    query_id_col: str = "query_id",
+    qlat_col: str = "qlat",
+    qlng_col: str = "qlng",
+    max_widen: int = 12,
+    stats: DataFrame | None = None,
+    n_rows: int | None = None,
+):
+    """``knn_join_df``'s body: yields its result as a lazy DataFrame
+    over the persisted round frames and unpersists them on exit, so the
+    caller must materialize the result inside the ``with`` block (a
+    checkpoint, or a sink write that reads it once)."""
     empty_out = df.select(
         F.lit(0).cast("long").alias(query_id_col),
         F.lit(0).cast("int").alias("rank"),
@@ -476,32 +539,21 @@ def knn_join_df(
     # under a live frame — and even then start levels are pure
     # performance, never correctness.
     src = stats if stats is not None else df
-    cached = _L7_HIST.get(src)
-    if cached is not None:
-        cells7, n7 = cached
-    elif stats is None:
-        hist_rows = (
-            df.groupBy(s2_parent("cell_id", L_DET).alias("__p"))
-            .count()
-            .collect()
-        )  # bounded: ≤ 6·4^7 = 98,304 rows whatever |df| is
-        cells7 = np.array([r["__p"] for r in hist_rows], dtype=np.int64).view(
-            np.uint64
+    tables = _L7_HIST.get(src)
+    if tables is None:
+        if stats is None:
+            hist = df.groupBy(s2_parent("cell_id", L_DET).alias("__p")).count()
+        else:
+            hist = stats.where(F.col("level") == F.lit(L_DET)).select(
+                F.col("cell").alias("__p"), F.col("n").alias("count")
+            )
+        hist_rows = hist.collect()  # bounded: ≤ 6·4^7 = 98,304 rows whatever |df| is
+        tables = _density_tables(
+            np.array([r["__p"] for r in hist_rows], dtype=np.int64).view(np.uint64),
+            np.array([r["count"] for r in hist_rows], dtype=np.int64),
         )
-        n7 = np.array([r["count"] for r in hist_rows], dtype=np.int64)
-        _L7_HIST[df] = (cells7, n7)
-    else:
-        hist_rows = (
-            stats.where(F.col("level") == F.lit(L_DET))
-            .select(F.col("cell").alias("__p"), F.col("n").alias("count"))
-            .collect()
-        )  # bounded the same way — the stats table's own bound
-        cells7 = np.array([r["__p"] for r in hist_rows], dtype=np.int64).view(
-            np.uint64
-        )
-        n7 = np.array([r["count"] for r in hist_rows], dtype=np.int64)
-        _L7_HIST[stats] = (cells7, n7)
-    n_tot = int(n7.sum()) if len(n7) else 0
+        _L7_HIST[src] = tables
+    n_tot = int(tables[1].sum())
     if stats is not None and n_tot == 0:
         # empty stats — including an entirely empty frame — can never
         # seed start levels; raising the build hint here beats the
@@ -528,36 +580,110 @@ def knn_join_df(
                 f"injected stats imply {n_tot} rows vs n_rows={n_rows} "
                 f"({ratio:.2f}x) — stale stats only slow queries down, "
                 f"but consider rebuilding",
-                stacklevel=2,
+                stacklevel=4,  # past contextlib's __enter__ and knn_join_df
             )
     if n_tot == 0:
         # empty fact table: the exact k-nearest result is empty for
         # every probe — no join round can produce a row
-        return empty_out
+        yield empty_out
+        return
 
     spark = df.sparkSession
+    cols = (
+        lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col,
+        queries.schema[query_id_col].dataType,
+    )
+    persisted: list[DataFrame] = []
+    try:
+        # THE regime decision: one action reads at most one row past the
+        # literal cap
+        head = (
+            queries.select(query_id_col, qlat_col, qlng_col)
+            .limit(_TAIL_COLLECT_MAX + 1)
+            .collect()
+        )
+        if len(head) <= _TAIL_COLLECT_MAX:
+            # Measured on perfbench spatial_query (100 probes, k = 5,
+            # local[4] on a 4-core VM): 10 Spark jobs a call against 22
+            # for a relational round 0 + tail, a p50 of 2.7-3.1 s
+            # against 4.7-5.2 s, and no Python-worker crossing. An
+            # all-literal shortcut once measured 1.5× slower, while
+            # literal frames were still pickled Python RDDs.
+            qlat = np.array([r[1] for r in head], dtype=np.float64)  # NULL → NaN
+            qlng = np.array([r[2] for r in head], dtype=np.float64)
+            ok = ~(np.isnan(qlat) | np.isnan(qlng))
+            qids = [r[0] for r, keep in zip(head, ok) if keep]
+            qlat, qlng = qlat[ok], qlng[ok]
+            slices = (
+                _tail_literal_rounds(
+                    spark, df, qids, qlat, qlng,
+                    _probe_start_levels(qlat, qlng, tables, target),
+                    np.zeros(len(qids), dtype=bool),
+                    kk, 0, max_widen, persisted, tables, *cols,
+                )
+                if qids
+                else []
+            )
+        else:
+            slices = _relational_rounds(
+                spark, df, queries, kk, max_widen, persisted, src, tables, *cols
+            )
+        out = _union_all(slices) if slices else empty_out
+        yield out.select(
+            query_id_col,
+            F.col("rank").cast("int").alias("rank"),
+            id_col,
+            "dist_chord2",
+        )
+    finally:
+        for p in persisted:
+            p.unpersist()
+
+
+def _relational_rounds(
+    spark: SparkSession,
+    df: DataFrame,
+    queries: DataFrame,
+    kk: int,
+    max_widen: int,
+    persisted: list[DataFrame],
+    src: DataFrame,
+    tables: tuple,
+    lat_col: str,
+    lng_col: str,
+    id_col: str,
+    query_id_col: str,
+    qlat_col: str,
+    qlng_col: str,
+    qid_type,
+) -> list[DataFrame]:
+    """knn_join_df's relational regime: widening rounds over the probe
+    DataFrame on the executors until the unresolved tail fits
+    ``_TAIL_COLLECT_MAX``, which finishes in ``_tail_literal_rounds``.
+    Appends every frame it persists to ``persisted``; returns the
+    accepted rank slices."""
+    target = 8 * kk
     # the prep UDF closure carries the histogram (~MBs at full level-7
     # occupancy) — reuse the constructed UDF across repeat calls with
     # the same source frame and k instead of re-pickling per call
     prep_cache = _PREP_UDFS.setdefault(src, {})
     prep = prep_cache.get(target)
     if prep is None:
-        prep = _probe_prep_udf(cells7, n7, target)
+        prep = _probe_prep_udf(tables, target)
         prep_cache[target] = prep
-    base = queries.select(
-        query_id_col, qlat_col, qlng_col
-    ).withColumn("__p", prep(F.col(qlat_col), F.col(qlng_col)))
+    valid = [F.col(c).isNotNull() & ~F.isnan(c) for c in (qlat_col, qlng_col)]
+    base = (
+        queries.select(query_id_col, qlat_col, qlng_col)
+        .where(valid[0] & valid[1])
+        .withColumn("__p", prep(F.col(qlat_col), F.col(qlng_col)))
+    )
     pending = base.select(
         query_id_col, qlat_col, qlng_col,
         F.col("__p.jl").alias("__jl"),
         F.col("__p.ring").alias("__ring"),
     ).persist()
-    # (an all-literal shortcut for small probe sets was benchmarked
-    # 1.5× SLOWER than the relational round at streaming batch sizes:
-    # scattered rings defeat the range pushdown and per-round driver
-    # orchestration beats the saving)
+    persisted.append(pending)
     sel = [query_id_col, "rank", id_col, "dist_chord2"]
-    persisted: list[DataFrame] = [pending]
     slices: list[DataFrame] = []
     attempt = 0
     # round 0 never collects the level set: the fact side derives it
@@ -565,125 +691,118 @@ def knn_join_df(
     # fewer driver action per call; later rounds know it from the
     # round counts
     active: list[int] | None = None
-    try:
-        while True:
+    while True:
+        cand = pending.select(
+            query_id_col, qlat_col, qlng_col, "__jl",
+            F.explode("__ring").alias("__tc"),
+        )
+        lv_arg = (
+            pending.select(F.col("__jl").alias("__lvl")).distinct()
+            if active is None
+            else active
+        )
+        ranked = _attempt_var(
+            df, cand, kk, lv_arg,
+            lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col,
+        ).persist()
+        persisted.append(ranked)
+        if (
+            active is not None and all(lv == 0 for lv in active)
+        ) or attempt >= max_widen:
+            slices.append(ranked.select(*sel))
+            break
+        slices.append(ranked.where(F.col("__ok")).select(*sel))
+        # kd-DERIVED widening: a probe that found >= k rows but whose
+        # k-th distance exceeds the ring's coverage retries at the
+        # finest level whose one-ring contract covers that distance —
+        # the new ring provably holds every point within kd, and the
+        # new k-th can only shrink, so that retry RESOLVES by
+        # construction (one extra round, never a widening walk).
+        # Probes with < k rows are in genuinely sparse territory and
+        # jump 4 levels (256× ring area) instead. ONE aggregation
+        # serves both the resolved-id set and the kd lookup.
+        pstats = ranked.groupBy(query_id_col).agg(
+            F.max("__ok").alias("__pok"),
+            F.max("__n").alias("__pn"),
+            F.max("__kd").alias("__pkd"),
+        )
+        nxt = (
+            pending.where(F.col("__jl") > 0)
+            .join(pstats, query_id_col, "left")
+            .where(~F.coalesce(F.col("__pok"), F.lit(False)))
+            .withColumn(
+                "__jl",
+                F.when(
+                    F.col("__pn") >= kk,
+                    F.greatest(
+                        F.lit(0),
+                        F.least(
+                            F.col("__jl") - 1,
+                            radius_level_expr(F.col("__pkd")),
+                        ),
+                    ),
+                ).otherwise(F.greatest(F.lit(0), F.col("__jl") - F.lit(4))),
+            )
+            # a kd-derived retry RESOLVES by construction (the ring
+            # provably covers the previous k-th distance) — carry the
+            # flag so the next round can skip its resolve-check job
+            .withColumn(
+                "__gtd",
+                (F.coalesce(F.col("__pn"), F.lit(0)) >= kk)
+                & F.col("__pkd").isNotNull(),
+            )
+            .drop("__pok", "__pn", "__pkd")
+        ).persist()
+        persisted.append(nxt)
+        # THE round action: ≤ 31 rows to the driver (level histogram of
+        # the unresolved tail); materializes this round's pipeline
+        counts = nxt.groupBy("__jl").agg(
+            F.count("*").alias("count"),
+            F.min(F.col("__gtd").cast("int")).alias("g"),
+        ).collect()
+        if not counts:
+            break
+        n_pend = sum(int(r["count"]) for r in counts)
+        active = sorted(int(r["__jl"]) for r in counts)
+        all_gtd = all(int(r["g"]) == 1 for r in counts)
+        attempt += 1
+        if n_pend <= _TAIL_COLLECT_MAX:
+            rows = nxt.select(
+                query_id_col, qlat_col, qlng_col, "__jl", "__gtd"
+            ).collect()
+            slices.extend(
+                _tail_literal_rounds(
+                    spark, df,
+                    [r[0] for r in rows],
+                    np.array([r[1] for r in rows], dtype=np.float64),
+                    np.array([r[2] for r in rows], dtype=np.float64),
+                    np.array([r[3] for r in rows], dtype=np.int64),
+                    np.array([bool(r[4]) for r in rows]),
+                    kk, attempt, max_widen, persisted, tables,
+                    lat_col, lng_col, id_col,
+                    query_id_col, qlat_col, qlng_col, qid_type,
+                )
+            )
+            break
+        pending = nxt.drop("__ring").withColumn(
+            "__ring", _ring_udf(qlat_col, qlng_col, F.col("__jl"))
+        )
+        if all_gtd:
+            # every remaining probe retries at its kd-derived level —
+            # the round is final by construction: emit and stop
             cand = pending.select(
                 query_id_col, qlat_col, qlng_col, "__jl",
                 F.explode("__ring").alias("__tc"),
             )
-            lv_arg = (
-                pending.select(F.col("__jl").alias("__lvl")).distinct()
-                if active is None
-                else active
+            slices.append(
+                _attempt_var(
+                    df, cand, kk, active,
+                    lat_col, lng_col, id_col,
+                    query_id_col, qlat_col, qlng_col,
+                ).select(*sel)
             )
-            ranked = _attempt_var(
-                df, cand, kk, lv_arg,
-                lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col,
-            ).persist()
-            persisted.append(ranked)
-            if (
-                active is not None and all(lv == 0 for lv in active)
-            ) or attempt >= max_widen:
-                slices.append(ranked.select(*sel))
-                break
-            slices.append(ranked.where(F.col("__ok")).select(*sel))
-            # kd-DERIVED widening: a probe that found >= k rows but whose
-            # k-th distance exceeds the ring's coverage retries at the
-            # finest level whose one-ring contract covers that distance —
-            # the new ring provably holds every point within kd, and the
-            # new k-th can only shrink, so that retry RESOLVES by
-            # construction (one extra round, never a widening walk).
-            # Probes with < k rows are in genuinely sparse territory and
-            # jump 4 levels (256× ring area) instead. ONE aggregation
-            # serves both the resolved-id set and the kd lookup.
-            pstats = ranked.groupBy(query_id_col).agg(
-                F.max("__ok").alias("__pok"),
-                F.max("__n").alias("__pn"),
-                F.max("__kd").alias("__pkd"),
-            )
-            nxt = (
-                pending.where(F.col("__jl") > 0)
-                .join(pstats, query_id_col, "left")
-                .where(~F.coalesce(F.col("__pok"), F.lit(False)))
-                .withColumn(
-                    "__jl",
-                    F.when(
-                        F.col("__pn") >= kk,
-                        F.greatest(
-                            F.lit(0),
-                            F.least(
-                                F.col("__jl") - 1,
-                                radius_level_expr(F.col("__pkd")),
-                            ),
-                        ),
-                    ).otherwise(F.greatest(F.lit(0), F.col("__jl") - F.lit(4))),
-                )
-                # a kd-derived retry RESOLVES by construction (the ring
-                # provably covers the previous k-th distance) — carry the
-                # flag so the next round can skip its resolve-check job
-                .withColumn(
-                    "__gtd",
-                    (F.coalesce(F.col("__pn"), F.lit(0)) >= kk)
-                    & F.col("__pkd").isNotNull(),
-                )
-                .drop("__pok", "__pn", "__pkd")
-            ).persist()
-            persisted.append(nxt)
-            # THE round action: ≤ 31 rows to the driver (level histogram of
-            # the unresolved tail); materializes this round's pipeline
-            counts = nxt.groupBy("__jl").agg(
-                F.count("*").alias("count"),
-                F.min(F.col("__gtd").cast("int")).alias("g"),
-            ).collect()
-            if not counts:
-                break
-            n_pend = sum(int(r["count"]) for r in counts)
-            active = sorted(int(r["__jl"]) for r in counts)
-            all_gtd = all(int(r["g"]) == 1 for r in counts)
-            attempt += 1
-            if n_pend <= _TAIL_COLLECT_MAX:
-                rows = nxt.select(
-                    query_id_col, qlat_col, qlng_col, "__jl", "__gtd"
-                ).collect()
-                slices.extend(
-                    _tail_literal_rounds(
-                        spark, df, rows, kk, attempt, max_widen, persisted,
-                        lat_col, lng_col, id_col,
-                        query_id_col, qlat_col, qlng_col,
-                        queries.schema[query_id_col].dataType,
-                        cells7, n7,
-                    )
-                )
-                break
-            pending = nxt.drop("__ring").withColumn(
-                "__ring", _ring_udf(qlat_col, qlng_col, F.col("__jl"))
-            )
-            if all_gtd:
-                # every remaining probe retries at its kd-derived level —
-                # the round is final by construction: emit and stop
-                cand = pending.select(
-                    query_id_col, qlat_col, qlng_col, "__jl",
-                    F.explode("__ring").alias("__tc"),
-                )
-                slices.append(
-                    _attempt_var(
-                        df, cand, kk, active,
-                        lat_col, lng_col, id_col,
-                        query_id_col, qlat_col, qlng_col,
-                    ).select(*sel)
-                )
-                break
-        out = slices[0] if len(slices) == 1 else _union_all(slices)
-        out = out.select(
-            query_id_col,
-            F.col("rank").cast("int").alias("rank"),
-            id_col,
-            "dist_chord2",
-        ).localCheckpoint(eager=True)  # ≤ |probes|·k rows; frees the caches below
-    finally:
-        for p in persisted:
-            p.unpersist()
-    return out
+            break
+    return slices
 
 
 def _union_all(frames: list[DataFrame]) -> DataFrame:
@@ -696,11 +815,16 @@ def _union_all(frames: list[DataFrame]) -> DataFrame:
 def _tail_literal_rounds(
     spark: SparkSession,
     df: DataFrame,
-    rows: list,
+    qids: list,
+    qlat: np.ndarray,
+    qlng: np.ndarray,
+    jl: np.ndarray,
+    gtd: np.ndarray,
     kk: int,
     attempt0: int,
     max_widen: int,
     persisted: list[DataFrame],
+    tables: tuple,
     lat_col: str,
     lng_col: str,
     id_col: str,
@@ -708,16 +832,18 @@ def _tail_literal_rounds(
     qlat_col: str,
     qlng_col: str,
     qid_type,
-    cells7: np.ndarray,
-    n7: np.ndarray,
 ) -> list[DataFrame]:
-    """Driver-literal widening for small unresolved tails (≤
-    _TAIL_COLLECT_MAX probes): rings computed in numpy, the candidate
-    frame broadcast, and the fact scan pruned with the merged-range
-    OR-of-BETWEEN pushdown (knn_join's shape — at 100 TB a tail round
-    reads only the row groups its rings cover instead of rescanning
-    the table). Same ring/coverage contract as the relational rounds,
-    so results are identical; returns the accepted rank slices."""
+    """Driver-literal widening for at most _TAIL_COLLECT_MAX probes —
+    a whole small probe set from round 0, or the unresolved tail of the
+    relational rounds: rings computed in numpy, the candidate frame
+    broadcast, and the fact scan pruned with the merged-range
+    OR-of-BETWEEN pushdown (knn_join's shape — at 100 TB a round reads
+    only the row groups its rings cover instead of rescanning the
+    table). ``jl`` holds each probe's level for round ``attempt0`` and
+    ``gtd`` whether that level resolves it by construction; both are
+    updated in place. Same ring/coverage contract as the relational
+    rounds, so results are identical; returns the accepted rank
+    slices."""
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -726,11 +852,6 @@ def _tail_literal_rounds(
         StructType,
     )
 
-    qids = [r[0] for r in rows]
-    qlat = np.array([r[1] for r in rows], dtype=np.float64)
-    qlng = np.array([r[2] for r in rows], dtype=np.float64)
-    jl = np.array([r[3] for r in rows], dtype=np.int64)
-    gtd = np.array([bool(r[4]) for r in rows])
     cand_schema = StructType(
         [
             StructField(query_id_col, qid_type),
@@ -747,9 +868,8 @@ def _tail_literal_rounds(
     # searchsorted); used to pick the widened level for sparse probes
     # so the next ring PROVABLY holds >= target rows instead of
     # guessing a fixed jump
-    order7 = np.argsort(cells7)
-    c7sorted = cells7[order7]
-    pref7 = np.concatenate([[0], np.cumsum(n7[order7].astype(np.int64))])
+    c7sorted = tables[0]
+    pref7 = np.concatenate([[0], np.cumsum(tables[1])])
 
     def _exact_ring_rows(ring: np.ndarray) -> int:
         u = ring.view(np.uint64)
@@ -794,7 +914,8 @@ def _tail_literal_rounds(
             # kd-derived levels resolve by construction (the ring
             # provably covers each probe's previous k-th distance), so
             # an all-guaranteed round needs no resolve-check job: emit
-            # lazily and let the final checkpoint materialize it once
+            # lazily and let the caller's checkpoint or sink write
+            # materialize it once
             slices.append(ranked.select(*sel))
             break
         ranked = ranked.persist()

@@ -311,29 +311,33 @@ def streaming_knn(
     reference semantics: point_index.rs kNN).
 
     Unlike the fixed-radius join, kNN is NOT a static plan: the batch
-    operator widens data-dependently (left_anti retry rounds until
-    every probe proves coverage), which Structured Streaming cannot
-    express as one continuous query. The sanctioned lift is
-    ``foreachBatch``: each micro-batch of probes runs the exact batch
-    operator — identical semantics row-for-row — and lands in an
-    IDEMPOTENT sink: results are written with dynamic partition
-    overwrite keyed by the micro-batch id, so a replayed batch (after
-    failure, before the offset commit) overwrites its own partition
-    and the sink stays exactly-once while the engine guarantees only
-    at-least-once execution (the ``plans.lineage`` resume discipline,
-    applied to a stream).
+    operator widens data-dependently (retry rounds until every probe
+    proves coverage), which Structured Streaming cannot express as one
+    continuous query. The sanctioned lift is ``foreachBatch``: each
+    micro-batch runs knn_join_df's own body (``_knn_join_df_lazy``) —
+    identical semantics row-for-row — and writes its lazy result
+    straight into an IDEMPOTENT sink, without the batch operator's
+    checkpoint. A micro-batch of at most ``_TAIL_COLLECT_MAX`` probes
+    takes the driver-literal regime, so it starts no Python worker.
+    Results are written with dynamic partition overwrite keyed by the
+    micro-batch id, so a replayed batch (after failure, before the
+    offset commit) overwrites its own partition and the sink stays
+    exactly-once while the engine guarantees only at-least-once
+    execution (the ``plans.lineage`` resume discipline, applied to a
+    stream).
 
     ``stats`` SHOULD be the precomputed density table
     (``plans.stats.build_cell_stats(facts, levels=(7,))``, maintained
     at write time): with it, a micro-batch pays only its own join
     work; without it the wrapper builds the stats ONCE up front (one
-    fact scan total — never one per batch).
+    fact scan total — never one per batch). ``radius_guess_deg`` is
+    kept for signature parity with ``knn_join_df``, which ignores it.
 
     Returns the started StreamingQuery; callers using
     ``trigger={"availableNow": True}`` await termination then read
     ``sink_path`` back.
     """
-    from ..operators.knn import knn_join_df
+    from ..operators.knn import _knn_join_df_lazy
     from ..plans.stats import build_cell_stats
 
     spark = facts.sparkSession
@@ -370,24 +374,21 @@ def streaming_knn(
     )
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = knn_join_df(
-            facts, batch_df, kk,
-            radius_guess_deg=radius_guess_deg, stats=stats, **cols,
-        )
-        # the result is already materialized (knn_join_df returns a
-        # localCheckpoint) across as many partitions as the widening
-        # pipeline used — a micro-batch would commit ~64 tiny files
-        # per trigger through the dynamic-overwrite protocol; coalesce
-        # to a handful (guide §6 file sizing; no extra shuffle)
-        n_parts = out.rdd.getNumPartitions()
-        (
-            out.coalesce(max(1, min(n_parts, 4)))
-            .withColumn("__batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(sink_path)
-        )
+        # the sink write is the one read of the lazy result, made before
+        # the round frames are released: no checkpoint job and no
+        # storage block per batch. coalesce(4) keeps a micro-batch from
+        # committing one tiny file per shuffle partition through the
+        # dynamic-overwrite protocol (guide §6 file sizing); it never
+        # raises the partition count and adds no shuffle
+        with _knn_join_df_lazy(facts, batch_df, kk, stats=stats, **cols) as out:
+            (
+                out.coalesce(4)
+                .withColumn("__batch_id", F.lit(int(batch_id)))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("__batch_id")
+                .parquet(sink_path)
+            )
 
     writer = (
         probe_stream.writeStream.foreachBatch(_batch)
