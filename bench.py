@@ -202,7 +202,7 @@ def run_queries(spark, sf_dir: str, table_path: str, mult: int = 1) -> dict[str,
         iid.alias("query_id"), F.col("lat").alias("qlat"), F.col("lng").alias("qlng")
     )
     out["knn_df"], _ = timed(
-        lambda: knn_join_df(img, probes_df, 3, radius_guess_deg=2.0).count()
+        lambda: knn_join_df(img, probes_df, 3).count()
     )
 
     # REPEATED kNN workload: 3 calls each re-scanning the fact table
@@ -217,9 +217,7 @@ def run_queries(spark, sf_dir: str, table_path: str, mult: int = 1) -> dict[str,
 
     def _knn_rep(stats):
         for _ in range(3):
-            knn_join_df(
-                img, probes_rep, 3, radius_guess_deg=2.0, stats=stats
-            ).count()
+            knn_join_df(img, probes_rep, 3, stats=stats).count()
 
     # INTERLEAVED min-of-N (the skew-pair methodology): this pair is a
     # comparison, and at sf0.1 the eliminated stats scan (~0.7 s/call)
@@ -267,9 +265,7 @@ def run_queries(spark, sf_dir: str, table_path: str, mult: int = 1) -> dict[str,
         eager=True
     )
     out["mutual_knn"], _ = timed(
-        lambda: mutual_knn_pairs(
-            graph_corpus, 3, radius_guess_deg=2.0, stats=corpus_stats
-        ).count()
+        lambda: mutual_knn_pairs(graph_corpus, 3, stats=corpus_stats).count()
     )
 
     # geofence exclusion: full table, 5 caps, ancestor-equi-join
@@ -670,7 +666,7 @@ def run_queries(spark, sf_dir: str, table_path: str, mult: int = 1) -> dict[str,
         tab = {
             float(r["q"]): float(r["eps_chord2"])
             for r in suggest_eps(
-                sub, 6, quantiles=(0.25,), radius_guess_deg=2.0
+                sub, 6, quantiles=(0.25,)
             ).collect()
         }
         return tab[0.25]
@@ -703,7 +699,7 @@ def run_queries(spark, sf_dir: str, table_path: str, mult: int = 1) -> dict[str,
     out["idw"], _ = timed(
         lambda: idw_interpolate(
             facts_idw, probes_df, 3, "val",
-            radius_guess_deg=2.0, stats=stats_df, n_rows=n_images,
+            stats=stats_df, n_rows=n_images,
         )
         .agg(F.sum("est"))
         .collect()
@@ -760,7 +756,7 @@ def run_queries(spark, sf_dir: str, table_path: str, mult: int = 1) -> dict[str,
             )
             qy = streaming_knn(
                 img, stream, 3, f"{base}/out", f"{base}/ckpt",
-                stats=stats_df, radius_guess_deg=2.0,
+                stats=stats_df,
                 trigger={"availableNow": True},
             )
             assert qy.awaitTermination(600)

@@ -71,16 +71,14 @@ def main():
 
         if want("knn_df"):
             out["knn_df"], _ = timed(
-                lambda: knn_join_df(img, probes_df, 3, radius_guess_deg=2.0).count()
+                lambda: knn_join_df(img, probes_df, 3).count()
             )
 
         if want("knn_df_repeat3"):
 
             def _rep(stats):
                 for _ in range(3):
-                    knn_join_df(
-                        img, probes_rep, 3, radius_guess_deg=2.0, stats=stats
-                    ).count()
+                    knn_join_df(img, probes_rep, 3, stats=stats).count()
 
             out["knn_df_repeat3"], _ = timed(lambda: _rep(None))
             out["knn_df_repeat3_stats"], _ = timed(lambda: _rep(stats_df))
@@ -98,9 +96,7 @@ def main():
                 graph_corpus, levels=(7,)
             ).localCheckpoint(eager=True)
             out["mutual_knn"], _ = timed(
-                lambda: mutual_knn_pairs(
-                    graph_corpus, 3, radius_guess_deg=2.0, stats=corpus_stats
-                ).count()
+                lambda: mutual_knn_pairs(graph_corpus, 3, stats=corpus_stats).count()
             )
 
         sub = img.withColumn("image_id", iid).where(iid % 7 == 0)
@@ -111,7 +107,7 @@ def main():
                 tab = {
                     float(r["q"]): float(r["eps_chord2"])
                     for r in suggest_eps(
-                        sub, 6, quantiles=(0.25,), radius_guess_deg=2.0
+                        sub, 6, quantiles=(0.25,)
                     ).collect()
                 }
                 return tab[0.25]
@@ -136,7 +132,7 @@ def main():
             out["idw"], _ = timed(
                 lambda: idw_interpolate(
                     facts_idw, probes_df, 3, "val",
-                    radius_guess_deg=2.0, stats=stats_df, n_rows=n_images,
+                    stats=stats_df, n_rows=n_images,
                 )
                 .agg(F.sum("est"))
                 .collect()
@@ -269,7 +265,7 @@ def main():
                     )
                     qy = streaming_knn(
                         img, stream, 3, f"{base}/out", f"{base}/ckpt",
-                        stats=stats_df, radius_guess_deg=2.0,
+                        stats=stats_df,
                         trigger={"availableNow": True},
                     )
                     assert qy.awaitTermination(600)

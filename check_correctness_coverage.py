@@ -33,9 +33,10 @@ TWIN_COVERED_BY = {
     "bpe_tokens": "bpe_encode",        # regex stand-in for trained BPE
     "audio_match": "audio_match_wide", # demo alphabet of the same plan
     "heavy_hitters_wide": "heavy_hitters",  # join regime, same oracle
-    # same ring+rank kernels and exactness contract; test_knn_df.py pins
-    # knn_join == knn_join_df on identical probes, so the recorded
-    # 10^4-probe gate transitively gates the driver-list shape
+    # both forms run the same driver-literal engine
+    # (_tail_literal_rounds) under one exactness contract;
+    # test_knn_df.py pins knn_join == knn_join_df on identical probes,
+    # so the recorded 10^4-probe gate transitively gates the list form
     "knn": "knn_df",
     # same ring+chord kernels and threshold as the recorded self-join;
     # test_within_distance_df.py pins the two orchestrations produce

@@ -168,12 +168,18 @@ class Rect:
         lat = self.lat.intersection(o.lat)
         if lat.is_empty():
             return Rect.empty()
-        # S1 intersection: clip each endpoint into the other interval
         if not self.lng.intersects(o.lng):
             return Rect.empty()
-        lo = self.lng.lo if o.lng.contains(self.lng.lo) else o.lng.lo
-        hi = self.lng.hi if o.lng.contains(self.lng.hi) else o.lng.hi
-        return Rect(lat, S1Interval.new(lo, hi))
+        if self.lng.contains_interval(o.lng):
+            return Rect(lat, o.lng)
+        if o.lng.contains_interval(self.lng):
+            return Rect(lat, self.lng)
+        # partial overlap: clip at the other interval's end. When each
+        # holds both ends of the other, the overlap is two arcs; this
+        # keeps the one that starts at self.lo, which lies in both
+        if o.lng.contains(self.lng.lo):
+            return Rect(lat, S1Interval.new(self.lng.lo, o.lng.hi))
+        return Rect(lat, S1Interval.new(o.lng.lo, self.lng.hi))
 
     def area(self) -> float:
         """Surface area on the unit sphere (ref rect.rs)."""

@@ -362,14 +362,21 @@ def max_dist2_point_segment(x, a, b) -> np.ndarray:
     b = np.atleast_2d(np.asarray(b, dtype=np.float64))
     n = max(x.shape[0], a.shape[0], b.shape[0])
     x, a, b = (np.broadcast_to(v, (n, 3)) for v in (x, a, b))
-    da = _dot(x - a, x - a)
-    db = _dot(x - b, x - b)
+    # endpoint chord² summed x² + y² + z² left to right, as the
+    # reference's Point::norm2, so the max clamps to the same rounding
+    # of an endpoint distance that a plain norm of x − a gives
+    va, vb = x - a, x - b
+    da = va[:, 0] * va[:, 0] + va[:, 1] * va[:, 1] + va[:, 2] * va[:, 2]
+    db = vb[:, 0] * vb[:, 0] + vb[:, 1] * vb[:, 1] + vb[:, 2] * vb[:, 2]
     d = np.maximum(da, db)
     over_right = d > 2.0
     if np.any(over_right):
         d_anti = dist2_point_segment(-x[over_right], a[over_right], b[over_right])
         d = d.copy()
-        d[over_right] = 4.0 - d_anti
+        # the true max is never below an endpoint distance; the
+        # STRAIGHT − min(−x) reflection can round a few ulps under it
+        # when the max sits at an endpoint near the antipode
+        d[over_right] = np.maximum(d[over_right], 4.0 - d_anti)
     return d
 
 

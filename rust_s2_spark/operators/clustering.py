@@ -124,7 +124,6 @@ def kth_nn_chord2(
     id_col: str = "image_id",
     lat_col: str = "lat",
     lng_col: str = "lng",
-    radius_guess_deg: float = 1.0,
     stats: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -146,7 +145,6 @@ def kth_nn_chord2(
     )
     nn = knn_join_df(
         df, probes, kk + 1,
-        radius_guess_deg=radius_guess_deg,
         lat_col=lat_col, lng_col=lng_col, id_col=id_col,
         stats=stats, n_rows=n_rows,
     )
@@ -171,7 +169,6 @@ def suggest_eps(
     id_col: str = "image_id",
     lat_col: str = "lat",
     lng_col: str = "lng",
-    radius_guess_deg: float = 1.0,
     stats: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -203,7 +200,7 @@ def suggest_eps(
         raise ValueError(f"quantiles must be in (0, 1]: {quantiles}")
     kd = kth_nn_chord2(
         df, kk, id_col=id_col, lat_col=lat_col, lng_col=lng_col,
-        radius_guess_deg=radius_guess_deg, stats=stats, n_rows=n_rows,
+        stats=stats, n_rows=n_rows,
     )
     # floor(log2(v)) as the bin key; exact zeros get their own bin
     # below every representable exponent

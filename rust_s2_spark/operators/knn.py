@@ -9,15 +9,20 @@ a probe's top-k is final only when its k-th distance is inside that
 bound (``_safe_chord2``). Otherwise the ring coarsens and only the
 unresolved probes retry; level 0 covers the sphere, so widening ends.
 
-- ``knn_join``: probes are a driver-side list. Each widening attempt
-  broadcasts the rings as a literal frame and prunes the fact scan to
-  the rings' merged leaf ranges.
-- ``knn_join_df``: probes are a DataFrame. Each probe starts at a level
-  read off the bounded level-7 density histogram. Up to
-  ``_TAIL_COLLECT_MAX`` probes run the driver-literal rounds from the
-  start; larger probe sets run relational rounds on the executors and
-  hand their unresolved tail to the same literal rounds.
-- ``mutual_knn_pairs`` and ``idw_interpolate`` compose ``knn_join_df``.
+One driver-literal engine, ``_tail_literal_rounds``, runs the widening
+rounds: rings computed in numpy and broadcast as a literal frame, the
+fact scan pruned to the rings' merged leaf ranges, and the next ring of
+a probe that found fewer than k rows sized off the bounded level-7
+density histogram. It has three callers:
+
+- ``knn_join``: probes are a driver-side list, all starting at the
+  level that ``radius_guess_deg`` gives.
+- ``knn_join_df`` with at most ``_TAIL_COLLECT_MAX`` probes: each probe
+  starts at a level read off the density histogram.
+- ``knn_join_df``'s relational rounds, for larger probe sets: they run
+  on the executors and hand their unresolved tail to the engine.
+
+``mutual_knn_pairs`` and ``idw_interpolate`` compose ``knn_join_df``.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from __future__ import annotations
 import contextlib
 import math
 import weakref
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -100,104 +106,73 @@ def knn_join(
     lat_col: str = "lat",
     lng_col: str = "lng",
     id_col: str = "image_id",
-    max_widen: int = 12,
-    biased_col: str = "cell_id_biased",
 ) -> DataFrame:
     """(query_id, rank, image_id, dist_chord2) of the exact k nearest
     rows per query point. Deterministic tie-break on id.
 
-    When ``biased_col`` exists on ``df``, each widening attempt pushes the
-    candidate rings' merged leaf ranges as an OR-of-BETWEEN top-level
-    conjunct, so the attempt reads only matching row groups of the
-    Hilbert-sorted table (PushedFilters) instead of rescanning it.
+    Every probe starts at the finest level whose cell min-width covers
+    ``radius_guess_deg`` and runs the driver-literal engine
+    (``_tail_literal_rounds``) from its first round. The level-7
+    histogram of ``df`` is read only when a round leaves a probe with
+    fewer than ``kk`` rows and the engine must size that probe's next
+    ring (memoized per frame in ``_L7_HIST``), so a call whose probes
+    all sit in dense territory reads no histogram.
+
+    A query point whose lat or lng is None or NaN has no nearest
+    neighbours and returns no rows, as in ``knn_join_df``.
 
     The returned DataFrame is eagerly materialized (localCheckpoint) —
     at most ``len(query_points) * kk`` rows — so no intermediate caches
     stay pinned in executor memory after the call returns.
     """
-    if not query_points:
+    from pyspark.sql.types import LongType
+
+    qids, qlat, qlng = _probe_arrays(query_points)
+    level = max(0, min(30, metrics.MIN_WIDTH.max_level(math.radians(radius_guess_deg))))
+    persisted: list[DataFrame] = []
+    try:
+        slices = _tail_literal_rounds(
+            spark, df, qids, qlat, qlng,
+            np.full(len(qids), level, dtype=np.int64),
+            np.zeros(len(qids), dtype=bool),
+            kk, 0, persisted, lambda: _level7_tables(df),
+            lat_col, lng_col, id_col, "query_id", "qlat", "qlng", LongType(),
+        )
+        return _ranked_out(slices, df, "query_id", id_col).localCheckpoint(eager=True)
+    finally:
+        for p in persisted:
+            p.unpersist()
+
+
+def _probe_arrays(rows) -> tuple[list, np.ndarray, np.ndarray]:
+    """(ids, lat, lng) of the (id, lat, lng) probe rows with both
+    coordinates set. A None coordinate reads NaN in float64, and a probe
+    with a NaN coordinate has no nearest neighbours, so it is dropped
+    here, before any cell id is computed."""
+    lat = np.array([r[1] for r in rows], dtype=np.float64)
+    lng = np.array([r[2] for r in rows], dtype=np.float64)
+    ok = ~(np.isnan(lat) | np.isnan(lng))
+    return [r[0] for r, keep in zip(rows, ok) if keep], lat[ok], lng[ok]
+
+
+def _ranked_out(
+    slices: list[DataFrame], df: DataFrame, query_id_col: str, id_col: str
+) -> DataFrame:
+    """The union of the accepted rank slices as (query_id, rank int, id,
+    dist_chord2); an empty frame of that schema when there are none."""
+    if not slices:
         return df.select(
-            F.lit(0).cast("long").alias("query_id"),
+            F.lit(0).cast("long").alias(query_id_col),
             F.lit(0).cast("int").alias("rank"),
             F.col(id_col),
             F.lit(0.0).alias("dist_chord2"),
         ).limit(0)
-    qids = np.array([q[0] for q in query_points], dtype=np.int64)
-    qlat = np.array([q[1] for q in query_points], dtype=np.float64)
-    qlng = np.array([q[2] for q in query_points], dtype=np.float64)
-
-    level = metrics.MIN_WIDTH.max_level(math.radians(radius_guess_deg))
-    level = max(0, min(30, level))
-
-    # Distributed assembly: ranked rows never leave the executors. Per
-    # widening attempt the driver collects ONE aggregate row per pending
-    # query (n found, k-th distance) — the same cardinality as the
-    # query_points list the caller already holds — decides which queries
-    # are resolved, and keeps the resolved slice as a persisted DataFrame.
-    # The returned result is the lazy union of those slices.
-    resolved: DataFrame | None = None
-    persisted: list[DataFrame] = []
-    pending = np.arange(len(qids))
-    attempt = 0
-    try:
-        while len(pending) > 0:
-            lvl = max(0, level - 2 * attempt)
-            cand = _ring_cells_np(qlat[pending], qlng[pending], lvl)
-            rep = np.repeat(pending, [len(c) for c in cand])
-            cand_df = local_frame(
-                spark,
-                [qids[rep], qlat[rep], qlng[rep], np.concatenate(cand)],
-                "query_id long, qlat double, qlng double, __tc long",
-            )
-            src = _pushdown_candidate_ranges(df, cand, lvl, biased_col)
-            scored = _ring_join(
-                src, F.broadcast(cand_df), lvl,
-                id_col, lat_col, lng_col, "cell_id", "qlat", "qlng",
-            )
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("dist_chord2").asc(), F.col(id_col).asc()
-            )
-            ranked = (
-                scored.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= kk)
-                .select("query_id", "rank", id_col, "dist_chord2")
-                .persist()
-            )
-            persisted.append(ranked)
-            # a query is final when it found k results AND the k-th distance
-            # is inside the ring's guaranteed coverage radius
-            safe = _safe_chord2(lvl)
-            is_last = lvl == 0 or attempt >= max_widen
-            if is_last:
-                done_ids = {int(q) for q in qids[pending]}
-            else:
-                stats = ranked.groupBy("query_id").agg(
-                    F.count("*").alias("n"), F.max("dist_chord2").alias("dmax")
-                ).collect()  # ≤ |pending| rows: bounded by the driver-side query list
-                done_ids = {
-                    int(r["query_id"])
-                    for r in stats
-                    if r["n"] >= kk and r["dmax"] <= safe
-                }
-            if done_ids:
-                done_df = local_frame(spark, [sorted(done_ids)], "query_id long")
-                slice_df = ranked.join(F.broadcast(done_df), "query_id", "left_semi")
-                resolved = (
-                    slice_df if resolved is None else resolved.unionByName(slice_df)
-                )
-            pending = pending[[int(q) not in done_ids for q in qids[pending]]]
-            attempt += 1
-        assert resolved is not None
-        out = resolved.select(
-            "query_id",
-            F.col("rank").cast("int").alias("rank"),
-            id_col,
-            "dist_chord2",
-        ).localCheckpoint(eager=True)  # ≤ |queries|·k rows, frees the caches below
-    finally:
-        for p in persisted:
-            p.unpersist()
-    return out
+    out = slices[0]
+    for f in slices[1:]:
+        out = out.unionByName(f)
+    return out.select(
+        query_id_col, F.col("rank").cast("int").alias("rank"), id_col, "dist_chord2"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -207,7 +182,7 @@ def knn_join(
 # driver-literal rounds), the parent equi-join co-locates with the fact
 # table's cell partitioning, and widening retries only the unresolved
 # probes; reference parity: same exactness contract as knn_join
-# (point_index.rs kNN semantics), different orchestration shape.
+# (point_index.rs kNN semantics).
 
 
 # The one regime threshold of knn_join_df: a probe set, or an unresolved
@@ -216,6 +191,8 @@ def knn_join(
 # broadcast, fact scan pruned via the merged-range pushdown) instead of
 # a relational pass over the probe pipeline.
 _TAIL_COLLECT_MAX = 2048
+# after this many widening rounds the next round is emitted as final
+_MAX_WIDEN = 12
 _LOG4 = math.log(4.0)
 
 
@@ -354,31 +331,30 @@ def _attempt_var(
     over probes carrying per-row ring levels — ``cand`` = (query_id,
     qlat, qlng, __jl, __tc) with __tc the ring cells at each probe's
     own level — then window rank ≤ kk plus the resolution flags
-    computed IN the same window pass (no extra shuffle): __n =
-    candidate count, __kd = k-th distance, __ok = resolved under the
-    _safe_chord2 coverage contract (level-0 probes are always final —
-    their ring is the whole sphere)."""
+    computed on the kept rows in the same partitioning (no extra
+    shuffle): __n = rows kept (min(candidates, kk), so __n ≥ kk exactly
+    when the ring held k rows), __kd = k-th distance, __ok = resolved
+    under the _safe_chord2 coverage contract (level-0 probes are always
+    final — their ring is the whole sphere)."""
     scored = _ring_join(
         df, cand, active, id_col, lat_col, lng_col, "cell_id", qlat_col, qlng_col
     )
-    # partitioned by (probe, attempted level): in the relational rounds
-    # each probe carries ONE level so this equals partitioning by probe;
-    # the literal tail attempts TWO levels per probe in one pass and
-    # resolves each class independently (any resolved class holds the
-    # exact top-k, so classes are interchangeable on success)
+    # partitioned by (probe, attempted level): every round, relational
+    # or literal, attempts ONE level per probe, so this equals
+    # partitioning by probe
     w_rank = Window.partitionBy(query_id_col, "__jl").orderBy(
         F.col("dist_chord2").asc(), F.col(id_col).asc()
     )
     w_all = Window.partitionBy(query_id_col, "__jl")
     safe_arr = F.array(*[F.lit(_safe_chord2(lv)) for lv in range(31)])
+    # the rank filter sits right on the row_number window, so Spark
+    # keeps each probe's top k per partition before the shuffle
+    # (WindowGroupLimit); the flags then see at most k rows a probe
     return (
         scored.withColumn("rank", F.row_number().over(w_rank))
-        .withColumn("__n", F.count("*").over(w_all))
-        .withColumn(
-            "__kd",
-            F.max(F.when(F.col("rank") <= kk, F.col("dist_chord2"))).over(w_all),
-        )
         .where(F.col("rank") <= kk)
+        .withColumn("__n", F.count("*").over(w_all))
+        .withColumn("__kd", F.max("dist_chord2").over(w_all))
         .withColumn(
             "__ok",
             (F.col("__jl") == 0)
@@ -394,27 +370,52 @@ def _attempt_var(
     )
 
 
-# Per-source-frame memos for knn_join_df: the density tables of the
-# bounded level-7 histogram, and the probe-prep UDFs whose closures
-# carry them. Keyed weakly on the DataFrame object (fact frame or
+# Per-source-frame memos of the kNN joins: the density tables of the
+# bounded level-7 histogram, and knn_join_df's probe-prep UDFs whose
+# closures carry them. Keyed weakly on the DataFrame object (fact frame or
 # injected stats), so an entry lives exactly as long as the frame it
 # was computed from.
 _L7_HIST: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _PREP_UDFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_L_DET = 7  # level of the bounded density histogram
+
+
+def _level7_tables(df: DataFrame, stats: DataFrame | None = None) -> tuple:
+    """The ``_density_tables`` of the bounded level-7 histogram of
+    ``df``, read off the injected ``stats`` frame when given. Collected
+    ONCE per source DataFrame object (see _L7_HIST): repeat calls,
+    streaming batches and injected stats reuse it. DataFrames are
+    immutable plans, so the capture only goes stale if the underlying
+    FILES are rewritten under a live frame, and even then start levels
+    and ring sizes are pure performance, never correctness."""
+    src = stats if stats is not None else df
+    tables = _L7_HIST.get(src)
+    if tables is None:
+        if stats is None:
+            hist = df.groupBy(s2_parent("cell_id", _L_DET).alias("__p")).count()
+        else:
+            hist = stats.where(F.col("level") == F.lit(_L_DET)).select(
+                F.col("cell").alias("__p"), F.col("n").alias("count")
+            )
+        rows = hist.collect()  # bounded: ≤ 6·4^7 = 98,304 rows whatever |df| is
+        tables = _density_tables(
+            np.array([r["__p"] for r in rows], dtype=np.int64).view(np.uint64),
+            np.array([r["count"] for r in rows], dtype=np.int64),
+        )
+        _L7_HIST[src] = tables
+    return tables
 
 
 def knn_join_df(
     df: DataFrame,
     queries: DataFrame,
     kk: int,
-    radius_guess_deg: float = 1.0,
     lat_col: str = "lat",
     lng_col: str = "lng",
     id_col: str = "image_id",
     query_id_col: str = "query_id",
     qlat_col: str = "qlat",
     qlng_col: str = "qlng",
-    max_widen: int = 12,
     stats: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
@@ -466,10 +467,7 @@ def knn_join_df(
     ≥ 8k rows. A global-average level starts sparse probes far too
     fine (the average is dominated by the cities) and burns 3-4
     full-table widening rounds per call; per-probe levels resolve
-    almost every probe in the first round. ``radius_guess_deg`` is
-    accepted for signature parity with ``knn_join`` and not used:
-    local density evidence beats the caller's guess, and a too-fine
-    floor only adds rounds.
+    almost every probe in the first round.
 
     Scale shape: one action first collects at most
     ``_TAIL_COLLECT_MAX`` + 1 probe rows, and the probe count picks the
@@ -479,7 +477,7 @@ def knn_join_df(
       micro-batch): start levels are computed on the driver, and every
       round is driver-literal — rings in numpy, a broadcast candidate
       frame, the merged-range OR-of-BETWEEN pushdown pruning the fact
-      scan (knn_join's shape), one ≤ |probes|-row flag collect per
+      scan, one ≤ |probes|-row flag collect per
       unresolved round. The probe source is read once, and no Python
       worker runs.
     - Relational regime (more probes): the first round is ONE scan of
@@ -498,7 +496,7 @@ def knn_join_df(
         df, queries, kk,
         lat_col=lat_col, lng_col=lng_col, id_col=id_col,
         query_id_col=query_id_col, qlat_col=qlat_col, qlng_col=qlng_col,
-        max_widen=max_widen, stats=stats, n_rows=n_rows,
+        stats=stats, n_rows=n_rows,
     ) as out:
         # ≤ |probes|·k rows; the round frames are released on exit
         return out.localCheckpoint(eager=True)
@@ -515,7 +513,6 @@ def _knn_join_df_lazy(
     query_id_col: str = "query_id",
     qlat_col: str = "qlat",
     qlng_col: str = "qlng",
-    max_widen: int = 12,
     stats: DataFrame | None = None,
     n_rows: int | None = None,
 ):
@@ -523,36 +520,8 @@ def _knn_join_df_lazy(
     over the persisted round frames and unpersists them on exit, so the
     caller must materialize the result inside the ``with`` block (a
     checkpoint, or a sink write that reads it once)."""
-    empty_out = df.select(
-        F.lit(0).cast("long").alias(query_id_col),
-        F.lit(0).cast("int").alias("rank"),
-        F.col(id_col),
-        F.lit(0.0).alias("dist_chord2"),
-    ).limit(0)
-    L_DET = 7
-    target = 8 * kk
-    # repeated-workload memo (streaming batches, repeat calls with one
-    # injected stats frame — or repeat calls against one fact frame):
-    # the bounded histogram is collected ONCE per source DataFrame
-    # object (see _L7_HIST). DataFrames are immutable plans, so the
-    # capture only goes stale if the underlying FILES are rewritten
-    # under a live frame — and even then start levels are pure
-    # performance, never correctness.
     src = stats if stats is not None else df
-    tables = _L7_HIST.get(src)
-    if tables is None:
-        if stats is None:
-            hist = df.groupBy(s2_parent("cell_id", L_DET).alias("__p")).count()
-        else:
-            hist = stats.where(F.col("level") == F.lit(L_DET)).select(
-                F.col("cell").alias("__p"), F.col("n").alias("count")
-            )
-        hist_rows = hist.collect()  # bounded: ≤ 6·4^7 = 98,304 rows whatever |df| is
-        tables = _density_tables(
-            np.array([r["__p"] for r in hist_rows], dtype=np.int64).view(np.uint64),
-            np.array([r["count"] for r in hist_rows], dtype=np.int64),
-        )
-        _L7_HIST[src] = tables
+    tables = _level7_tables(df, stats)
     n_tot = int(tables[1].sum())
     if stats is not None and n_tot == 0:
         # empty stats — including an entirely empty frame — can never
@@ -560,8 +529,8 @@ def _knn_join_df_lazy(
         # misleading wrong-corpus error the n_rows check would give
         # (round-9 ADVICE) and beats silently returning no neighbors
         raise ValueError(
-            f"stats carry no level={L_DET} rows; build with "
-            f"build_cell_stats(df, levels=({L_DET},))"
+            f"stats carry no level={_L_DET} rows; build with "
+            f"build_cell_stats(df, levels=({_L_DET},))"
         )
     if stats is not None and n_rows is not None and n_rows > 0:
         ratio = n_tot / n_rows
@@ -585,7 +554,7 @@ def _knn_join_df_lazy(
     if n_tot == 0:
         # empty fact table: the exact k-nearest result is empty for
         # every probe — no join round can produce a row
-        yield empty_out
+        yield _ranked_out([], df, query_id_col, id_col)
         return
 
     spark = df.sparkSession
@@ -609,32 +578,22 @@ def _knn_join_df_lazy(
             # against 4.7-5.2 s, and no Python-worker crossing. An
             # all-literal shortcut once measured 1.5× slower, while
             # literal frames were still pickled Python RDDs.
-            qlat = np.array([r[1] for r in head], dtype=np.float64)  # NULL → NaN
-            qlng = np.array([r[2] for r in head], dtype=np.float64)
-            ok = ~(np.isnan(qlat) | np.isnan(qlng))
-            qids = [r[0] for r, keep in zip(head, ok) if keep]
-            qlat, qlng = qlat[ok], qlng[ok]
+            qids, qlat, qlng = _probe_arrays(head)
             slices = (
                 _tail_literal_rounds(
                     spark, df, qids, qlat, qlng,
-                    _probe_start_levels(qlat, qlng, tables, target),
+                    _probe_start_levels(qlat, qlng, tables, 8 * kk),
                     np.zeros(len(qids), dtype=bool),
-                    kk, 0, max_widen, persisted, tables, *cols,
+                    kk, 0, persisted, lambda: tables, *cols,
                 )
                 if qids
                 else []
             )
         else:
             slices = _relational_rounds(
-                spark, df, queries, kk, max_widen, persisted, src, tables, *cols
+                spark, df, queries, kk, persisted, src, tables, *cols
             )
-        out = _union_all(slices) if slices else empty_out
-        yield out.select(
-            query_id_col,
-            F.col("rank").cast("int").alias("rank"),
-            id_col,
-            "dist_chord2",
-        )
+        yield _ranked_out(slices, df, query_id_col, id_col)
     finally:
         for p in persisted:
             p.unpersist()
@@ -645,7 +604,6 @@ def _relational_rounds(
     df: DataFrame,
     queries: DataFrame,
     kk: int,
-    max_widen: int,
     persisted: list[DataFrame],
     src: DataFrame,
     tables: tuple,
@@ -708,7 +666,7 @@ def _relational_rounds(
         persisted.append(ranked)
         if (
             active is not None and all(lv == 0 for lv in active)
-        ) or attempt >= max_widen:
+        ) or attempt >= _MAX_WIDEN:
             slices.append(ranked.select(*sel))
             break
         slices.append(ranked.where(F.col("__ok")).select(*sel))
@@ -778,7 +736,7 @@ def _relational_rounds(
                     np.array([r[2] for r in rows], dtype=np.float64),
                     np.array([r[3] for r in rows], dtype=np.int64),
                     np.array([bool(r[4]) for r in rows]),
-                    kk, attempt, max_widen, persisted, tables,
+                    kk, attempt, persisted, lambda: tables,
                     lat_col, lng_col, id_col,
                     query_id_col, qlat_col, qlng_col, qid_type,
                 )
@@ -805,13 +763,6 @@ def _relational_rounds(
     return slices
 
 
-def _union_all(frames: list[DataFrame]) -> DataFrame:
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
 def _tail_literal_rounds(
     spark: SparkSession,
     df: DataFrame,
@@ -822,9 +773,8 @@ def _tail_literal_rounds(
     gtd: np.ndarray,
     kk: int,
     attempt0: int,
-    max_widen: int,
     persisted: list[DataFrame],
-    tables: tuple,
+    density: Callable[[], tuple],
     lat_col: str,
     lng_col: str,
     id_col: str,
@@ -833,17 +783,18 @@ def _tail_literal_rounds(
     qlng_col: str,
     qid_type,
 ) -> list[DataFrame]:
-    """Driver-literal widening for at most _TAIL_COLLECT_MAX probes —
-    a whole small probe set from round 0, or the unresolved tail of the
-    relational rounds: rings computed in numpy, the candidate frame
-    broadcast, and the fact scan pruned with the merged-range
-    OR-of-BETWEEN pushdown (knn_join's shape — at 100 TB a round reads
-    only the row groups its rings cover instead of rescanning the
-    table). ``jl`` holds each probe's level for round ``attempt0`` and
-    ``gtd`` whether that level resolves it by construction; both are
-    updated in place. Same ring/coverage contract as the relational
-    rounds, so results are identical; returns the accepted rank
-    slices."""
+    """The one driver-literal widening engine, for a ``knn_join`` list,
+    a small ``knn_join_df`` probe set from round 0, or the unresolved
+    tail of the relational rounds: rings computed in numpy, the
+    candidate frame broadcast, and the fact scan pruned with the
+    merged-range OR-of-BETWEEN pushdown (at 100 TB a round reads only
+    the row groups its rings cover instead of rescanning the table).
+    ``jl`` holds each probe's level for round ``attempt0`` and ``gtd``
+    whether that level resolves it by construction; both are updated in
+    place. ``density`` is a zero-argument callable returning the
+    ``_density_tables``, called only when a probe needs them. Same
+    ring/coverage contract as the relational rounds, so results are
+    identical; returns the accepted rank slices."""
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -867,11 +818,15 @@ def _tail_literal_rounds(
     # exact range sum over the sorted histogram (prefix sums +
     # searchsorted); used to pick the widened level for sparse probes
     # so the next ring PROVABLY holds >= target rows instead of
-    # guessing a fixed jump
-    c7sorted = tables[0]
-    pref7 = np.concatenate([[0], np.cumsum(tables[1])])
+    # guessing a fixed jump. ``density()`` yields the histogram's
+    # ``_density_tables``; it is called on the first sparse probe only
+    hist: list[np.ndarray] = []  # [c7sorted, pref7]
 
     def _exact_ring_rows(ring: np.ndarray) -> int:
+        if not hist:
+            c7s, n7s = density()[:2]
+            hist.extend([c7s, np.concatenate([[0], np.cumsum(n7s)])])
+        c7sorted, pref7 = hist
         u = ring.view(np.uint64)
         lo = k.range_min(u)
         hi = k.range_max(u)
@@ -908,7 +863,7 @@ def _tail_literal_rounds(
         )
         if (
             bool(np.all(gtd[pend]))
-            or attempt >= max_widen
+            or attempt >= _MAX_WIDEN
             or all(x == 0 for x in active)
         ):
             # kd-derived levels resolve by construction (the ring
@@ -921,9 +876,13 @@ def _tail_literal_rounds(
         ranked = ranked.persist()
         persisted.append(ranked)
         slices.append(ranked.where(F.col("__ok")).select(*sel))
-        flags = ranked.select(
-            query_id_col, "__ok", "__n", "__kd"
-        ).distinct().collect()
+        # one probe attempts one level a round, so its rank-1 row
+        # carries its flags
+        flags = (
+            ranked.where(F.col("rank") == 1)
+            .select(query_id_col, "__ok", "__n", "__kd")
+            .collect()
+        )
         info = {r[0]: (bool(r[1]), int(r[2]), r[3]) for r in flags}
         nxt_pend = []
         for i in pend:
@@ -953,7 +912,6 @@ def _tail_literal_rounds(
 def mutual_knn_pairs(
     df: DataFrame,
     kk: int,
-    radius_guess_deg: float = 1.0,
     lat_col: str = "lat",
     lng_col: str = "lng",
     id_col: str = "image_id",
@@ -982,7 +940,6 @@ def mutual_knn_pairs(
     )
     nn = knn_join_df(
         df, probes, kk + 1,
-        radius_guess_deg=radius_guess_deg,
         lat_col=lat_col, lng_col=lng_col, id_col=id_col,
         stats=stats, **kwargs,
     )
@@ -1014,7 +971,6 @@ def idw_interpolate(
     probes: DataFrame,
     kk: int,
     value_col: str,
-    radius_guess_deg: float = 1.0,
     lat_col: str = "lat",
     lng_col: str = "lng",
     id_col: str = "image_id",
@@ -1048,7 +1004,6 @@ def idw_interpolate(
     facts = facts.where(F.col(value_col).isNotNull())
     nn = knn_join_df(
         facts, probes, kk,
-        radius_guess_deg=radius_guess_deg,
         lat_col=lat_col, lng_col=lng_col, id_col=id_col,
         query_id_col=query_id_col, qlat_col=qlat_col, qlng_col=qlng_col,
         stats=stats, n_rows=n_rows,

@@ -415,7 +415,7 @@ def q_knn_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lat").alias("qlat"),
         F.col("lng").alias("qlng"),
     )
-    out = knn_join_df(img, probes, KNN_DF_K, radius_guess_deg=2.0)
+    out = knn_join_df(img, probes, KNN_DF_K)
     return out.select(
         "query_id", "rank", F.col("image_id").cast("long").alias("image_id")
     )
@@ -3145,7 +3145,7 @@ def q_idw(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lat").alias("qlat"),
         F.col("lng").alias("qlng"),
     )
-    out = idw_interpolate(facts, probes, IDW_K, "val", radius_guess_deg=2.0)
+    out = idw_interpolate(facts, probes, IDW_K, "val")
     return out.select(
         "query_id", F.floor(F.col("est")).cast("long").alias("est_floor")
     )
@@ -3471,7 +3471,7 @@ def q_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.knn import mutual_knn_pairs
 
     img = _images(spark, sf_dir)
-    out = mutual_knn_pairs(img, MKNN_K, radius_guess_deg=2.0)
+    out = mutual_knn_pairs(img, MKNN_K)
     return out.select("a", "b")
 
 
@@ -3557,7 +3557,7 @@ def q_stream_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = streaming_knn(
             img, pstream, SKNN_K,
             sink_path=f"{tmp}/out", checkpoint_path=f"{tmp}/ckpt",
-            stats=stats, radius_guess_deg=2.0,
+            stats=stats,
             trigger={"availableNow": True},
         )
         if not q.awaitTermination(300):

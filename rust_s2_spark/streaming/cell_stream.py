@@ -301,7 +301,6 @@ def streaming_knn(
     sink_path: str,
     checkpoint_path: str,
     stats: DataFrame | None = None,
-    radius_guess_deg: float = 1.0,
     trigger: dict | None = None,
     **cols,
 ):
@@ -330,8 +329,7 @@ def streaming_knn(
     (``plans.stats.build_cell_stats(facts, levels=(7,))``, maintained
     at write time): with it, a micro-batch pays only its own join
     work; without it the wrapper builds the stats ONCE up front (one
-    fact scan total — never one per batch). ``radius_guess_deg`` is
-    kept for signature parity with ``knn_join_df``, which ignores it.
+    fact scan total — never one per batch).
 
     Returns the started StreamingQuery; callers using
     ``trigger={"availableNow": True}`` await termination then read

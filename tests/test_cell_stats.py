@@ -92,12 +92,10 @@ def test_knn_stats_injection_bit_equal_and_scan_free(spark, images, monkeypatch)
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(cls, "groupBy", spy)
-    base = _knn_sorted(knn_join_df(facts, probes, 3, radius_guess_deg=2.0))
+    base = _knn_sorted(knn_join_df(facts, probes, 3))
     assert len(calls) == 1, "self-computed path must aggregate the facts once"
     calls.clear()
-    injected = _knn_sorted(
-        knn_join_df(facts, probes, 3, radius_guess_deg=2.0, stats=stats)
-    )
+    injected = _knn_sorted(knn_join_df(facts, probes, 3, stats=stats))
     assert calls == [], "injected path must NOT aggregate the fact table"
     assert injected.equals(base)
 
@@ -177,7 +175,7 @@ def test_knn_stale_stats_only_affect_performance(spark, images):
         F.col("lat").alias("qlat"),
         F.col("lng").alias("qlng"),
     )
-    base = _knn_sorted(knn_join_df(images, probes, 3, radius_guess_deg=2.0))
+    base = _knn_sorted(knn_join_df(images, probes, 3))
     # stale regimes: stats over half the table (under-counts), stats
     # over a 5x replica (over-counts) — both mis-seed the start level
     half = build_cell_stats(
@@ -187,9 +185,7 @@ def test_knn_stale_stats_only_affect_performance(spark, images):
         "n", F.col("n") * 5
     ).localCheckpoint(eager=True)
     for stale in (half, over):
-        got = _knn_sorted(
-            knn_join_df(images, probes, 3, radius_guess_deg=2.0, stats=stale)
-        )
+        got = _knn_sorted(knn_join_df(images, probes, 3, stats=stale))
         assert got.equals(base)
 
 
@@ -251,11 +247,8 @@ def test_knn_n_rows_guard(spark, images):
         knn_join_df(corpus, probes, 3, stats=drift, n_rows=n_corpus).count()
 
     # matching stats + n_rows → silent, bit-identical to the unguarded run
-    base = _knn_sorted(knn_join_df(corpus, probes, 3, radius_guess_deg=2.0))
+    base = _knn_sorted(knn_join_df(corpus, probes, 3))
     got = _knn_sorted(
-        knn_join_df(
-            corpus, probes, 3, radius_guess_deg=2.0,
-            stats=corpus_stats, n_rows=n_corpus,
-        )
+        knn_join_df(corpus, probes, 3, stats=corpus_stats, n_rows=n_corpus)
     )
     assert got.equals(base)

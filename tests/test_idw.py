@@ -43,8 +43,7 @@ def test_weighted_mean_matches_hand_fold(spark):
     ]
     probes = [(100, 0.0, 0.0)]
     out = idw_interpolate(
-        _facts(spark, facts), _probes(spark, probes), 3, "val",
-        radius_guess_deg=2.0,
+        _facts(spark, facts), _probes(spark, probes), 3, "val"
     ).collect()
     assert len(out) == 1 and out[0]["query_id"] == 100
     # hand fold in rank order (ranks 1..3 are facts 1..3)
@@ -67,8 +66,7 @@ def test_exact_hit_rule_min_id_wins(spark):
     ]
     probes = [(1, 10.0, 10.0)]
     out = idw_interpolate(
-        _facts(spark, facts), _probes(spark, probes), 3, "val",
-        radius_guess_deg=2.0,
+        _facts(spark, facts), _probes(spark, probes), 3, "val"
     ).collect()
     assert out[0]["est"] == 50.0  # fact 5, not 7, and no inf poisoning
 
@@ -84,8 +82,7 @@ def test_null_valued_facts_excluded(spark):
     ]
     probes = [(100, 0.0, 0.0)]
     out = idw_interpolate(
-        _facts(spark, facts), _probes(spark, probes), 3, "val",
-        radius_guess_deg=2.0,
+        _facts(spark, facts), _probes(spark, probes), 3, "val"
     ).collect()
     num = den = 0.0
     for _fid, lat, lng, v in facts[1:]:
@@ -103,5 +100,5 @@ def test_exact_hit_string_ids_numeric_order(spark):
         "image_id string, lat double, lng double, val double",
     ).withColumn("cell_id", s2_cell_from_latlng("lat", "lng"))
     probes = _probes(spark, [(1, 10.0, 10.0)])
-    out = idw_interpolate(facts, probes, 3, "val", radius_guess_deg=2.0).collect()
+    out = idw_interpolate(facts, probes, 3, "val").collect()
     assert out[0]["est"] == 50.0  # id 5 (numeric min), not '10' (string min)

@@ -1,11 +1,12 @@
-"""DataFrame-native kNN join (knn_join_df): agreement with the
-driver-list knn_join, exactness against brute force in both regimes
-(driver-literal for small probe sets, relational above
-``_TAIL_COLLECT_MAX``), the NULL/NaN probe contract, and the plan pin
-that the relational probe side is never materialized on the driver."""
+"""The kNN joins: knn_join_df agrees with the driver-list knn_join,
+both match brute force (knn_join_df in both regimes: driver-literal for
+small probe sets, relational above ``_TAIL_COLLECT_MAX``), the NULL/NaN
+probe contract, knn_join's lazy histogram read, and the plan pin that
+the relational probe side is never materialized on the driver."""
 
 from __future__ import annotations
 
+import contextlib
 import inspect
 
 import pytest
@@ -39,7 +40,8 @@ class _Regime:
     at test scale and hand over to the literal tail once the unresolved
     probes fit the lowered cap. A spy on
     ``_tail_literal_rounds`` records the round each call starts at;
-    ``check()`` asserts the regime the calls took."""
+    ``check()`` asserts the regime the calls took. knn_join runs the
+    same engine, so a test runs it inside ``unrecorded()``."""
 
     def __init__(self, name, monkeypatch):
         from rust_s2_spark.operators import knn
@@ -47,11 +49,13 @@ class _Regime:
         self.name, self._mp, self._knn = name, monkeypatch, knn
         self.starts: list[int] = []
         self.n = None
+        self.recording = True
         real = knn._tail_literal_rounds
 
         def spy(*args, **kwargs):
-            bound = inspect.signature(real).bind(*args, **kwargs)
-            self.starts.append(bound.arguments["attempt0"])
+            if self.recording:
+                bound = inspect.signature(real).bind(*args, **kwargs)
+                self.starts.append(bound.arguments["attempt0"])
             return real(*args, **kwargs)
 
         monkeypatch.setattr(knn, "_tail_literal_rounds", spy)
@@ -60,6 +64,14 @@ class _Regime:
         self.n = n
         if self.name == "relational":
             self._mp.setattr(self._knn, "_TAIL_COLLECT_MAX", min(16, n - 1))
+
+    @contextlib.contextmanager
+    def unrecorded(self):
+        self.recording = False
+        try:
+            yield
+        finally:
+            self.recording = True
 
     def check(self) -> None:
         assert self.n is not None, "test did not declare its probe count"
@@ -81,9 +93,10 @@ def test_matches_driver_list_knn(spark, images, regime):
     """Same probes through both orchestrations → identical rows."""
     qs = [(0, 40.7128, -74.0060), (1, -33.8688, 151.2093), (2, 0.01, 0.02)]
     regime.probes(len(qs))
-    a = knn_join(spark, images, qs, 5, radius_guess_deg=2.0).toPandas()
+    with regime.unrecorded():
+        a = knn_join(spark, images, qs, 5, radius_guess_deg=2.0).toPandas()
     qdf = spark.createDataFrame(qs, "query_id long, qlat double, qlng double")
-    b = knn_join_df(images, qdf, 5, radius_guess_deg=2.0).toPandas()
+    b = knn_join_df(images, qdf, 5).toPandas()
     cols = ["query_id", "rank", "image_id", "dist_chord2"]
     a = a[cols].sort_values(["query_id", "rank"]).reset_index(drop=True)
     b = b[cols].sort_values(["query_id", "rank"]).reset_index(drop=True)
@@ -95,7 +108,7 @@ def test_exact_vs_brute_force_self_probes(images, probes, regime):
     widening must reproduce the brute-force cross-join answer exactly,
     including far-from-anything probes that widen several rounds."""
     regime.probes(probes.count())
-    got = knn_join_df(images, probes, 3, radius_guess_deg=2.0).toPandas()
+    got = knn_join_df(images, probes, 3).toPandas()
 
     q = probes.select(
         "query_id", F.col("qlat").alias("blat"), F.col("qlng").alias("blng")
@@ -151,6 +164,17 @@ def test_probe_side_not_driver_materialized(images, probes):
     assert "Scan" in plan  # both sides come from real sources
 
 
+def _ranks(out):
+    """(query_id, rank, image_id) of a kNN result as sorted int64 pandas."""
+    return (
+        out.select("query_id", "rank", "image_id")
+        .toPandas()
+        .astype("int64")
+        .sort_values(["query_id", "rank"])
+        .reset_index(drop=True)
+    )
+
+
 def _brute(spark, facts, probes_rows, kk):
     q = spark.createDataFrame(probes_rows, "query_id long, blat double, blng double")
     px, py, pz = xyz_cols("lat", "lng")
@@ -196,43 +220,72 @@ def _adv_facts(spark):
 def test_adversarial_geometry_and_k_overflow(spark, regime):
     """Poles, antimeridian, co-located duplicate points (tie-break by
     id), an isolated far probe, and k > n — every case must match brute
-    force, and k > n returns all n rows rather than failing."""
+    force in both forms (knn_join_df and the driver-list knn_join), and
+    k > n returns all n rows rather than failing."""
     facts = _adv_facts(spark)
     probes = spark.createDataFrame(
         _ADV_PROBES, "query_id long, qlat double, qlng double"
     )
     regime.probes(len(_ADV_PROBES))
     for kk in (3, 10):  # 10 > n=7: expect all 7 rows per probe
-        got = (
-            knn_join_df(facts, probes, kk, radius_guess_deg=2.0)
-            .select("query_id", "rank", "image_id")
-            .toPandas()
-            .astype("int64")
-            .sort_values(["query_id", "rank"])
-            .reset_index(drop=True)
-        )
         want = _brute(spark, facts, _ADV_PROBES, kk)
-        assert got.equals(want), f"k={kk}\n{got}\n{want}"
-        per = got.groupby("query_id").size()
-        assert (per == min(kk, len(_ADV_FACTS))).all()
+        with regime.unrecorded():
+            listed = knn_join(spark, facts, _ADV_PROBES, kk)
+        for form, out in (("df", knn_join_df(facts, probes, kk)), ("list", listed)):
+            got = _ranks(out)
+            assert got.equals(want), f"{form} k={kk}\n{got}\n{want}"
+            per = got.groupby("query_id").size()
+            assert (per == min(kk, len(_ADV_FACTS))).all()
 
 
 def test_null_and_nan_probes_return_no_rows(spark, images, regime):
     """A probe with a NULL or NaN coordinate has no nearest neighbours:
     it returns no rows (the within-distance contract), and the valid
-    probe beside it still matches brute force."""
+    probe beside it still matches brute force, in knn_join_df and in
+    the driver-list knn_join (None or NaN in a query tuple)."""
     rows = [(1, 10.0, 10.0), (2, float("nan"), 0.0), (3, None, 5.0)]
     probes = spark.createDataFrame(rows, "query_id long, qlat double, qlng double")
     regime.probes(len(rows))
-    got = (
-        knn_join_df(images, probes, 3)
-        .select("query_id", "rank", "image_id")
-        .toPandas()
-        .astype("int64")
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert got.equals(_brute(spark, images, rows[:1], 3)), got
+    want = _brute(spark, images, rows[:1], 3)
+    got = _ranks(knn_join_df(images, probes, 3))
+    assert got.equals(want), got
+    with regime.unrecorded():
+        listed = _ranks(knn_join(spark, images, rows + [(4, 5.0, float("nan"))], 3))
+    assert listed.equals(want), listed
+
+
+def test_knn_join_reads_histogram_only_for_sparse_probes(spark, images, monkeypatch):
+    """knn_join reads the level-7 histogram only to size the next ring
+    of a probe that found fewer than k rows: with the histogram helper
+    patched to raise, dense city probes still equal brute force, and a
+    mid-ocean probe at 0.05° reads it exactly once."""
+    from rust_s2_spark.operators import knn
+
+    def no_hist(*args, **kwargs):
+        raise AssertionError("a dense knn_join call read the histogram")
+
+    dense = [
+        (0, 40.7128, -74.0060),
+        (1, 51.5074, -0.1278),
+        (2, 35.6762, 139.6503),
+        (3, -33.8688, 151.2093),
+    ]
+    with monkeypatch.context() as m:
+        m.setattr(knn, "_level7_tables", no_hist)
+        got = _ranks(knn_join(spark, images, dense, 3, radius_guess_deg=2.0))
+    assert got.equals(_brute(spark, images, dense, 3))
+
+    real, calls = knn._level7_tables, []
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(knn, "_level7_tables", counted)
+    ocean = [(9, -45.0, -135.0)]
+    got = _ranks(knn_join(spark, images, ocean, 3, radius_guess_deg=0.05))
+    assert got.equals(_brute(spark, images, ocean, 3))
+    assert len(calls) == 1, f"{len(calls)} histogram reads for one sparse probe"
 
 
 class _TailBoom(RuntimeError):
@@ -259,7 +312,7 @@ def test_failed_call_releases_persisted_frames(spark, images, probes, monkeypatc
     monkeypatch.setattr(knn, "_TAIL_COLLECT_MAX", probes.count() - 1)
     before = _persistent_rdd_ids(spark)
     with pytest.raises(_TailBoom):  # the tail is reached: round 1 ran
-        knn_join_df(images, probes, 3, radius_guess_deg=2.0).count()
+        knn_join_df(images, probes, 3).count()
     leaked = _persistent_rdd_ids(spark) - before
     assert not leaked, f"persisted RDDs left after the failed call: {leaked}"
 
@@ -338,9 +391,10 @@ def test_histogram_memo_reused_off_the_frame(images, probes, monkeypatch):
 def test_small_probe_set_runs_literal_regime(spark, images, probes, monkeypatch):
     """≤ 100 probes take the driver-literal regime: no probe-prep UDF
     is built (patched to raise), the result equals brute force, and
-    the call runs at most 12 Spark jobs once the histogram is memoized.
-    Measured on these fixtures at local[4] and local[8]: 12 jobs; the
-    relational round 0 + tail this regime replaces ran 23."""
+    the call runs at most 11 Spark jobs once the histogram is memoized.
+    Measured on these fixtures at local[4]: 11 jobs (12 while the flag
+    collect ran a distinct); the relational round 0 + tail this regime
+    replaces ran 23."""
     from rust_s2_spark.operators import knn
 
     def no_prep(*args, **kwargs):
@@ -362,12 +416,5 @@ def test_small_probe_set_runs_literal_regime(spark, images, probes, monkeypatch)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    got = (
-        got.select("query_id", "rank", "image_id")
-        .toPandas()
-        .astype("int64")
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert got.equals(_brute(spark, facts, rows, 3))
-    assert n_jobs <= 12, f"{n_jobs} Spark jobs for one small-probe call"
+    assert _ranks(got).equals(_brute(spark, facts, rows, 3))
+    assert n_jobs <= 11, f"{n_jobs} Spark jobs for one small-probe call"

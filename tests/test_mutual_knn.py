@@ -83,7 +83,7 @@ def test_matches_brute_force_seeded(spark):
     for kk in (1, 3):
         got = sorted(
             (int(r["a"]), int(r["b"]))
-            for r in mutual_knn_pairs(df, kk, radius_guess_deg=5.0).collect()
+            for r in mutual_knn_pairs(df, kk).collect()
         )
         assert got == _brute_mutual(rows, kk), f"k={kk}"
 

@@ -666,7 +666,7 @@ def test_mutual_knn_swap_join_is_equi_join(stored, spark):
 
     df = stored.withColumn("image_id", F.col("image_id").cast("long"))
     corpus = df.where(F.col("image_id") % 101 == 0)
-    plan = _plan(mutual_knn_pairs(corpus, 2, radius_guess_deg=2.0))
+    plan = _plan(mutual_knn_pairs(corpus, 2))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert (

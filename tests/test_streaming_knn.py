@@ -50,7 +50,7 @@ def _run_stream(spark, img, probes, tmp, n_files):
     q = streaming_knn(
         img, pstream, 3,
         sink_path=f"{tmp}/out", checkpoint_path=f"{tmp}/ckpt",
-        stats=stats, radius_guess_deg=2.0,
+        stats=stats,
         trigger={"availableNow": True},
     )
     assert q.awaitTermination(300), "stream did not finish"
@@ -75,9 +75,7 @@ def test_streaming_knn_matches_batch_across_batches(spark, images):
         )
         want = sorted(
             (int(r["query_id"]), int(r["rank"]), int(r["image_id"]))
-            for r in knn_join_df(
-                images, probes, 3, radius_guess_deg=2.0
-            ).collect()
+            for r in knn_join_df(images, probes, 3).collect()
         )
         assert got == want
         n_probes = probes.count()

@@ -87,7 +87,7 @@ def main():
         for rep in range(4):
             print(f"--- knn_df pass {rep} ---", flush=True)
             t0 = time.perf_counter()
-            n = knn_join_df(img, probes_df, 3, radius_guess_deg=2.0).count()
+            n = knn_join_df(img, probes_df, 3).count()
             print(
                 f"[{_ts()}] knn_df pass {rep}: {time.perf_counter() - t0:.3f}s "
                 f"rows={n}",
