@@ -825,7 +825,7 @@ def cap_fast_covering_xyz(x, y, z, radius2):
 
 def all_neighbors(ids: np.ndarray, lvl) -> list[np.ndarray]:
     """Per-row array of all neighbors (including diagonal) at lvl >= level,
-    ascending and duplicate-free."""
+    ascending and duplicate-free; no rows give an empty list."""
     lvl = int(lvl)
     f, i, j, _ = to_face_ij_orientation(ids)
     size = size_ij(level(ids))
@@ -840,7 +840,7 @@ def all_neighbors(ids: np.ndarray, lvl) -> list[np.ndarray]:
     size_i = size.astype(np.int64)
     # k runs from -nbr to size inclusive stepping nbr; since all rows share
     # lvl but not level(ids), handle per-row loop bounds via masking.
-    max_steps = int(np.max(size_i // nbr)) + 2
+    max_steps = int(np.max(size_i // nbr, initial=0)) + 2
     kk = k.copy()
     for _ in range(max_steps):
         active = kk <= size_i

@@ -1,19 +1,20 @@
 """Spatial covering joins (SURVEY.md §2.8).
 
 The canonical S2 join: cover the query region with ≤ max_cells cells
-(driver-side RegionCoverer), turn the covering into leaf-id ranges on
-the *biased* long column, then either
+(driver-side RegionCoverer), then either
 
-* ``region_filter`` — ONE region: an OR-of-BETWEEN predicate literal.
+* ``region_filter`` — ONE region: the covering's leaf-id ranges on the
+  *biased* long column as an OR-of-BETWEEN predicate literal.
   Pure Catalyst filter → pushed to the parquet/Iceberg scan, prunes
   row groups by cell_id_biased min/max. Boundary cells get the exact
   geometric post-filter; interior-covering cells skip it.
 
-* ``region_join`` — MANY regions: a broadcast range join of the tiny
-  (region_id, rmin, rmax, interior) table against the fact table.
+* ``region_join`` — MANY regions: an equi-join of each row's cell
+  ancestors (at the covering's few levels) against a broadcast
+  (region_id, covering cell) table, then the exact post-filter.
 
 At 100 TB both shapes avoid any shuffle of the fact table: the filter
-is scan-local, and the ranges table broadcasts.
+is scan-local, and the covering table broadcasts.
 
 The distance operators share ONE ring-join core (``_ring_join``): at
 the finest level L whose min cell width covers the radius, a probe's
@@ -146,107 +147,45 @@ def region_join(
     regions: list,
     region_ids: list,
     coverer: RegionCoverer = DEFAULT_COVERER,
-    biased_col: str = "cell_id_biased",
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-) -> DataFrame:
-    """Join ``df`` against many regions: broadcast range join + exact
-    post-filter. Output = df columns + ``region_id``.
-
-    Cap regions carry their (center, radius²) as columns of the
-    broadcast ranges table, so the exact filter is ONE constant-size
-    expression regardless of region count (a per-region CASE chain
-    would grow the plan linearly — fatal with thousands of regions).
-    Non-cap regions fall back to a per-region predicate chain.
-    """
-    all_caps = all(isinstance(r, Cap) for r in regions)
-    cols: list[list] = [[] for _ in range(8 if all_caps else 4)]
-    for rid, region in zip(region_ids, regions):
-        rr = covering_ranges(region, coverer)
-        n = len(rr.lo)
-        cols[0] += [rid] * n
-        cols[1] += rr.lo
-        cols[2] += rr.hi
-        cols[3] += rr.interior
-        if all_caps:
-            for col, v in zip(cols[4:], (*region.center, region.radius2)):
-                col += [v] * n
-    schema = "region_id long, rlo long, rhi long, rinterior boolean"
-    if all_caps:
-        schema += ", rcx double, rcy double, rcz double, rr2 double"
-    ranges_df = local_frame(spark, cols, schema)
-
-    j = df.join(
-        F.broadcast(ranges_df),
-        (F.col(biased_col) >= F.col("rlo")) & (F.col(biased_col) <= F.col("rhi")),
-        "inner",
-    )
-    if all_caps:
-        x, y, z = xyz_cols(lat_col, lng_col)
-        exact = (
-            chord2_expr(x, y, z, F.col("rcx"), F.col("rcy"), F.col("rcz"))
-            <= F.col("rr2")
-        )
-        out = j.where(F.col("rinterior") | exact)
-        return out.drop("rlo", "rhi", "rinterior", "rcx", "rcy", "rcz", "rr2")
-    exact = F.lit(False)
-    for rid, region in zip(region_ids, regions):
-        exact = F.when(
-            F.col("region_id") == F.lit(rid), exact_predicate(region, lat_col, lng_col)
-        ).otherwise(exact)
-    out = j.where(F.col("rinterior") | exact)
-    return out.drop("rlo", "rhi", "rinterior")
-
-
-def region_join_ancestors(
-    spark: SparkSession,
-    df: DataFrame,
-    regions: list,
-    region_ids: list,
-    coverer: RegionCoverer = DEFAULT_COVERER,
     cell_col: str = "cell_id",
     lat_col: str = "lat",
     lng_col: str = "lng",
-    fast: bool = True,
 ) -> DataFrame:
-    """Many-region containment join as a PURE EQUI-JOIN (SURVEY.md §2.8
-    "containment join": ancestor expansion; semantics = reference range
-    containment cellid.rs:393-410 — a covering cell contains a leaf iff
-    it is the leaf's ancestor at its own level).
+    """Join ``df`` against many regions: df columns + ``region_id`` for
+    every (row, region) with the row inside the region.
 
-    ``region_join`` (range form) broadcasts the ranges table but the
-    BETWEEN predicate forces a BroadcastNestedLoopJoin: every fact row is
-    tested against ALL range rows — linear per row, fatal at 10⁴⁺ regions.
-    Here each fact row instead explodes into its ancestors at exactly the
-    levels present in the coverings (level histogram, ≤31 and typically
-    ≤8 — native bit arithmetic, JVM Generate, no Python), and the join is
-    `ancestor == covering_cell`: hashable/sort-merge-able, shuffle
-    co-locatable with the table's cell_id partitioning, O(1) per probe.
+    A PURE EQUI-JOIN (SURVEY.md §2.8 "containment join": ancestor
+    expansion; semantics = reference range containment cellid.rs:393-410
+    — a covering cell contains a leaf iff it is the leaf's ancestor at
+    its own level). Each fact row explodes into its ancestors at exactly
+    the levels present in the coverings (native bit arithmetic, JVM
+    Generate, no Python), and the join is ``ancestor == covering_cell``
+    against a broadcast ``LocalRelation``: hashable, O(1) per probe,
+    shuffle co-locatable with the table's cell_id partitioning. (A
+    BETWEEN range join on the biased leaf ranges plans as a
+    BroadcastNestedLoopJoin that tests every row against every range;
+    at local[4] on a 4-core VM it was 1.9× slower with 3 caps and 12.7×
+    with 40 on the perfbench table, and slower on every sf0.1 shape
+    measured, including a single 60° cap and a Rect.)
 
-    Output and semantics match ``region_join`` exactly: df columns +
-    ``region_id``, with the exact geometric post-filter applied to
-    boundary-cell rows (covering cells within one region are disjoint, so
-    a row matches at most one covering cell per region — no dedup needed).
-
-    ``fast=True`` (default): regions are covered with ``fast_covering``
-    (cell_union_bound + normalize — no heap refinement) and the exact
-    filter runs on every candidate row. With thousands of regions this is
-    the scale shape twice over: driver-side covering cost drops ~10× and
-    the level histogram collapses to a handful of adjacent levels, so the
-    fact-side explode factor stays ~4 instead of ~17. ``fast=False``
-    uses the exact coverer + interior coverings (tighter candidates,
-    interior rows skip the exact filter) — right for few large regions.
+    Regions are covered with ``fast_covering`` (cell_union_bound +
+    normalize, no heap refinement; caps in ONE vectorized pass): the
+    level histogram collapses to a few adjacent levels, so the fact-side
+    explode factor stays small, and the exact filter runs on every
+    candidate. Covering cells within one region are disjoint, so a row
+    matches at most one covering cell per region — no dedup. Cap regions
+    carry (center, radius²) as columns of the covering table, so the
+    exact filter is ONE constant-size chord² expression for any region
+    count; non-cap regions fall back to a per-region predicate chain.
     """
     all_caps = all(isinstance(r, Cap) for r in regions)
-    batch_fast = (
-        fast
-        and all_caps
+    if (
+        all_caps
         and coverer.min_level == 0
         and coverer.max_level == 30
         and coverer.level_mod == 1
         and coverer.max_cells >= 4
-    )
-    if batch_fast:
+    ):
         # one vectorized pass over ALL regions' fast coverings (bit-equal
         # to the scalar path) — ~1000 caps in ~10ms instead of ~2s
         cx = np.array([r.center[0] for r in regions])
@@ -259,54 +198,44 @@ def region_join_ancestors(
         cols = [
             np.asarray(region_ids, dtype=np.int64)[reg],
             ids.view(np.int64),
-            np.zeros(len(ids), dtype=bool),
             cx[reg], cy[reg], cz[reg], r2[reg],
         ]
     else:
-        cols = [[] for _ in range(7 if all_caps else 3)]
+        cols = [[] for _ in range(6 if all_caps else 2)]
         for rid, region in zip(region_ids, regions):
-            if fast:
-                outer = coverer.fast_covering(region)
-                flags = np.zeros(len(outer.ids), dtype=bool)
-            else:
-                outer = coverer.covering(region)
-                inner = coverer.interior_covering(region)
-                flags = inner.contains_ids(outer.ids)
-            n = len(outer.ids)
-            cols[0] += [rid] * n
-            cols[1] += outer.ids.view(np.int64).tolist()
-            cols[2] += flags.tolist()
+            ids = coverer.fast_covering(region).ids
+            cols[0] += [rid] * len(ids)
+            cols[1] += ids.view(np.int64).tolist()
             if all_caps:
-                for col, v in zip(cols[3:], (*region.center, region.radius2)):
-                    col += [v] * n
+                for col, v in zip(cols[2:], (*region.center, region.radius2)):
+                    col += [v] * len(ids)
     cells = np.asarray(cols[1], dtype=np.int64).view(np.uint64)
-    levels = {int(lv) for lv in k.level(cells)}
-    schema = "region_id long, ccell long, rinterior boolean"
+    levels = sorted({int(lv) for lv in k.level(cells)})
+    schema = "region_id long, ccell long"
     if all_caps:
         schema += ", rcx double, rcy double, rcz double, rr2 double"
     cov_df = local_frame(spark, cols, schema)
-    anc = F.explode(
-        F.array(*[s2_parent(cell_col, lv) for lv in sorted(levels)])
-    ).alias("__anc")
-    fact = df.select("*", anc)
-    j = fact.join(cov_df, F.col("__anc") == F.col("ccell"), "inner")
+    anc = F.explode(F.array(*[s2_parent(cell_col, lv) for lv in levels]))
+    j = df.select("*", anc.alias("__anc")).join(
+        F.broadcast(cov_df), F.col("__anc") == F.col("ccell"), "inner"
+    )
     if all_caps:
         x, y, z = xyz_cols(lat_col, lng_col)
         exact = (
             chord2_expr(x, y, z, F.col("rcx"), F.col("rcy"), F.col("rcz"))
             <= F.col("rr2")
         )
-        out = j.where(F.col("rinterior") | exact)
-        return out.drop(
-            "__anc", "ccell", "rinterior", "rcx", "rcy", "rcz", "rr2"
-        )
+        return j.where(exact).drop("__anc", "ccell", "rcx", "rcy", "rcz", "rr2")
     exact = F.lit(False)
     for rid, region in zip(region_ids, regions):
         exact = F.when(
             F.col("region_id") == F.lit(rid), exact_predicate(region, lat_col, lng_col)
         ).otherwise(exact)
-    out = j.where(F.col("rinterior") | exact)
-    return out.drop("__anc", "ccell", "rinterior")
+    return j.where(exact).drop("__anc", "ccell")
+
+
+# kept because bench.py, perfbench and the driver queries call this name
+region_join_ancestors = region_join
 
 
 def _ring_cells_np(lat, lng, lvls) -> list[np.ndarray]:
@@ -538,7 +467,7 @@ def within_distance_join_df_var(
     ONE scan of the fact side explodes each fact row to its ancestors
     at exactly the ACTIVE levels (the probe-side level histogram, ≤ 31
     values driver-collected as a bounded list — the
-    ``region_join_ancestors`` shape), however many radius classes the
+    ``region_join`` shape), however many radius classes the
     probes span. Candidates are ONE equi-join on the cell key alone —
     a cell id encodes its level. Per probe the exactness guarantee is
     exactly ``within_distance_join_df``'s one-round ring contract, and
@@ -645,11 +574,10 @@ def region_anti_join(
     lat_col: str = "lat",
     lng_col: str = "lng",
     id_col: str = "image_id",
-    fast: bool = True,
 ) -> DataFrame:
     """Geofence exclusion at region-table scale: rows of ``df`` inside
     NONE of the ``regions``, as a LEFT ANTI join against the matched-id
-    set of ``region_join_ancestors`` (pure equi-join candidates + exact
+    set of ``region_join`` (pure equi-join candidates + exact
     post-filter — the 10⁴-region shape).
 
     Cost is the standard distributed anti-join: one fact scan to build
@@ -657,10 +585,10 @@ def region_anti_join(
     ``id_col``. Requires ``id_col`` to identify rows uniquely (the
     anti-join key).
     """
-    matched = region_join_ancestors(
+    matched = region_join(
         spark, df.select(id_col, cell_col, lat_col, lng_col),
         regions, list(range(len(regions))),
         coverer=coverer, cell_col=cell_col,
-        lat_col=lat_col, lng_col=lng_col, fast=fast,
+        lat_col=lat_col, lng_col=lng_col,
     ).select(id_col).distinct()
     return df.join(matched, id_col, "left_anti")

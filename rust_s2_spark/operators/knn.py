@@ -579,15 +579,11 @@ def _knn_join_df_lazy(
             # all-literal shortcut once measured 1.5× slower, while
             # literal frames were still pickled Python RDDs.
             qids, qlat, qlng = _probe_arrays(head)
-            slices = (
-                _tail_literal_rounds(
-                    spark, df, qids, qlat, qlng,
-                    _probe_start_levels(qlat, qlng, tables, 8 * kk),
-                    np.zeros(len(qids), dtype=bool),
-                    kk, 0, persisted, lambda: tables, *cols,
-                )
-                if qids
-                else []
+            slices = _tail_literal_rounds(
+                spark, df, qids, qlat, qlng,
+                _probe_start_levels(qlat, qlng, tables, 8 * kk),
+                np.zeros(len(qids), dtype=bool),
+                kk, 0, persisted, lambda: tables, *cols,
             )
         else:
             slices = _relational_rounds(

@@ -2,10 +2,10 @@
 joins (SURVEY.md §2.6 #47-48 as DataFrame operators).
 
 The polyline is a broadcast query artifact (driver-side vertices).
-Candidate pruning: cover the polyline buffered by the radius
-(per-segment caps via expand_by_radius on the segment-chain covering),
-push the ranges to the scan; the numpy point-to-segment kernel scores
-only the candidates.
+Candidate pruning: cover the polyline buffered by the radius (its exact
+edge cells at the radius level, expanded by one neighbor ring), push
+the ranges to the scan; the numpy point-to-segment kernel scores only
+the candidates.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from ..geometry import Cap, CellUnion, RegionCoverer
+from ..geometry import CellUnion
 from ..geometry import point as pt
 from ..kernels import cellid as k
 from .covering_join import CoveringRanges, range_predicate
@@ -47,28 +47,6 @@ def polyline_distance_expr(vertices: np.ndarray, lat_col: str, lng_col: str) -> 
     return _dist(F.col(lat_col), F.col(lng_col))
 
 
-def polyline_covering_ranges(
-    vertices: np.ndarray, radius_rad: float, max_cells_per_segment: int = 8
-) -> CoveringRanges:
-    """Buffered covering of the polyline: per-segment cap coverings
-    expanded by the radius, normalized into one CellUnion."""
-    verts = np.asarray(vertices, dtype=np.float64)
-    ids = []
-    for i in range(len(verts) - 1):
-        a, b = verts[i], verts[i + 1]
-        mid = (a + b) / np.linalg.norm(a + b)
-        half = math.acos(max(-1.0, min(1.0, float(np.dot(a, b))))) / 2.0
-        cap = Cap(tuple(mid), pt.angle_to_chord2(half + radius_rad))
-        rc = RegionCoverer(
-            min_level=0, max_level=30, level_mod=1, max_cells=max_cells_per_segment
-        )
-        ids.extend(int(c) for c in rc.covering(cap).ids)
-    cu = CellUnion(np.array(ids, dtype=np.uint64))
-    lo = [int(x) for x in k.bias_u64(k.range_min(cu.ids))]
-    hi = [int(x) for x in k.bias_u64(k.range_max(cu.ids))]
-    return CoveringRanges(lo, hi, [False] * len(lo))
-
-
 def polyline_covering_ranges_tight(
     latlng_vertices: list[tuple[float, float]], radius_rad: float
 ) -> CoveringRanges:
@@ -93,16 +71,12 @@ def near_polyline(
     biased_col: str = "cell_id_biased",
     lat_col: str = "lat",
     lng_col: str = "lng",
-    tight: bool = True,
 ) -> DataFrame:
     """Rows within radius_deg of the polyline, with a
     ``dist_chord2`` column. Pruning ranges push to the scan."""
     verts = np.array([pt.latlng_to_xyz(la, lo) for la, lo in latlng_vertices])
     radius_rad = math.radians(radius_deg)
-    if tight:
-        ranges = polyline_covering_ranges_tight(latlng_vertices, radius_rad)
-    else:
-        ranges = polyline_covering_ranges(verts, radius_rad)
+    ranges = polyline_covering_ranges_tight(latlng_vertices, radius_rad)
     d = polyline_distance_expr(verts, lat_col, lng_col)
     threshold = pt.angle_to_chord2(radius_rad)
     return (

@@ -935,8 +935,6 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured-Streaming windowed rollup (6h windows × face) over the
     events table, run to completion with availableNow; the oracle is
     the same rollup in DuckDB (time_bucket + trig face)."""
-    import tempfile
-
     from ..sources.images import _derivation_sql
     from ..streaming import assign_cells
 
@@ -946,43 +944,29 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(d["lat"]).alias("lat"),
         F.expr(d["lng"]).alias("lng"),
     )
-    tmp = tempfile.mkdtemp(prefix="s2streamq_")
-    events.write.mode("overwrite").parquet(f"{tmp}/in")
-    stream = spark.readStream.schema(events.schema).parquet(f"{tmp}/in")
-    rolled = (
-        assign_cells(stream)
+    return _snapshot_available_now(
+        spark,
+        events,
+        "stream_rollup_q",
+        lambda stream: assign_cells(stream)
         .withWatermark("ts", "1 hour")
         .groupBy(
             F.window(F.col("ts"), "6 hours").alias("w"),
             s2_face("cell_id").alias("face"),
         )
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    name = "rollup_oracle_q"
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_rollup availableNow query did not finish in 300s")
-    return spark.sql(
-        f"SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS ws, face, n FROM {name}"
+        .agg(F.count("*").cast("long").alias("n")),
+        "SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS ws, face, n "
+        "FROM {name}",
     )
 
 
 def q_stream_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming spatial join (streaming/cell_stream.
     streaming_region_rollup): the events-derived point stream joined
-    against the three static city caps (broadcast covering ranges +
-    exact chord² refine — stream-static, stateless), rolled up into 6h
-    event-time windows per region. Oracle = exact cap membership +
-    time_bucket counts in DuckDB."""
-    import tempfile
-
+    against the three static city caps (cell-ancestor equi-join against
+    a broadcast covering table + exact chord² refine — stream-static,
+    stateless), rolled up into 6h event-time windows per region. Oracle
+    = exact cap membership + time_bucket counts in DuckDB."""
     from ..geometry import Cap
     from ..sources.images import _CITIES, _derivation_sql
     from ..streaming import streaming_region_rollup
@@ -993,25 +977,14 @@ def q_stream_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(d["lat"]).alias("lat"),
         F.expr(d["lng"]).alias("lng"),
     )
-    tmp = tempfile.mkdtemp(prefix="s2streamsj_")
-    events.write.mode("overwrite").parquet(f"{tmp}/in")
-    stream = spark.readStream.schema(events.schema).parquet(f"{tmp}/in")
     caps = [Cap.from_latlng_degrees(la, ln, CITY_CAP_DEG) for la, ln in _CITIES]
-    rolled = streaming_region_rollup(spark, stream, caps, [0, 1, 2])
-    name = "stream_spatial_join_q"
-    q = (
-        rolled.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_spatial_join availableNow query did not finish")
-    return spark.sql(
-        f"SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS ws, "
-        f"region_id, n FROM {name}"
+    return _snapshot_available_now(
+        spark,
+        events,
+        "stream_spatial_join_q",
+        lambda stream: streaming_region_rollup(spark, stream, caps, [0, 1, 2]),
+        "SELECT date_format(w.start, 'yyyy-MM-dd HH:mm:ss') AS ws, "
+        "region_id, n FROM {name}",
     )
 
 
@@ -1048,6 +1021,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions whose end (last event + gap) <= the global max event time;
     the oracle replays the merge rule (cut at diff >= gap) and that
     emission filter relationally."""
+    import shutil
     import tempfile
 
     from ..streaming import streaming_sessions
@@ -1056,28 +1030,31 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("timestamp").alias("ts"), "user_id", "event_id"
     )
     tmp = tempfile.mkdtemp(prefix="s2streamsess_")
-    # ONE staged file -> ONE availableNow micro-batch: the watermark
-    # advances exactly once at the end, so emission is deterministic
-    # (multi-batch splits would drop "late" rows batch-dependently)
-    events.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
-    stream = spark.readStream.schema(events.schema).parquet(f"{tmp}/in")
-    sess = streaming_sessions(stream, gap=f"{SESSION_GAP_SEC} seconds")
-    name = "stream_sessions_q"
-    q = (
-        sess.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_sessions availableNow query did not finish")
-    return spark.sql(
-        f"SELECT user_id, unix_micros(session_window.start) AS ss_us, "
-        f"unix_micros(session_window.end) AS se_us, n_events FROM {name}"
-    )
+    try:
+        # ONE staged file -> ONE availableNow micro-batch: the watermark
+        # advances exactly once at the end, so emission is deterministic
+        # (multi-batch splits would drop "late" rows batch-dependently)
+        events.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
+        stream = spark.readStream.schema(events.schema).parquet(f"{tmp}/in")
+        sess = streaming_sessions(stream, gap=f"{SESSION_GAP_SEC} seconds")
+        name = "stream_sessions_q"
+        q = (
+            sess.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError("stream_sessions availableNow query did not finish")
+        return spark.sql(
+            f"SELECT user_id, unix_micros(session_window.start) AS ss_us, "
+            f"unix_micros(session_window.end) AS se_us, n_events FROM {name}"
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def o_stream_sessions() -> str:
@@ -1115,6 +1092,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per phash) over the images table, run to completion with
     availableNow; the oracle recomputes first-seen per key relationally
     (min order-key per phash + duplicate count)."""
+    import shutil
     import tempfile
 
     from ..streaming import streaming_first_seen
@@ -1127,27 +1105,33 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ts"),
     )
     tmp = tempfile.mkdtemp(prefix="s2streamdedup_")
-    # one staged file → one availableNow micro-batch, so n_dups_in_batch
-    # counts every duplicate (later-batch dups are swallowed uncounted)
-    img.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
-    stream = spark.readStream.schema(img.schema).parquet(f"{tmp}/in")
-    deduped = streaming_first_seen(stream, "phash", ts_col="ts")
-    name = "stream_dedup_q"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_dedup availableNow query did not finish in 300s")
-    return spark.sql(
-        f"SELECT key, date_format(first_ts, 'yyyy-MM-dd HH:mm:ss') AS first_ts, "
-        f"n_dups_in_batch AS n FROM {name}"
-    )
+    try:
+        # one staged file → one availableNow micro-batch, so
+        # n_dups_in_batch counts every duplicate (later-batch dups are
+        # swallowed uncounted)
+        img.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/in")
+        stream = spark.readStream.schema(img.schema).parquet(f"{tmp}/in")
+        deduped = streaming_first_seen(stream, "phash", ts_col="ts")
+        name = "stream_dedup_q"
+        q = (
+            deduped.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{tmp}/ckpt")
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(
+                "stream_dedup availableNow query did not finish in 300s"
+            )
+        return spark.sql(
+            f"SELECT key, date_format(first_ts, 'yyyy-MM-dd HH:mm:ss') AS first_ts, "
+            f"n_dups_in_batch AS n FROM {name}"
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def o_stream_dedup() -> str:

@@ -149,11 +149,12 @@ def streaming_region_rollup(
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Streaming spatial join + windowed rollup: a geotagged point
-    stream joined against a STATIC region set (the operators/
-    covering_join.region_join machinery — broadcast covering ranges +
-    exact refine works unchanged on a streaming DataFrame because every
-    piece is stateless), then event-time windows x region counts with a
-    watermark for late data.
+    stream joined against a STATIC region set (operators/covering_join.
+    region_join — the stream's cell ancestors equi-joined against a
+    broadcast covering LocalRelation, then the exact refine; it runs
+    unchanged on a streaming DataFrame as a stateless stream-static
+    join), then event-time windows x region counts with a watermark for
+    late data.
 
     At 100 TB-of-stream scale this is the ingest-side geofencing shape:
     the static side is broadcast once per micro-batch, the stream never

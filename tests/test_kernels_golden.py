@@ -231,6 +231,9 @@ def test_all_neighbors_matches_vertex_neighbors():
             got_all.add(int(c[0]))
             c = k.next_id(c)
         assert got_all == want
+    # no cells → no rings, at any neighbor level
+    for nbr_level in (0, 7, 30):
+        assert k.all_neighbors(np.array([], dtype=np.uint64), nbr_level) == []
 
 
 def test_common_ancestor_level():

@@ -69,7 +69,10 @@ def test_pip_filter_pushes_both_scans(stored):
 def test_region_join_broadcasts_ranges(stored, spark):
     caps = [Cap.from_latlng_degrees(40.7128, -74.0060, 2.0)]
     plan = _plan(region_join(spark, stored, caps, [0]))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    # the ancestor equi-join against the broadcast covering table —
+    # never a nested loop that tests every row against every range
+    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" not in plan  # fact table must not shuffle
     _assert_literal_side_is_local(plan)
 
@@ -163,32 +166,87 @@ def test_region_join_ancestors_is_equi_join(stored, spark):
     _assert_literal_side_is_local(plan)
 
 
-def test_region_join_ancestors_matches_range_join(stored, spark):
-    """The equi-join form must produce row-for-row the same result as the
-    broadcast range-join form (same exact post-filter semantics)."""
+def _brute_region_pairs(pdf, regions) -> set:
+    """(region_id, image_id) of every row inside every region, by
+    numpy arithmetic on the collected coordinates — no covering, no
+    Spark expression. Rows whose membership sits within float noise of
+    a region boundary would make the reference ambiguous; assert there
+    are none, so the comparison can be exact."""
+    lat = pdf["lat"].to_numpy(np.float64)
+    lng = pdf["lng"].to_numpy(np.float64)
+    la, lo = np.radians(lat), np.radians(lng)
+    p = np.stack([np.cos(lo) * np.cos(la), np.sin(lo) * np.cos(la), np.sin(la)], 1)
+    out = set()
+    for rid, region in enumerate(regions):
+        if isinstance(region, Cap):
+            margin = ((p - np.array(region.center)) ** 2).sum(1) - region.radius2
+        else:
+            lat_lo, lat_hi = np.degrees([region.lat.lo, region.lat.hi])
+            lng_lo, lng_hi = np.degrees([region.lng.lo, region.lng.hi])
+            assert lng_lo <= lng_hi, "brute force takes non-wrapping rects"
+            margin = np.maximum.reduce(
+                [lat_lo - lat, lat - lat_hi, lng_lo - lng, lng - lng_hi]
+            )
+        assert not np.any(np.abs(margin) < 1e-9), "row on a region boundary"
+        out |= {(rid, int(i)) for i in pdf["image_id"][margin < 0]}
+    return out
+
+
+def test_region_join_matches_numpy_brute_force(stored, spark):
+    """The one many-region join against an independent numpy brute
+    force, on both exact-filter paths: 60 caps plus a cap across the
+    antimeridian and a polar cap (the batched cap covering and the
+    constant-size chord² filter), a Rect beside a cap (the per-region
+    predicate chain), and no regions at all. Planted rows put points
+    inside the antimeridian and polar caps, and rows with NULL or NaN
+    coordinates must match nothing."""
+    from rust_s2_spark.functions import s2_cell_from_latlng
+    from rust_s2_spark.geometry import Rect
     from rust_s2_spark.operators.covering_join import (
         region_join,
         region_join_ancestors,
     )
 
-    caps, ids = _many_caps(60)
-    cols = ["region_id", "image_id"]
-    a = {
-        tuple(r) for r in region_join(spark, stored, caps, ids)
-        .select(*cols).collect()
-    }
-    b = {
-        tuple(r) for r in region_join_ancestors(spark, stored, caps, ids)
-        .select(*cols).collect()
-    }
-    c = {
-        tuple(r)
-        for r in region_join_ancestors(spark, stored, caps, ids, fast=False)
-        .select(*cols).collect()
-    }
-    assert len(a) > 0, "test caps matched nothing — widen them"
-    assert a == b
-    assert a == c
+    assert region_join_ancestors is region_join
+    base = stored.select("image_id", "lat", "lng", "cell_id")
+    planted = [
+        (10**9 + 0, 10.0, 179.9), (10**9 + 1, 10.2, -179.8),
+        (10**9 + 2, 89.9, 45.0), (10**9 + 3, 88.0, -120.0),
+        (10**9 + 4, None, None), (10**9 + 5, None, -74.0),
+        (10**9 + 6, float("nan"), float("nan")), (10**9 + 7, 40.7, float("nan")),
+    ]
+    extra = spark.createDataFrame(
+        planted, "image_id long, lat double, lng double"
+    ).withColumn("cell_id", s2_cell_from_latlng("lat", "lng"))
+    df = base.unionByName(
+        extra.select(*[extra[c].cast(base.schema[c].dataType) for c in base.columns])
+    ).localCheckpoint(eager=True)
+    pdf = df.select("image_id", "lat", "lng").toPandas()
+
+    caps, _ = _many_caps(60)
+    caps += [
+        Cap.from_latlng_degrees(10.0, 180.0, 1.0),  # across the antimeridian
+        Cap.from_latlng_degrees(90.0, 0.0, 3.0),    # polar
+    ]
+    mixed = [Rect.from_degrees(30.0, -80.0, 45.0, -60.0), caps[0]]
+    for regions in (caps, mixed, []):
+        ids = list(range(len(regions)))
+        out = region_join(spark, df, regions, ids)
+        assert out.columns == df.columns + ["region_id"]
+        got = {
+            (int(r[0]), int(r[1]))
+            for r in out.select("region_id", "image_id").collect()
+        }
+        assert got == _brute_region_pairs(pdf, regions)
+        assert not {i for _, i in got} & {10**9 + i for i in range(4, 8)}
+        if regions is caps:
+            assert any(i < 10**9 for _, i in got), "test caps matched no table row"
+            planted_hits = {(60, 10**9), (60, 10**9 + 1), (61, 10**9 + 2), (61, 10**9 + 3)}
+            assert planted_hits <= got
+        elif regions is mixed:
+            assert any(rid == 0 for rid, _ in got), "the Rect matched nothing"
+        else:
+            assert got == set()
 
 
 def test_knn_attempt_pushes_candidate_ranges(stored):
