@@ -16,15 +16,9 @@ twin on 15k scale ids.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType
 
-from ..kernels import cellid as k
-
-MIN_LONG = -(2**63)
+from .columns import MIN_LONG, _cell_from_latlng_udf, _from_token_udf, _to_token_udf
 
 # body expressions mirror functions/columns.py exactly (tested equal)
 _SQL_FUNCS = {
@@ -101,25 +95,6 @@ def register_sql_functions(spark: SparkSession) -> None:
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} RETURN {body}"
         )
-
-    @pandas_udf(LongType())
-    def s2_cell_from_latlng(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        # degrees in, same as the Column API
-        ids = k.cell_from_latlng(
-            lat.to_numpy(np.float64), lng.to_numpy(np.float64)
-        )
-        return pd.Series(ids.view(np.int64))
-
-    @pandas_udf(StringType())
-    def s2_token(ids: pd.Series) -> pd.Series:
-        u = ids.to_numpy(np.int64).view(np.uint64)
-        return pd.Series(k.to_token(u))
-
-    @pandas_udf(LongType())
-    def s2_from_token(tok: pd.Series) -> pd.Series:
-        ids = k.from_token(tok.to_numpy(object))
-        return pd.Series(ids.view(np.int64))
-
-    spark.udf.register("s2_cell_from_latlng", s2_cell_from_latlng)
-    spark.udf.register("s2_token", s2_token)
-    spark.udf.register("s2_from_token", s2_from_token)
+    spark.udf.register("s2_cell_from_latlng", _cell_from_latlng_udf)
+    spark.udf.register("s2_token", _to_token_udf)
+    spark.udf.register("s2_from_token", _from_token_udf)

@@ -57,9 +57,9 @@ class CoveringRanges:
     interior: list[bool]
 
 
-def covering_ranges(region, coverer: RegionCoverer = DEFAULT_COVERER) -> CoveringRanges:
-    outer = coverer.covering(region)
-    inner = coverer.interior_covering(region)
+def covering_ranges(region) -> CoveringRanges:
+    outer = DEFAULT_COVERER.covering(region)
+    inner = DEFAULT_COVERER.interior_covering(region)
     lo = [int(x) for x in k.bias_u64(k.range_min(outer.ids))]
     hi = [int(x) for x in k.bias_u64(k.range_max(outer.ids))]
     interior = [bool(b) for b in inner.contains_ids(outer.ids)]
@@ -120,7 +120,6 @@ def exact_predicate(region, lat_col: str, lng_col: str) -> Column:
 def region_filter(
     df: DataFrame,
     region,
-    coverer: RegionCoverer = DEFAULT_COVERER,
     biased_col: str = "cell_id_biased",
     lat_col: str = "lat",
     lng_col: str = "lng",
@@ -136,7 +135,7 @@ def region_filter(
     would make Catalyst distribute the AND and lose pushdown — that
     trick only pays when the exact test is a Python UDF; see
     operators/pip.py.)"""
-    ranges = covering_ranges(region, coverer)
+    ranges = covering_ranges(region)
     candidate = range_predicate(ranges, biased_col)
     return df.where(candidate & exact_predicate(region, lat_col, lng_col))
 
@@ -146,7 +145,6 @@ def region_join(
     df: DataFrame,
     regions: list,
     region_ids: list,
-    coverer: RegionCoverer = DEFAULT_COVERER,
     cell_col: str = "cell_id",
     lat_col: str = "lat",
     lng_col: str = "lng",
@@ -179,15 +177,10 @@ def region_join(
     count; non-cap regions fall back to a per-region predicate chain.
     """
     all_caps = all(isinstance(r, Cap) for r in regions)
-    if (
-        all_caps
-        and coverer.min_level == 0
-        and coverer.max_level == 30
-        and coverer.level_mod == 1
-        and coverer.max_cells >= 4
-    ):
+    if all_caps:
         # one vectorized pass over ALL regions' fast coverings (bit-equal
-        # to the scalar path) — ~1000 caps in ~10ms instead of ~2s
+        # to DEFAULT_COVERER.fast_covering) — ~1000 caps in ~10ms
+        # instead of ~2s
         cx = np.array([r.center[0] for r in regions])
         cy = np.array([r.center[1] for r in regions])
         cz = np.array([r.center[2] for r in regions])
@@ -201,14 +194,11 @@ def region_join(
             cx[reg], cy[reg], cz[reg], r2[reg],
         ]
     else:
-        cols = [[] for _ in range(6 if all_caps else 2)]
+        cols = [[], []]
         for rid, region in zip(region_ids, regions):
-            ids = coverer.fast_covering(region).ids
+            ids = DEFAULT_COVERER.fast_covering(region).ids
             cols[0] += [rid] * len(ids)
             cols[1] += ids.view(np.int64).tolist()
-            if all_caps:
-                for col, v in zip(cols[2:], (*region.center, region.radius2)):
-                    col += [v] * len(ids)
     cells = np.asarray(cols[1], dtype=np.int64).view(np.uint64)
     levels = sorted({int(lv) for lv in k.level(cells)})
     schema = "region_id long, ccell long"
@@ -402,8 +392,14 @@ def within_distance_join_df(
     the cell key (shuffle co-locatable with the table's cell
     partitioning, AQE-broadcastable when the probe side is small,
     salt-able if skewed); the exact chord² predicate keeps true pairs.
-    Runs no driver action, so ``streaming_within_distance`` lifts it
-    onto a probe stream unchanged.
+
+    Runs on a STREAMING probe side unchanged (e.g. "alert on every
+    indexed asset within r of each incoming ping"): it runs no driver
+    action, the ring level is a constant, the ring explode is a per-row
+    map and the equi-join is stream-static, so each micro-batch gets
+    exactly the batch rows. Persist the fact side's ring-level parent
+    column so each batch pays only the join; downstream aggregations
+    need complete/update mode or a watermark, as usual.
     """
     lvl, chord2_max = _radius_level(radius_deg)
     cand = probes.select(
@@ -533,7 +529,6 @@ def within_distance_join_df_var(
 def region_anti_filter(
     df: DataFrame,
     regions: list,
-    coverer: RegionCoverer = DEFAULT_COVERER,
     biased_col: str = "cell_id_biased",
     lat_col: str = "lat",
     lng_col: str = "lng",
@@ -554,10 +549,16 @@ def region_anti_filter(
     the membership OR is coalesced to false (bare ``NOT(NULL)`` would
     silently drop them, diverging from the left_anti regime, which
     keeps unmatched rows by construction).
+
+    A single stateless predicate, so it runs on a stream unchanged
+    ("alert on every ping inside none of the fences"): each micro-batch
+    row is tested row-locally, no state, no join. For thousands of
+    fences on a stream, run ``region_anti_join`` per micro-batch in
+    foreachBatch instead.
     """
     member = F.lit(False)
     for region in regions:
-        ranges = covering_ranges(region, coverer)
+        ranges = covering_ranges(region)
         member = member | (
             range_predicate(ranges, biased_col)
             & exact_predicate(region, lat_col, lng_col)
@@ -569,7 +570,6 @@ def region_anti_join(
     spark: SparkSession,
     df: DataFrame,
     regions: list,
-    coverer: RegionCoverer = DEFAULT_COVERER,
     cell_col: str = "cell_id",
     lat_col: str = "lat",
     lng_col: str = "lng",
@@ -588,7 +588,6 @@ def region_anti_join(
     matched = region_join(
         spark, df.select(id_col, cell_col, lat_col, lng_col),
         regions, list(range(len(regions))),
-        coverer=coverer, cell_col=cell_col,
-        lat_col=lat_col, lng_col=lng_col,
+        cell_col=cell_col, lat_col=lat_col, lng_col=lng_col,
     ).select(id_col).distinct()
     return df.join(matched, id_col, "left_anti")

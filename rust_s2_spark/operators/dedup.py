@@ -31,6 +31,9 @@ from ..plans.frames import local_frame
 # values, so its candidate set stays the one minhash_lsh_pairs proposes
 _ROWS_PER_BAND = 4
 _MAX_BUCKET = 1_000
+# connected_components runs union-find on the driver at or below this
+# many edges, and the distributed star rounds above it
+_DRIVER_MAX_EDGES = 200_000
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -121,7 +124,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     rows_per_band: int = _ROWS_PER_BAND,
     max_bucket: int | None = _MAX_BUCKET,
-    materialize_sigs: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded minhash (b bands ×
     r rows): minhash h_i = min over shingles of the (i mod 4)-th 8-hex
@@ -133,15 +135,13 @@ def minhash_lsh_pairs(
     oracle-able); one shingle pass computes every minhash (map-side
     partial min aggregation, see ``_doc_shingles``).
 
-    ``materialize_sigs`` (default): the per-doc signature table (one
-    row per doc — ~1000× smaller than the shingle stream) is
-    localCheckpoint'ed before the bucket self-join, so the shingle +
-    minhash pipeline runs ONCE instead of once per join side (~6×
-    end-to-end at sf0.1). Pass False to keep the plan fully lazy
-    (plan-inspection tests).
+    The per-doc signature table (one row per doc — ~1000× smaller than
+    the shingle stream) is localCheckpoint'ed before the bucket
+    self-join, so the shingle + minhash pipeline runs ONCE instead of
+    once per join side (~6× end-to-end at sf0.1).
     """
     docs = _doc_shingles(df, text_col, id_col, n, bands, rows_per_band)
-    return _band_pairs(docs, id_col, bands, max_bucket, materialize_sigs)
+    return _band_pairs(docs, id_col, bands, max_bucket)
 
 
 def _band_pairs(
@@ -149,12 +149,11 @@ def _band_pairs(
     id_col: str,
     bands: int,
     max_bucket: int | None,
-    materialize_sigs: bool,
 ) -> DataFrame:
     """minhash_lsh_pairs' bucket self-join over ``_doc_shingles`` rows."""
-    wide = docs.select(id_col, *[f"sig{b}" for b in range(bands)])
-    if materialize_sigs:
-        wide = wide.localCheckpoint(eager=True)
+    wide = docs.select(
+        id_col, *[f"sig{b}" for b in range(bands)]
+    ).localCheckpoint(eager=True)
     sigs = wide.select(
         id_col,
         F.explode(
@@ -407,7 +406,6 @@ def connected_components(
     a_col: str = "a",
     b_col: str = "b",
     max_iter: int = 25,
-    driver_max_edges: int = 200_000,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph: the cluster
     step of dedup (each component keeps one canonical doc = the min id).
@@ -452,14 +450,13 @@ def connected_components(
     likewise treated as isolated — the a != b filter drops such rows,
     and downstream select_canonical keeps absent docs by construction).
 
-    ``driver_max_edges``: edge sets at or below this bound skip the
-    distributed rounds and run exact union-find over the collected
-    edges (driver traffic bounded by the parameter; the labeling —
-    component = min member id — is identical to the star fixed point,
-    pinned by test). At small scale each distributed round costs ~1 s
-    of scheduler latency whatever the data size, so this is the
-    broadcast-join analogy: same semantics, size-appropriate physical
-    plan. Set 0 to always run distributed.
+    Edge sets of at most ``_DRIVER_MAX_EDGES`` skip the distributed
+    rounds and run exact union-find over the collected edges (driver
+    traffic bounded by the constant; the labeling — component = min
+    member id — is identical to the star fixed point, pinned by test).
+    At small scale each distributed round costs ~1 s of scheduler
+    latency whatever the data size, so this is the broadcast-join
+    analogy: same semantics, size-appropriate physical plan.
     """
     edges = (
         pairs.select(
@@ -471,7 +468,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     n_edges = edges.count()
-    if driver_max_edges and n_edges <= driver_max_edges:
+    if n_edges <= _DRIVER_MAX_EDGES:
         # small-input fast path (round-10): below the bound the edge
         # set is driver-bounded by construction, and each distributed
         # star round costs ~1 s of pure scheduler latency regardless
@@ -479,7 +476,7 @@ def connected_components(
         # reproduces the star fixed point's (v, min-id) labeling
         # row-for-row (pinned by test vs the distributed path). Large
         # edge sets (the 100 TB regime) take the distributed rounds
-        # below, unchanged; pass driver_max_edges=0 to force them.
+        # below, unchanged.
         labels = _union_find_labels(
             [(r["a"], r["b"]) for r in edges.collect()]
         )
@@ -620,9 +617,7 @@ def ensemble_dedup_vote(
     deterministic (rounded jaccard, integer hamming, boolean keep).
     Returns (a, b, jaccard, hamming, keep)."""
     shingled = _doc_shingles(docs, text_col, id_col, n, bands, _ROWS_PER_BAND)
-    # materializing changes only how often the signatures are computed,
-    # never the pairs
-    pairs = _band_pairs(shingled, id_col, bands, _MAX_BUCKET, materialize_sigs=True)
+    pairs = _band_pairs(shingled, id_col, bands, _MAX_BUCKET)
     jac = _pair_jaccard(shingled, pairs, id_col)
     sh = simhash64(docs, text_col, id_col)
     # LEFT joins: a token-less (empty/whitespace) doc has NO simhash row

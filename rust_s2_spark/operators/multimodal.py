@@ -847,19 +847,17 @@ def audio_landmark_match(
     max_bin: int = 8,
     quantize_power: bool = False,
     min_alphabet: int | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Landmark-vote audio retrieval: corpus landmarks equi-join query
     landmarks on the hash, votes grouped per (query, candidate, frame
     offset), winner = max votes (ties: offset ASC, candidate ASC).
     Returns (query_id, match_id, votes, best_offset).
 
-    ``broadcast_queries`` (default on) hints the query side of the
-    corpus join: a retrieval batch is tiny next to a 10^9-clip corpus,
-    and the corpus-side landmark table has no Catalyst stats (it comes
-    out of mapInPandas), so without the hint the planner falls back to
-    a full shuffle of the corpus landmarks. Turn it off for
-    corpus-vs-corpus joins where both sides are large.
+    The query side of the corpus join is broadcast: a retrieval batch
+    is tiny next to a 10^9-clip corpus, and the corpus-side landmark
+    table has no Catalyst stats (it comes out of mapInPandas), so
+    without the hint the planner falls back to a full shuffle of the
+    corpus landmarks.
 
     ``min_alphabet`` guards the scale regime: pass the key cardinality
     the deployment needs (e.g. 10^5) and the call refuses an alphabet
@@ -878,10 +876,8 @@ def audio_landmark_match(
     q = audio_landmarks(
         query_fp, dt_min, dt_max, max_bin, quantize_power, id_out="query_id"
     ).withColumnRenamed("t", "qt")
-    if broadcast_queries:
-        q = F.broadcast(q)
     votes = (
-        lm.join(q, "h")
+        lm.join(F.broadcast(q), "h")
         .groupBy(
             "query_id",
             F.col("clip_id").alias("cand"),

@@ -321,12 +321,10 @@ def loop_contains_expr_indexed(
 def pip_filter(
     df: DataFrame,
     loop,
-    coverer: RegionCoverer = PIP_COVERER,
     biased_col: str = "cell_id_biased",
     lat_col: str = "lat",
     lng_col: str = "lng",
     cell_col: str = "cell_id",
-    indexed: bool = True,
 ) -> DataFrame:
     """Rows of df inside the region (a Loop, or a Polygon with holes).
 
@@ -337,11 +335,10 @@ def pip_filter(
     before any when()/or short-circuit — and would also break parquet
     filter pushdown.)
 
-    ``indexed=True`` (default, requires ``cell_col``) uses the per-cell
-    edge index; ``indexed=False`` keeps the all-edges kernel (right for
-    tiny polygons where the index build outweighs the scan)."""
-    outer = coverer.covering(loop)
-    inner = coverer.interior_covering(loop)
+    Boundary rows use the per-cell edge index when ``df`` carries
+    ``cell_col``, and the all-edges kernel otherwise."""
+    outer = PIP_COVERER.covering(loop)
+    inner = PIP_COVERER.interior_covering(loop)
     flags = inner.contains_ids(outer.ids)
     lo = [int(x) for x in k.bias_u64(k.range_min(outer.ids))]
     hi = [int(x) for x in k.bias_u64(k.range_max(outer.ids))]
@@ -356,7 +353,7 @@ def pip_filter(
     inner_rows = df.where(certain)
     if len(boundary_cells) == 0:
         return inner_rows
-    if indexed and cell_col in df.columns:
+    if cell_col in df.columns:
         exact = loop_contains_expr_indexed(
             loop, boundary_cells, lat_col, lng_col, cell_col
         )

@@ -116,16 +116,15 @@ def polyline_crossing_join(
     id_col: str = "traj_id",
     lats_col: str = "lats",
     lngs_col: str = "lngs",
-    level_offset: int = 6,
 ) -> DataFrame:
     """Trajectory-intersection self-join: all trajectory pairs (a < b)
     with at least one interior segment crossing, plus the crossing
     count — the "do these two tracks cross?" shape.
 
     Candidates: each segment is SAMPLED along its lat/lng line at a
-    spacing of half the cell min-width at a level ``level_offset``
-    levels FINER than the segment-length level, and emits the distinct
-    1-rings of its sample cells. A crossing point X lies on both
+    spacing of half the cell min-width at a level 6 levels FINER than
+    the segment-length level, and emits the distinct 1-rings of its
+    sample cells. A crossing point X lies on both
     segments, so each side has a sample within half a cell width of X,
     whose cell is therefore X's cell or an adjacent one — both rings
     contain cell(X), and the plain cell EQUI-join matches. One shuffle
@@ -164,7 +163,7 @@ def polyline_crossing_join(
 
     rad = math.radians(1.5 * max_seg_deg)
     seg_lvl = max(1, min(30, metrics.MIN_WIDTH.max_level(rad)))
-    lvl = min(30, seg_lvl + level_offset)
+    lvl = min(30, seg_lvl + 6)
     # samples spaced <= half the min cell width along the segment
     n_samples = int(math.ceil(math.radians(max_seg_deg) / (0.5 * metrics.MIN_WIDTH.value(lvl)))) + 1
 

@@ -310,7 +310,6 @@ def ivf_assign(
     centroids: np.ndarray,
     vec_col: str = "embedding",
     out_col: str = "cid",
-    native: bool | None = None,
 ) -> DataFrame:
     """Nearest-centroid assignment (argmax cosine, ties to the lowest
     centroid id) — the IVF coarse-quantizer map pass (no shuffle; at
@@ -328,9 +327,7 @@ def ivf_assign(
       node instead of ~nc*dim literals.
     """
     nc, dim = np.asarray(centroids).shape
-    if native is None:
-        native = nc * dim <= IVF_NATIVE_MAX_LITERALS
-    if native:
+    if nc * dim <= IVF_NATIVE_MAX_LITERALS:
         return df.withColumn("__cos", _ivf_cos_array(vec_col, centroids)).withColumn(
             out_col,
             (F.array_position("__cos", F.array_max("__cos")) - 1).cast("int"),
@@ -358,15 +355,12 @@ def ivf_probe(
     nprobe: int,
     vec_col: str = "embedding",
     out_col: str = "cids",
-    native: bool | None = None,
 ) -> DataFrame:
     """``nprobe`` nearest centroids per query row (ordered by -cosine,
     ties to the lowest centroid id), as an array<int> column — same
     two-regime split as ``ivf_assign``."""
     nc, dim = np.asarray(centroids).shape
-    if native is None:
-        native = nc * dim <= IVF_NATIVE_MAX_LITERALS
-    if native:
+    if nc * dim <= IVF_NATIVE_MAX_LITERALS:
         probe_arr = F.slice(
             F.array_sort(
                 F.zip_with(

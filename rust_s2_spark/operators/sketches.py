@@ -222,7 +222,6 @@ def heavy_hitters(
     threshold: int,
     d: int = 4,
     w: int = 256,
-    mode: str = "auto",
 ) -> DataFrame:
     """EXACT heavy hitters (support count >= threshold) with
     sketch-bounded memory — the candidates + exact-verify discipline
@@ -268,8 +267,8 @@ def heavy_hitters(
     null, so the exclusion is spelled out); the oracle must filter
     them too if the column is nullable.
 
-    Two physical regimes behind the same contract (``mode='auto'``
-    picks by the d*w literal budget; 'literal'/'join' force):
+    Two physical regimes behind the same contract, picked by d*w
+    against ``HH_LITERAL_BUDGET``:
 
     * **literal** (d*w <= 2048): counters collected to the driver and
       folded into ONE least-of-array-lookups expression — beyond the
@@ -285,19 +284,9 @@ def heavy_hitters(
       the candidate groupBy — BroadcastHashJoin LeftSemi is map-side —
       and the broadcast is threshold-pruned, so width is unbounded
       (w = millions is d small broadcasts, not d*w literals)."""
-    if mode not in ("auto", "literal", "join"):
-        raise ValueError(f"unknown heavy_hitters mode {mode!r}")
-    if mode == "auto":
-        mode = "literal" if d * w <= HH_LITERAL_BUDGET else "join"
-    if mode == "literal" and d * w > HH_LITERAL_BUDGET:
-        raise ValueError(
-            f"d*w = {d * w} > {HH_LITERAL_BUDGET} literal budget: the "
-            "lookup expression would stall whole-stage codegen; use "
-            "mode='join' (threshold-pruned broadcast semi joins)"
-        )
     v = f"CAST(`{value_col}` AS STRING)"
     hkey = _hh_hash_key(df, value_col)
-    if mode == "literal":
+    if d * w <= HH_LITERAL_BUDGET:
         counts = {
             (r["i"], r["b"]): r["c"]
             for r in _hh_counters(df, value_col, hkey, d, w).collect()

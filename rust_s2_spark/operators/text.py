@@ -314,8 +314,8 @@ def surprisal_score(
     ).where(F.length("tok") > 0)
     # materialize the count table ONCE: `total` needs an eager action
     # anyway, and without the checkpoint the tokenize+groupBy pipeline
-    # would re-run for the broadcast vocab (the minhash
-    # materialize_sigs discipline)
+    # would re-run for the broadcast vocab (as minhash_lsh_pairs
+    # checkpoints its signatures)
     counts = toks.groupBy("tok").agg(F.count("*").alias("__c")).localCheckpoint(
         eager=True
     )

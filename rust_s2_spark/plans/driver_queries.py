@@ -492,6 +492,19 @@ def _memo(spark: SparkSession, sf_dir: str, key: str, builder):
     return _SHARED_MEMO[mk]
 
 
+def _exit_tmpdir(prefix: str) -> str:
+    """A temp directory for a session-memoized staged table, removed
+    when the interpreter exits: the memo serves the table for the whole
+    session, so no single query may delete it."""
+    import atexit
+    import shutil
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def _shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_lsh_pairs
 
@@ -2104,12 +2117,11 @@ def _stored_images_path(spark: SparkSession, sf_dir: str) -> str:
     """Session-memoized write of the Hilbert-laid-out images table
     (sources.images.write_images_table, WITH bytes) — the stored-table
     side of the fidelity invariant."""
-    import tempfile
 
     def build():
         from ..sources.images import write_images_table
 
-        path = tempfile.mkdtemp(prefix="s2fid_") + "/images"
+        path = _exit_tmpdir("s2fid_") + "/images"
         write_images_table(spark, sf_dir, path, with_bytes=True)
         return path
 
@@ -2163,7 +2175,6 @@ def _stored_lossy_images_path(spark: SparkSession, sf_dir: str) -> str:
     image_id % 15 == 0 row is re-encoded through the deterministic
     lossy codec (operators/multimodal.encode_qdct) before the
     production range-partitioned + Hilbert-sorted layout write."""
-    import tempfile
 
     def build():
         from ..operators.multimodal import encode_images_qdct
@@ -2173,7 +2184,7 @@ def _stored_lossy_images_path(spark: SparkSession, sf_dir: str) -> str:
         key = F.col("image_id").cast("long")
         lossy = encode_images_qdct(imgs.where(key % QDCT_FID_MOD == 0))
         mixed = imgs.where(key % QDCT_FID_MOD != 0).unionByName(lossy)
-        path = tempfile.mkdtemp(prefix="s2fidq_") + "/images"
+        path = _exit_tmpdir("s2fidq_") + "/images"
         layout_write(mixed, path)
         return path
 
@@ -2388,9 +2399,7 @@ def q_heavy_hitters_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import heavy_hitters
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return heavy_hitters(
-        li, "l_partkey", HH_THRESHOLD, d=CM_D, w=HH_WIDE_W, mode="join"
-    )
+    return heavy_hitters(li, "l_partkey", HH_THRESHOLD, d=CM_D, w=HH_WIDE_W)
 
 
 def o_heavy_hitters_wide() -> str:
@@ -3044,16 +3053,16 @@ SWD_RADIUS_DEG = 0.8
 
 
 def q_stream_within_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING within-distance join (streaming/cell_stream.
-    streaming_within_distance): a 1-in-13 probe stream (availableNow
-    over staged parquet) against the STATIC images table at 0.8° —
-    the stateless fixed-radius DF-probe join lifted to Structured
-    Streaming unchanged (ring level is a constant, explode is a
-    per-row map, the equi-join is stream-static) — then the per-probe
+    """STREAMING within-distance join (covering_join.
+    within_distance_join_df on a stream): a 1-in-13 probe stream
+    (availableNow over staged parquet) against the STATIC images table
+    at 0.8° — the stateless fixed-radius DF-probe join lifted to
+    Structured Streaming unchanged (ring level is a constant, explode
+    is a per-row map, the equi-join is stream-static) — then the per-probe
     aggregate in complete mode, snapshot from the memory sink. Oracle
     = the same exhaustive chord² scan shape as within_distance_df, so
     the streaming lift is gated against algorithm-independent truth."""
-    from ..streaming import streaming_within_distance
+    from ..operators.covering_join import within_distance_join_df
 
     img = _images(spark, sf_dir)
     iid = F.col("image_id").cast("long")
@@ -3064,7 +3073,7 @@ def q_stream_within_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def op(pstream):
-        return streaming_within_distance(
+        return within_distance_join_df(
             img, pstream, SWD_RADIUS_DEG
         ).groupBy("query_id").agg(
             F.count("*").cast("long").alias("n"),
@@ -3197,15 +3206,15 @@ FROM fold f LEFT JOIN exact_v x ON x.query_id = f.query_id
 
 
 def q_stream_region_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING geofence exclusion (streaming/cell_stream.
-    streaming_region_anti): the full image stream filtered to pings
-    inside NONE of the five caps — a single stateless negated predicate
-    lifted to Structured Streaming unchanged — then the global count +
+    """STREAMING geofence exclusion (covering_join.region_anti_filter
+    on a stream): the full image stream filtered to pings inside NONE
+    of the five caps — a single stateless negated predicate lifted to
+    Structured Streaming unchanged — then the global count +
     id-mod checksum in complete mode. Oracle = o_region_anti verbatim
     (same fences, same universe), so the streaming lift is gated
     against the batch truth."""
     from ..geometry import Cap
-    from ..streaming import streaming_region_anti
+    from ..operators.covering_join import region_anti_filter
 
     img = _images(spark, sf_dir).select(
         F.col("image_id").cast("long").alias("image_id"),
@@ -3214,7 +3223,7 @@ def q_stream_region_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps = [Cap.from_latlng_degrees(a, b, r) for a, b, r in ANTI_CAPS]
 
     def op(stream):
-        return streaming_region_anti(stream, caps).agg(
+        return region_anti_filter(stream, caps).agg(
             F.count("*").cast("long").alias("n"),
             F.sum(F.col("image_id") % F.lit(1000003))
             .cast("long")
@@ -3407,13 +3416,13 @@ SCS_LEVELS = (5, 7)
 
 def q_stream_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally maintained density stats on an ingest stream
-    (streaming/cell_stream.streaming_cell_stats): the (level, cell, n)
+    (plans/stats.build_cell_stats on a stream): the (level, cell, n)
     table that seeds knn_join_df/salting, kept fresh as rows arrive —
     one stateless ancestor explode + a stateful count whose state is
     bounded by Σ 6·4^L counters. availableNow complete-mode snapshot
     must equal the batch build (oracle = the relational Hilbert encode
     + parent bit-math GROUP BYs, same universe as cells_per_parent7)."""
-    from ..streaming import streaming_cell_stats
+    from .stats import build_cell_stats
 
     spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
         "orders"
@@ -3423,7 +3432,7 @@ def q_stream_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _snapshot_available_now(
         spark, img, "stream_cell_stats_q",
-        lambda stream: streaming_cell_stats(stream, levels=SCS_LEVELS),
+        lambda stream: build_cell_stats(stream, levels=SCS_LEVELS),
         "SELECT level, cell, CAST(n AS BIGINT) AS n FROM {name}",
     )
 

@@ -37,7 +37,14 @@ def build_cell_stats(
     """(level, cell, n) row counts per parent cell, for every requested
     level, in ONE scan of ``df``: each row explodes to its ancestors at
     exactly ``levels`` (native Generate) and one groupBy counts them.
-    Output is bounded by Σ 6·4^L rows regardless of |df|."""
+    Output is bounded by Σ 6·4^L rows regardless of |df|.
+
+    On an ingest stream the same code is a streaming stateful
+    aggregation, which keeps the stats fresh as rows arrive: state is
+    bounded by the same Σ 6·4^L counters and needs no watermark (cell
+    counts never expire). Use ``update`` output mode + foreachBatch to
+    merge changed counters into the persisted ``_cell_stats`` table, or
+    ``complete`` to snapshot it."""
     lvls = sorted(set(int(x) for x in levels))
     if not lvls or any(not (0 <= x <= 30) for x in lvls):
         raise ValueError(f"levels must be non-empty, each in [0, 30]: {levels}")

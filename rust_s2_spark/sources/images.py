@@ -317,7 +317,6 @@ def write_images_table(
     with_bytes: bool = True,
     partition_level: int = 5,
     n_buckets: int = 64,
-    two_phase: bool = False,
     multiplier: int = 1,
 ) -> None:
     """Materialize the images table the way the 100 TB Iceberg table
@@ -325,21 +324,10 @@ def write_images_table(
     id, so every covering-join range predicate prunes files via parquet
     min/max stats and scans are Hilbert-clustered.
 
-    ``two_phase=True`` stages the encoded rows to parquet first and
-    range-lays-out from the materialized column — repartitionByRange's
-    sampling pass re-runs the whole upstream lineage (the encode UDF
-    evaluates twice); when the per-row encode is expensive (real image
-    decode + phash, not this synthetic derivation) the extra staging
-    write is cheaper than the second UDF pass.
-
     (Stand-in for Iceberg write with sort order cell_id_biased; plain
     parquet here because the sandbox has no Iceberg runtime.)
     """
     df = images_from_orders(spark, sf_dir, with_bytes, partition_level, multiplier)
-    if two_phase:
-        staging = f"{out_path}__staging"
-        df.write.mode("overwrite").parquet(staging)
-        df = spark.read.parquet(staging)
     layout_write(df, out_path, n_buckets)
 
 

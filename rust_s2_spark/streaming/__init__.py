@@ -1,11 +1,8 @@
 from .cell_stream import (  # noqa: F401
     assign_cells,
-    streaming_cell_stats,
     streaming_first_seen,
     streaming_knn,
-    streaming_region_anti,
     streaming_region_rollup,
     streaming_sessions,
-    streaming_within_distance,
     windowed_cell_counts,
 )

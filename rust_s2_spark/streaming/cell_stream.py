@@ -266,35 +266,6 @@ def streaming_cm_counters(
     )
 
 
-def streaming_within_distance(
-    facts: DataFrame,
-    probe_stream: DataFrame,
-    radius_deg: float,
-    **cols,
-) -> DataFrame:
-    """Fixed-radius within-distance join with a STREAMING probe side
-    against a STATIC fact table — the ingest-time form of the
-    reference's point_index range query (point_index.rs), e.g. "alert
-    on every indexed asset within r of each incoming ping".
-
-    ``within_distance_join_df`` is stateless per probe row: the ring
-    level is a Python-side constant derived from the radius, the ring
-    explode is a per-row map (pandas-UDF kernel — fine in streaming),
-    and the candidate equi-join + exact chord² filter carry no state.
-    So the batch operator lifts to Structured Streaming UNCHANGED and
-    this wrapper only documents the contract: per micro-batch the
-    static fact side joins the exploded probe rings (a stream-static
-    inner join — Spark broadcasts or re-scans the static side per
-    batch; at scale, persist the fact table's ring-level parent column
-    so each batch pays only the join), giving exactly the batch
-    semantics row-for-row. Downstream aggregations need complete/
-    update mode or a watermark, as usual.
-    """
-    from ..operators.covering_join import within_distance_join_df
-
-    return within_distance_join_df(facts, probe_stream, radius_deg, **cols)
-
-
 def streaming_knn(
     facts: DataFrame,
     probe_stream: DataFrame,
@@ -396,45 +367,3 @@ def streaming_knn(
     if trigger:
         writer = writer.trigger(**trigger)
     return writer.start()
-
-
-def streaming_cell_stats(
-    stream: DataFrame, levels: tuple[int, ...] = (7,), cell_col: str = "cell_id"
-) -> DataFrame:
-    """Incrementally maintained density statistics over an ingest
-    stream — the streaming twin of ``plans.stats.build_cell_stats``,
-    closing the loop on the stats lifecycle: built at write time for
-    batch tables, kept fresh here for streaming ingest, consumed by the
-    density-adaptive operators (``knn_join_df(stats=)``,
-    ``salted_repartition(hot=)``).
-
-    The batch builder is ONE stateless ancestor explode (native
-    Generate) + a groupBy count, which is exactly a streaming stateful
-    aggregation — so the same code runs on a stream unchanged, with
-    state bounded by Σ 6·4^L counters (the same bound as the batch
-    output; no watermark needed since cell counts never expire). Use
-    ``update`` output mode + foreachBatch to merge changed counters
-    into the persisted ``_cell_stats`` table, or ``complete`` to
-    snapshot it.
-    """
-    from ..plans.stats import build_cell_stats
-
-    return build_cell_stats(stream, levels=levels, cell_col=cell_col)
-
-
-def streaming_region_anti(stream: DataFrame, regions, **cols) -> DataFrame:
-    """Geofence EXCLUSION on a stream — "alert on every ping that is
-    inside NONE of the fences" (the canonical streaming use of the
-    anti-filter; complement of streaming_region_rollup's membership).
-
-    ``region_anti_filter`` is a single stateless negated predicate
-    (NULL-safe membership OR), so it lifts to Structured Streaming
-    unchanged: per micro-batch every row is tested row-locally, no
-    state, no join. Downstream aggregations need complete/update mode
-    or a watermark, as usual. For thousands of fences use the
-    left_anti regime per micro-batch via foreachBatch instead (the
-    ``streaming_knn`` pattern).
-    """
-    from ..operators.covering_join import region_anti_filter
-
-    return region_anti_filter(stream, regions, **cols)

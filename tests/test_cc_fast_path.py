@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import random
 
+from rust_s2_spark.operators import dedup
 from rust_s2_spark.operators.dedup import connected_components
 
 
@@ -14,7 +15,15 @@ def _labels(df):
     return {(r.v, r.component) for r in df.collect()}
 
 
-def test_fast_path_matches_distributed_random_graphs(spark):
+def _labels_at_bound(df, monkeypatch, bound):
+    """Labels with the driver union-find bound patched to ``bound``
+    (0 forces the distributed star rounds on any non-empty graph)."""
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_DRIVER_MAX_EDGES", bound)
+        return _labels(connected_components(df))
+
+
+def test_fast_path_matches_distributed_random_graphs(spark, monkeypatch):
     rng = random.Random(42)
     for trial in range(4):
         n = rng.randint(5, 120)
@@ -25,11 +34,11 @@ def test_fast_path_matches_distributed_random_graphs(spark):
         ]
         df = spark.createDataFrame(pairs, "a long, b long")
         fast = _labels(connected_components(df))
-        dist = _labels(connected_components(df, driver_max_edges=0))
+        dist = _labels_at_bound(df, monkeypatch, 0)
         assert fast == dist, f"trial {trial}: fast path diverged"
 
 
-def test_fast_path_matches_distributed_chain_and_clique(spark):
+def test_fast_path_matches_distributed_chain_and_clique(spark, monkeypatch):
     rng = random.Random(7)
     ids = list(range(500))
     rng.shuffle(ids)
@@ -38,15 +47,15 @@ def test_fast_path_matches_distributed_chain_and_clique(spark):
     rows += [(5000, 5000)]  # self-pair: dropped by both paths
     df = spark.createDataFrame(rows, "a long, b long")
     fast = _labels(connected_components(df))
-    dist = _labels(connected_components(df, driver_max_edges=0))
+    dist = _labels_at_bound(df, monkeypatch, 0)
     assert fast == dist
     assert (5000, 5000) not in fast  # self-pair-only vertex stays out
 
 
-def test_fast_path_threshold_boundary(spark):
-    """At or below the bound → fast path; driver_max_edges=0 always
+def test_fast_path_threshold_boundary(spark, monkeypatch):
+    """At or below the bound → fast path; a bound of 0 always
     distributed. Both must agree on the tiny input either way."""
     df = spark.createDataFrame([(3, 1), (1, 2)], "a long, b long")
     want = {(1, 1), (2, 1), (3, 1)}
-    assert _labels(connected_components(df, driver_max_edges=2)) == want
-    assert _labels(connected_components(df, driver_max_edges=0)) == want
+    assert _labels_at_bound(df, monkeypatch, 2) == want
+    assert _labels_at_bound(df, monkeypatch, 0) == want

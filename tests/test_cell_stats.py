@@ -135,11 +135,9 @@ def test_write_read_roundtrip_and_lineage_hook(spark, images, tmp_path):
 
 
 def test_streaming_cell_stats_multibatch_equals_batch(spark, images, tmp_path):
-    """streaming_cell_stats over a multi-file (multi-micro-batch)
-    stream: the complete-mode snapshot equals the one-shot batch build
-    — the incremental state merge is exact, not approximate."""
-    from rust_s2_spark.streaming import streaming_cell_stats
-
+    """build_cell_stats over a multi-file (multi-micro-batch) stream:
+    the complete-mode snapshot equals the one-shot batch build — the
+    incremental state merge is exact, not approximate."""
     src = images.select("cell_id")
     src.repartition(3).write.mode("overwrite").parquet(str(tmp_path / "in"))
     stream = (
@@ -148,7 +146,7 @@ def test_streaming_cell_stats_multibatch_equals_batch(spark, images, tmp_path):
         .parquet(str(tmp_path / "in"))
     )
     q = (
-        streaming_cell_stats(stream, levels=(5, 7))
+        build_cell_stats(stream, levels=(5, 7))
         .writeStream.format("memory")
         .queryName("scs_test")
         .outputMode("complete")

@@ -157,7 +157,7 @@ def test_connected_components(spark):
     assert got == want
 
 
-def test_connected_components_raises_when_not_converged(spark):
+def test_connected_components_raises_when_not_converged(spark, monkeypatch):
     """A path far longer than 2^max_iter hops CANNOT converge (hop +
     pointer-jump covers at most ~doubling reach per round) — the
     operator must raise, never silently return split components
@@ -165,20 +165,23 @@ def test_connected_components_raises_when_not_converged(spark):
     upgrade)."""
     import pytest
 
+    from rust_s2_spark.operators import dedup
     from rust_s2_spark.operators.dedup import connected_components
 
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(199)], "a long, b long"
     )
+    # a 0-edge driver bound forces the distributed star rounds
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="fixed point"):
-        connected_components(path, max_iter=2, driver_max_edges=0)
+        connected_components(path, max_iter=2)
     # and with enough rounds the same graph is one component
     got = {r.component for r in
-           connected_components(path, max_iter=12, driver_max_edges=0).collect()}
+           connected_components(path, max_iter=12).collect()}
     assert got == {0}
 
 
-def test_connected_components_log_rounds_on_chains(spark):
+def test_connected_components_log_rounds_on_chains(spark, monkeypatch):
     """The round-9 scale fix: a 2000-vertex PATH (diameter 1999 — the
     chain shape a geographic DBSCAN core graph produces, which blew
     past 40 hash-to-min rounds at sf0.1) converges within the DEFAULT
@@ -190,6 +193,7 @@ def test_connected_components_log_rounds_on_chains(spark):
     Large-star/small-star is id-layout-independent: ~log n rounds."""
     import random
 
+    from rust_s2_spark.operators import dedup
     from rust_s2_spark.operators.dedup import connected_components
 
     rng = random.Random(9)
@@ -198,9 +202,10 @@ def test_connected_components_log_rounds_on_chains(spark):
     path = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(1999)], "a long, b long"
     )
-    # driver_max_edges=0 forces the distributed star rounds (the
-    # round-10 small-input fast path would otherwise shortcut this)
-    out = connected_components(path, driver_max_edges=0).collect()
+    # a 0-edge driver bound forces the distributed star rounds (the
+    # small-input union-find path would otherwise shortcut this)
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)
+    out = connected_components(path).collect()
     assert len(out) == 2000
     assert {r.component for r in out} == {0}
 
@@ -417,12 +422,13 @@ def test_review_fix_regressions(spark):
     assert len(set(texts)) == len(texts) == 6
 
 
-def test_ivf_assign_zero_centroid_sentinel(spark):
+def test_ivf_assign_zero_centroid_sentinel(spark, monkeypatch):
     """A zero-norm (dead) centroid must never win assignment in EITHER
     regime — the native path's 0/0 NaN previously sorted greatest and
     captured every row (review finding)."""
     import numpy as np
 
+    from rust_s2_spark.operators import similarity
     from rust_s2_spark.operators.similarity import ivf_assign
 
     emb = spark.createDataFrame(
@@ -432,8 +438,10 @@ def test_ivf_assign_zero_centroid_sentinel(spark):
     cents = np.array(
         [[0.0, 0.0, 0.0, 0.0], [1.0, 1.0, 0.0, 1.0], [-1.0, 0.5, 1.0, -1.0]]
     )
-    nat = {r.vec_id: r.cid for r in ivf_assign(emb, cents, native=True).collect()}
-    pud = {r.vec_id: r.cid for r in ivf_assign(emb, cents, native=False).collect()}
+    nat = {r.vec_id: r.cid for r in ivf_assign(emb, cents).collect()}
+    # a 0-literal budget forces the pandas-UDF matmul regime
+    monkeypatch.setattr(similarity, "IVF_NATIVE_MAX_LITERALS", 0)
+    pud = {r.vec_id: r.cid for r in ivf_assign(emb, cents).collect()}
     assert nat == pud
     assert 0 not in set(nat.values())
 
@@ -694,17 +702,20 @@ def test_cm_counters_equal_raw_row_fold(spark):
     assert None not in est  # null keys never surface
 
 
-def test_heavy_hitters_null_keys_excluded(spark):
+def test_heavy_hitters_null_keys_excluded(spark, monkeypatch):
     """Round-10 xxhash64 pin: md5 bucketing dropped null keys via null
     buckets; xxhash64 never returns null, so the exclusion now rides an
     explicit isNotNull — a corpus whose NULLs alone clear the threshold
-    must still emit no null-key row, in BOTH regimes."""
+    must still emit no null-key row, in BOTH regimes (d*w = 48 is
+    literal; a 0 literal budget forces the join regime)."""
+    from rust_s2_spark.operators import sketches
     from rust_s2_spark.operators.sketches import heavy_hitters
 
     rows = [(None,)] * 20 + [("x",)] * 6 + [("y",)] * 2
     df = spark.createDataFrame(rows, "k string").repartition(4)
-    for mode in ("literal", "join"):
-        out = {r.key: r.n for r in heavy_hitters(df, "k", 5, d=3, w=16, mode=mode).collect()}
+    for mode, budget in (("literal", sketches.HH_LITERAL_BUDGET), ("join", 0)):
+        monkeypatch.setattr(sketches, "HH_LITERAL_BUDGET", budget)
+        out = {r.key: r.n for r in heavy_hitters(df, "k", 5, d=3, w=16).collect()}
         assert out == {"x": 6}, (mode, out)
 
 

@@ -76,16 +76,39 @@ def test_heavy_hitters_exact_planted(spark):
     assert "Join" not in plan, plan
 
 
-def test_heavy_hitters_literal_budget_guard():
-    """A FORCED literal mode past the codegen budget must refuse (auto
-    mode routes wide sketches to the broadcast-semi-join regime
-    instead — see test_heavy_hitters_regimes.py)."""
-    from rust_s2_spark.operators.sketches import heavy_hitters
+# Operators pick their physical regime from a size they measure, or a
+# module constant, and their covering from a module coverer: none of
+# these parameters may come back as a caller-set knob.
+_REMOVED_SETTINGS = [
+    ("operators.covering_join", "covering_ranges", "coverer"),
+    ("operators.covering_join", "region_filter", "coverer"),
+    ("operators.covering_join", "region_join", "coverer"),
+    ("operators.covering_join", "region_anti_filter", "coverer"),
+    ("operators.covering_join", "region_anti_join", "coverer"),
+    ("operators.pip", "pip_filter", "coverer"),
+    ("operators.pip", "pip_filter", "indexed"),
+    ("operators.sketches", "heavy_hitters", "mode"),
+    ("operators.similarity", "ivf_assign", "native"),
+    ("operators.similarity", "ivf_probe", "native"),
+    ("operators.dedup", "minhash_lsh_pairs", "materialize_sigs"),
+    ("operators.dedup", "connected_components", "driver_max_edges"),
+    ("sources.images", "write_images_table", "two_phase"),
+    ("operators.multimodal", "audio_landmark_match", "broadcast_queries"),
+    ("operators.polyline", "polyline_crossing_join", "level_offset"),
+]
 
-    with pytest.raises(ValueError, match="literal budget"):
-        heavy_hitters(None, "k", 5, d=4, w=1024, mode="literal")
-    with pytest.raises(ValueError, match="unknown heavy_hitters mode"):
-        heavy_hitters(None, "k", 5, mode="wat")
+
+def test_removed_settings_stay_removed():
+    import importlib
+    import inspect
+
+    assert len(_REMOVED_SETTINGS) == 15
+    back = []
+    for mod, fn, param in _REMOVED_SETTINGS:
+        f = getattr(importlib.import_module(f"rust_s2_spark.{mod}"), fn)
+        if param in inspect.signature(f).parameters:
+            back.append(f"{mod}.{fn}({param}=)")
+    assert not back, back
 
 
 def test_histogram_quantiles_planted(spark):

@@ -2,14 +2,31 @@
 and the threshold-pruned broadcast-semi-join regime (unbounded width)
 must produce identical exact results, and the join regime's plan must
 stay shuffle-free before the candidate groupBy (the property that makes
-it viable at 100 TB)."""
+it viable at 100 TB). The regime is picked by d*w against
+``HH_LITERAL_BUDGET``, read at call time, so a test forces a regime by
+patching that budget."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from rust_s2_spark.operators import sketches
 from rust_s2_spark.operators.sketches import HH_LITERAL_BUDGET, heavy_hitters
+
+# budgets that force each regime at any test geometry
+_FORCE = {"literal": 1 << 40, "join": 0}
+
+
+def _hh(monkeypatch, regime, *args, **kwargs):
+    """heavy_hitters with ``regime`` forced through the budget."""
+    with monkeypatch.context() as m:
+        m.setattr(sketches, "HH_LITERAL_BUDGET", _FORCE[regime])
+        return heavy_hitters(*args, **kwargs)
+
+
+def _has_join(df):
+    return "Join" in df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture(scope="module")
@@ -31,20 +48,17 @@ def _exhaustive(df, t):
 
 
 @pytest.mark.parametrize("w", [64, 512])
-def test_literal_vs_join_identical(keyed, w):
+def test_literal_vs_join_identical(keyed, w, monkeypatch):
     """Both regimes forced at the SAME sketch geometry (straddling the
     budget at w=512: d*w = 2048 is the last literal width) — result
     sets must be identical and exact."""
     t = 60
     want = _exhaustive(keyed, t)
-    lit = {
-        (r["key"], r["n"])
-        for r in heavy_hitters(keyed, "key", t, d=4, w=w, mode="literal").collect()
-    }
-    jn = {
-        (r["key"], r["n"])
-        for r in heavy_hitters(keyed, "key", t, d=4, w=w, mode="join").collect()
-    }
+    lit_df = _hh(monkeypatch, "literal", keyed, "key", t, d=4, w=w)
+    jn_df = _hh(monkeypatch, "join", keyed, "key", t, d=4, w=w)
+    assert not _has_join(lit_df) and _has_join(jn_df)
+    lit = {(r["key"], r["n"]) for r in lit_df.collect()}
+    jn = {(r["key"], r["n"]) for r in jn_df.collect()}
     assert lit == want
     assert jn == want
 
@@ -52,13 +66,15 @@ def test_literal_vs_join_identical(keyed, w):
 def test_auto_routes_by_budget(keyed):
     t = 60
     want = _exhaustive(keyed, t)
-    # auto at w=4096 must take the join path (literal would raise)
-    wide = heavy_hitters(keyed, "key", t, d=4, w=4096, mode="auto")
-    got = {(r["key"], r["n"]) for r in wide.collect()}
-    assert got == want
-    with pytest.raises(ValueError, match="literal budget"):
-        heavy_hitters(keyed, "key", t, d=4, w=4096, mode="literal")
     assert 4 * 512 == HH_LITERAL_BUDGET
+    # w=4096 is past the budget: the join regime
+    wide = heavy_hitters(keyed, "key", t, d=4, w=4096)
+    assert _has_join(wide)
+    assert {(r["key"], r["n"]) for r in wide.collect()} == want
+    # d*w = 2048 is the last literal width: no join
+    last = heavy_hitters(keyed, "key", t, d=4, w=512)
+    assert not _has_join(last)
+    assert {(r["key"], r["n"]) for r in last.collect()} == want
 
 
 def test_join_regime_plan_is_mapside_before_groupby(keyed):
@@ -66,7 +82,7 @@ def test_join_regime_plan_is_mapside_before_groupby(keyed):
     the candidate groupBy's — no shuffle of input rows into the filter
     (the counters job is severed behind localCheckpoint)."""
     d = 4
-    out = heavy_hitters(keyed, "key", 60, d=d, w=4096, mode="join")
+    out = heavy_hitters(keyed, "key", 60, d=d, w=4096)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("LeftSemi") == d, plan
     assert plan.count("BroadcastHashJoin") == d, plan
@@ -76,7 +92,7 @@ def test_join_regime_plan_is_mapside_before_groupby(keyed):
 
 
 @pytest.mark.parametrize("mode", ["literal", "join"])
-def test_non_injective_cast_keeps_true_heavy_hitter(spark, mode):
+def test_non_injective_cast_keeps_true_heavy_hitter(spark, mode, monkeypatch):
     """The result key is CAST(value AS STRING), and that cast is not
     injective: the arrays ["a, b"] and ["a", "b"] both print as
     "[a, b]". With 40 rows of each, the key "[a, b]" has 80 rows and
@@ -87,7 +103,7 @@ def test_non_injective_cast_keeps_true_heavy_hitter(spark, mode):
     df = spark.createDataFrame(rows, "v array<string>")
     got = {
         (r["key"], r["n"])
-        for r in heavy_hitters(df, "v", 60, d=4, w=64, mode=mode).collect()
+        for r in _hh(monkeypatch, mode, df, "v", 60, d=4, w=64).collect()
     }
     assert got == {("[a, b]", 80)}
 
@@ -97,7 +113,7 @@ def test_injective_key_buckets_raw_column(spark, dtype, vals):
     """Where CAST(value AS STRING) is injective the filter hashes the
     raw column: the per-row cast to string would only add map cost."""
     df = spark.createDataFrame([(vals[0],), (vals[1],), (vals[1],)], f"v {dtype}")
-    out = heavy_hitters(df, "v", 2, d=4, w=64, mode="literal")
+    out = heavy_hitters(df, "v", 2, d=4, w=64)  # d*w = 256: literal
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "xxhash64(0, v#" in plan, plan
     assert {(r["key"], r["n"]) for r in out.collect()} == {("2", 2)}

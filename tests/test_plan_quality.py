@@ -387,16 +387,18 @@ def test_within_distance_family_one_python_stage(spark):
     assert all("," not in lk and "," not in rk for lk, rk in keys), keys
 
 
-def test_connected_components_round_shape(spark):
+def test_connected_components_round_shape(spark, monkeypatch):
     """Each hash-to-min round must be equi-join + groupBy only: no
     nested-loop join, no Python; the pair graph and labels are
     checkpointed so rounds never replay the upstream pipeline."""
+    from rust_s2_spark.operators import dedup
     from rust_s2_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40, 2)], "a long, b long"
     )
-    out = connected_components(pairs, driver_max_edges=0)
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)  # distributed rounds
+    out = connected_components(pairs)
     plan = _plan(out)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
@@ -453,16 +455,24 @@ def test_dedup_vote_no_shingle_shuffle(spark):
 
 
 def test_minhash_bucket_cap_adds_no_python(stored, spark):
-    from rust_s2_spark.operators.dedup import minhash_lsh_pairs
+    from rust_s2_spark.operators.dedup import (
+        _ROWS_PER_BAND,
+        _doc_shingles,
+        minhash_lsh_pairs,
+    )
 
     docs = spark.createDataFrame(
         [(i, f"document number {i} with some shared text") for i in range(50)],
         "doc_id long, text string",
     )
-    plan = _plan(
-        minhash_lsh_pairs(docs, "text", "doc_id", bands=4, materialize_sigs=False)
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # the signature pipeline (checkpointed inside minhash_lsh_pairs)
+    # and the bucket self-join after the checkpoint
+    for df in (
+        _doc_shingles(docs, "text", "doc_id", 5, 4, _ROWS_PER_BAND),
+        minhash_lsh_pairs(docs, "text", "doc_id", bands=4),
+    ):
+        plan = _plan(df)
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_within_distance_radius_sweep(spark, sf_dir):
@@ -784,19 +794,21 @@ def test_suggest_eps_plan_shape(stored):
     assert "CartesianProduct" not in plan
 
 
-def test_connected_components_no_nested_loop_rounds(spark):
+def test_connected_components_no_nested_loop_rounds(spark, monkeypatch):
     """Large-star/small-star rounds are groupBy-min + equi-joins only:
     the returned label frame's plan (checkpoint-truncated) and a probe
     round built on a live edge frame must both be free of nested
     loops, cartesian products, and Python evaluation."""
     from pyspark.sql import functions as F
 
+    from rust_s2_spark.operators import dedup
     from rust_s2_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(i, (i * 7 + 3) % 50) for i in range(50)], "a long, b long"
     ).where(F.col("a") != F.col("b"))
-    out = connected_components(pairs, driver_max_edges=0)
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_EDGES", 0)  # distributed rounds
+    out = connected_components(pairs)
     plan = _plan(out)
     for bad in ("BroadcastNestedLoopJoin", "CartesianProduct",
                 "BatchEvalPython", "ArrowEvalPython"):

@@ -119,13 +119,14 @@ def test_ivf_flat_recall(spark, emb):
     assert a16 == exact  # all cells probed == exact
 
 
-def test_ivf_assign_regime_guard(spark, emb):
+def test_ivf_assign_regime_guard(spark, emb, monkeypatch):
     """Above IVF_NATIVE_MAX_LITERALS the assignment/probe must switch to
     the pandas-UDF matmul path (the native literal tree would carry
     nc*dim literals into Catalyst), the plan must stay bounded, and both
     paths must agree exactly (round-3 ADVICE/verdict item)."""
     import numpy as np
 
+    from rust_s2_spark.operators import similarity
     from rust_s2_spark.operators.similarity import (
         IVF_NATIVE_MAX_LITERALS,
         ivf_assign,
@@ -145,14 +146,18 @@ def test_ivf_assign_regime_guard(spark, emb):
     assert len(plan) < 20_000, "UDF-path plan should not inline centroid literals"
 
     got = {r.vec_id: r.cid for r in auto.collect()}
-    want = {r.vec_id: r.cid for r in ivf_assign(d, cents, native=True).collect()}
-    assert got == want
-
     q = d.where(F.col("vec_id") < 6)
     p_udf = {r.vec_id: list(r.cids) for r in ivf_probe(q, cents, 4).collect()}
-    p_nat = {
-        r.vec_id: list(r.cids) for r in ivf_probe(q, cents, 4, native=True).collect()
-    }
+
+    # a budget of nc*dim literals forces the native regime
+    monkeypatch.setattr(similarity, "IVF_NATIVE_MAX_LITERALS", nc * dim)
+    nat = ivf_assign(d, cents)
+    plan = nat._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, "expected the native assignment path"
+    want = {r.vec_id: r.cid for r in nat.collect()}
+    assert got == want
+
+    p_nat = {r.vec_id: list(r.cids) for r in ivf_probe(q, cents, 4).collect()}
     assert p_udf == p_nat
 
 

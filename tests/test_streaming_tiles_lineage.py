@@ -252,23 +252,3 @@ def test_streaming_first_seen_ttl_expiry(spark):
         if q is not None:
             q.stop()
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_two_phase_ingest_same_rows(spark, sf_dir):
-    """two_phase=True (stage encoded rows, range-layout from the
-    materialized column) must produce the identical table."""
-    from rust_s2_spark.sources.images import read_images_table, write_images_table
-
-    t1 = tempfile.mkdtemp(prefix="s2tp1_")
-    t2 = tempfile.mkdtemp(prefix="s2tp2_")
-    try:
-        write_images_table(spark, sf_dir, f"{t1}/img", with_bytes=False)
-        write_images_table(spark, sf_dir, f"{t2}/img", with_bytes=False, two_phase=True)
-        a = read_images_table(spark, f"{t1}/img")
-        b = read_images_table(spark, f"{t2}/img")
-        assert a.count() == b.count()
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
-    finally:
-        shutil.rmtree(t1, ignore_errors=True)
-        shutil.rmtree(t2, ignore_errors=True)
