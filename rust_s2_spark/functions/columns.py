@@ -187,8 +187,19 @@ def xyz_cols(lat_deg, lng_deg) -> tuple[Column, Column, Column]:
 
 @pandas_udf(LongType())
 def _cell_from_latlng_udf(lat: pd.Series, lng: pd.Series) -> pd.Series:
-    ids = k.cell_from_latlng(lat.to_numpy(np.float64), lng.to_numpy(np.float64))
-    return pd.Series(ids.view(np.int64))
+    """Leaf cell id per row; NULL where lat or lng is NULL or NaN. Such
+    a row is on no cell, and the kernel would map it to leaf id 1, which
+    then joins every ring and ancestor that covers that leaf; with a
+    NULL id, ``s2_biased`` and ``s2_parent`` stay NULL and it joins
+    nothing."""
+    la = lat.to_numpy(np.float64)  # NULL reads NaN
+    lo = lng.to_numpy(np.float64)
+    bad = np.isnan(la) | np.isnan(lo)
+    if not bad.any():
+        return pd.Series(k.cell_from_latlng(la, lo).view(np.int64))
+    ids = np.zeros(len(la), dtype=np.int64)
+    ids[~bad] = k.cell_from_latlng(la[~bad], lo[~bad]).view(np.int64)
+    return pd.Series(pd.arrays.IntegerArray(ids, bad))
 
 
 def s2_cell_from_latlng(lat_deg, lng_deg) -> Column:

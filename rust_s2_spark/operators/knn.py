@@ -13,7 +13,13 @@ One driver-literal engine, ``_tail_literal_rounds``, runs the widening
 rounds: rings computed in numpy and broadcast as a literal frame, the
 fact scan pruned to the rings' merged leaf ranges, and the next ring of
 a probe that found fewer than k rows sized off the bounded level-7
-density histogram. It has three callers:
+density histogram. Each round is ONE Spark job, a ``toArrow`` of the
+ring join's (probe, id, distance) pairs; the driver ranks them, checks
+coverage and widens in numpy, and the result is a driver-held
+``local_frame``, so the engine persists and checkpoints nothing. Raw
+pairs are shipped only when the histogram bounds them under
+``_DRIVER_RANK_MAX_ROWS``; otherwise the round keeps each probe's top
+k in Spark first. It has three callers:
 
 - ``knn_join``: probes are a driver-side list, all starting at the
   level that ``radius_guess_deg`` gives.
@@ -30,10 +36,11 @@ from __future__ import annotations
 import contextlib
 import math
 import weakref
-from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -121,27 +128,24 @@ def knn_join(
     A query point whose lat or lng is None or NaN has no nearest
     neighbours and returns no rows, as in ``knn_join_df``.
 
-    The returned DataFrame is eagerly materialized (localCheckpoint) —
-    at most ``len(query_points) * kk`` rows — so no intermediate caches
-    stay pinned in executor memory after the call returns.
+    Each widening round is one Spark job, and the result — at most
+    ``len(query_points) * kk`` rows — comes back as a driver-held
+    ``local_frame``: nothing is persisted or checkpointed, so nothing
+    stays pinned in executor memory after the call returns. With no
+    histogram in hand a round keeps each probe's top ``kk`` in Spark
+    before its rows reach the driver (the engine's pre-trim).
     """
     from pyspark.sql.types import LongType
 
     qids, qlat, qlng = _probe_arrays(query_points)
     level = max(0, min(30, metrics.MIN_WIDTH.max_level(math.radians(radius_guess_deg))))
-    persisted: list[DataFrame] = []
-    try:
-        slices = _tail_literal_rounds(
-            spark, df, qids, qlat, qlng,
-            np.full(len(qids), level, dtype=np.int64),
-            np.zeros(len(qids), dtype=bool),
-            kk, 0, persisted, lambda: _level7_tables(df),
-            lat_col, lng_col, id_col, "query_id", "qlat", "qlng", LongType(),
-        )
-        return _ranked_out(slices, df, "query_id", id_col).localCheckpoint(eager=True)
-    finally:
-        for p in persisted:
-            p.unpersist()
+    return _tail_literal_rounds(
+        spark, df, qids, qlat, qlng,
+        np.full(len(qids), level, dtype=np.int64),
+        np.zeros(len(qids), dtype=bool),
+        kk, 0, None,
+        lat_col, lng_col, id_col, "query_id", "qlat", "qlng", LongType(),
+    )
 
 
 def _probe_arrays(rows) -> tuple[list, np.ndarray, np.ndarray]:
@@ -155,18 +159,9 @@ def _probe_arrays(rows) -> tuple[list, np.ndarray, np.ndarray]:
     return [r[0] for r, keep in zip(rows, ok) if keep], lat[ok], lng[ok]
 
 
-def _ranked_out(
-    slices: list[DataFrame], df: DataFrame, query_id_col: str, id_col: str
-) -> DataFrame:
+def _ranked_out(slices: list[DataFrame], query_id_col: str, id_col: str) -> DataFrame:
     """The union of the accepted rank slices as (query_id, rank int, id,
-    dist_chord2); an empty frame of that schema when there are none."""
-    if not slices:
-        return df.select(
-            F.lit(0).cast("long").alias(query_id_col),
-            F.lit(0).cast("int").alias("rank"),
-            F.col(id_col),
-            F.lit(0.0).alias("dist_chord2"),
-        ).limit(0)
+    dist_chord2)."""
     out = slices[0]
     for f in slices[1:]:
         out = out.unionByName(f)
@@ -475,11 +470,15 @@ def knn_join_df(
 
     - Literal regime (≤ ``_TAIL_COLLECT_MAX`` probes, e.g. a streaming
       micro-batch): start levels are computed on the driver, and every
-      round is driver-literal — rings in numpy, a broadcast candidate
-      frame, the merged-range OR-of-BETWEEN pushdown pruning the fact
-      scan, one ≤ |probes|-row flag collect per
-      unresolved round. The probe source is read once, and no Python
-      worker runs.
+      round is driver-literal and ONE Spark job — rings in numpy, a
+      broadcast candidate frame, the merged-range OR-of-BETWEEN
+      pushdown pruning the fact scan, and a ``toArrow`` of the ring
+      join's pairs that the driver ranks and checks. The pairs ship raw
+      when the level-7 histogram bounds them under
+      ``_DRIVER_RANK_MAX_ROWS``, else pre-trimmed to each probe's top
+      k in Spark. The result is a driver-held ``local_frame``: nothing
+      is persisted, and no checkpoint runs. The probe source is read
+      once, and no Python worker runs.
     - Relational regime (more probes): the first round is ONE scan of
       the fact side (exploded to its ancestors at exactly the active
       levels — cell ids encode their level so one equi-join column
@@ -490,7 +489,9 @@ def knn_join_df(
       it is collected and finishes in the literal rounds.
 
     Driver traffic is the bounded histogram up front, plus the probes
-    themselves only once they number at most ``_TAIL_COLLECT_MAX``.
+    themselves only once they number at most ``_TAIL_COLLECT_MAX``, and
+    then each literal round's pairs: at most ``_DRIVER_RANK_MAX_ROWS``
+    by the histogram's bound, or at most k per pending probe.
     """
     with _knn_join_df_lazy(
         df, queries, kk,
@@ -498,8 +499,9 @@ def knn_join_df(
         query_id_col=query_id_col, qlat_col=qlat_col, qlng_col=qlng_col,
         stats=stats, n_rows=n_rows,
     ) as out:
-        # ≤ |probes|·k rows; the round frames are released on exit
-        return out.localCheckpoint(eager=True)
+        # a literal result is already driver-held; a relational one
+        # (≤ |probes|·k rows) reads the round frames released on exit
+        return out if out.isLocal() else out.localCheckpoint(eager=True)
 
 
 @contextlib.contextmanager
@@ -516,10 +518,11 @@ def _knn_join_df_lazy(
     stats: DataFrame | None = None,
     n_rows: int | None = None,
 ):
-    """``knn_join_df``'s body: yields its result as a lazy DataFrame
-    over the persisted round frames and unpersists them on exit, so the
-    caller must materialize the result inside the ``with`` block (a
-    checkpoint, or a sink write that reads it once)."""
+    """``knn_join_df``'s body. In the literal regime it yields the
+    engine's driver-held ``local_frame``; in the relational regime a
+    lazy DataFrame over the persisted round frames, which it unpersists
+    on exit, so the caller must materialize that result inside the
+    ``with`` block (a checkpoint, or a sink write that reads it once)."""
     src = stats if stats is not None else df
     tables = _level7_tables(df, stats)
     n_tot = int(tables[1].sum())
@@ -551,45 +554,41 @@ def _knn_join_df_lazy(
                 f"but consider rebuilding",
                 stacklevel=4,  # past contextlib's __enter__ and knn_join_df
             )
+    spark = df.sparkSession
+    qid_type = queries.schema[query_id_col].dataType
     if n_tot == 0:
         # empty fact table: the exact k-nearest result is empty for
         # every probe — no join round can produce a row
-        yield _ranked_out([], df, query_id_col, id_col)
+        yield _local_result(spark, df, query_id_col, id_col, qid_type, [], [], [])
         return
 
-    spark = df.sparkSession
-    cols = (
-        lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col,
-        queries.schema[query_id_col].dataType,
+    cols = (lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col, qid_type)
+    # THE regime decision: one action reads at most one row past the
+    # literal cap
+    head = (
+        queries.select(query_id_col, qlat_col, qlng_col)
+        .limit(_TAIL_COLLECT_MAX + 1)
+        .collect()
     )
+    if len(head) <= _TAIL_COLLECT_MAX:
+        # Measured on perfbench spatial_query (100 probes, k = 5,
+        # local[4] on a 4-core VM): 10 Spark jobs a call against 22
+        # for a relational round 0 + tail, a p50 of 2.7-3.1 s
+        # against 4.7-5.2 s, and no Python-worker crossing.
+        qids, qlat, qlng = _probe_arrays(head)
+        yield _tail_literal_rounds(
+            spark, df, qids, qlat, qlng,
+            _probe_start_levels(qlat, qlng, tables, 8 * kk),
+            np.zeros(len(qids), dtype=bool),
+            kk, 0, tables, *cols,
+        )
+        return
     persisted: list[DataFrame] = []
     try:
-        # THE regime decision: one action reads at most one row past the
-        # literal cap
-        head = (
-            queries.select(query_id_col, qlat_col, qlng_col)
-            .limit(_TAIL_COLLECT_MAX + 1)
-            .collect()
+        slices = _relational_rounds(
+            spark, df, queries, kk, persisted, src, tables, *cols
         )
-        if len(head) <= _TAIL_COLLECT_MAX:
-            # Measured on perfbench spatial_query (100 probes, k = 5,
-            # local[4] on a 4-core VM): 10 Spark jobs a call against 22
-            # for a relational round 0 + tail, a p50 of 2.7-3.1 s
-            # against 4.7-5.2 s, and no Python-worker crossing. An
-            # all-literal shortcut once measured 1.5× slower, while
-            # literal frames were still pickled Python RDDs.
-            qids, qlat, qlng = _probe_arrays(head)
-            slices = _tail_literal_rounds(
-                spark, df, qids, qlat, qlng,
-                _probe_start_levels(qlat, qlng, tables, 8 * kk),
-                np.zeros(len(qids), dtype=bool),
-                kk, 0, persisted, lambda: tables, *cols,
-            )
-        else:
-            slices = _relational_rounds(
-                spark, df, queries, kk, persisted, src, tables, *cols
-            )
-        yield _ranked_out(slices, df, query_id_col, id_col)
+        yield _ranked_out(slices, query_id_col, id_col)
     finally:
         for p in persisted:
             p.unpersist()
@@ -724,7 +723,7 @@ def _relational_rounds(
             rows = nxt.select(
                 query_id_col, qlat_col, qlng_col, "__jl", "__gtd"
             ).collect()
-            slices.extend(
+            slices.append(
                 _tail_literal_rounds(
                     spark, df,
                     [r[0] for r in rows],
@@ -732,7 +731,7 @@ def _relational_rounds(
                     np.array([r[2] for r in rows], dtype=np.float64),
                     np.array([r[3] for r in rows], dtype=np.int64),
                     np.array([bool(r[4]) for r in rows]),
-                    kk, attempt, persisted, lambda: tables,
+                    kk, attempt, tables,
                     lat_col, lng_col, id_col,
                     query_id_col, qlat_col, qlng_col, qid_type,
                 )
@@ -759,6 +758,13 @@ def _relational_rounds(
     return slices
 
 
+# A literal round ships its raw candidate pairs to the driver only when
+# the level-7 histogram bounds them at or under this many rows (about
+# 25 MB of Arrow); over it, or with no histogram in hand, the round keeps
+# each probe's top k in Spark first, so the driver gets <= |pending|·k.
+_DRIVER_RANK_MAX_ROWS = 1 << 20
+
+
 def _tail_literal_rounds(
     spark: SparkSession,
     df: DataFrame,
@@ -769,8 +775,7 @@ def _tail_literal_rounds(
     gtd: np.ndarray,
     kk: int,
     attempt0: int,
-    persisted: list[DataFrame],
-    density: Callable[[], tuple],
+    tables: tuple | None,
     lat_col: str,
     lng_col: str,
     id_col: str,
@@ -778,19 +783,35 @@ def _tail_literal_rounds(
     qlat_col: str,
     qlng_col: str,
     qid_type,
-) -> list[DataFrame]:
+) -> DataFrame:
     """The one driver-literal widening engine, for a ``knn_join`` list,
     a small ``knn_join_df`` probe set from round 0, or the unresolved
-    tail of the relational rounds: rings computed in numpy, the
-    candidate frame broadcast, and the fact scan pruned with the
-    merged-range OR-of-BETWEEN pushdown (at 100 TB a round reads only
-    the row groups its rings cover instead of rescanning the table).
+    tail of the relational rounds. Returns one ``local_frame`` of
+    (query_id, rank int, id, dist_chord2): the result rows are on the
+    driver when it returns, and nothing is persisted.
+
+    A round is ONE Spark job: rings computed in numpy, the ring-join
+    core over a broadcast candidate frame keyed by probe position, the
+    fact scan pruned with the merged-range OR-of-BETWEEN pushdown (at
+    100 TB a round reads only the row groups its rings cover), and a
+    ``toArrow`` of (position, id, dist_chord2). The driver ranks each
+    probe's rows in the order of ``_attempt_var``'s window, computes the
+    same resolution flags, accepts the resolved probes and widens the
+    rest exactly as the relational rounds do, so results are identical.
+
+    Raw pairs reach the driver only when the level-7 histogram bounds
+    the round under ``_DRIVER_RANK_MAX_ROWS`` (an exact range sum for
+    ring cells at level <= 7, the counts of each probe's distinct
+    level-7 ancestors of finer ring cells). Over the cap, or when the
+    histogram is not in hand, the round keeps ``row_number() <= kk``
+    per probe in Spark first.
+
     ``jl`` holds each probe's level for round ``attempt0`` and ``gtd``
     whether that level resolves it by construction; both are updated in
-    place. ``density`` is a zero-argument callable returning the
-    ``_density_tables``, called only when a probe needs them. Same
-    ring/coverage contract as the relational rounds, so results are
-    identical; returns the accepted rank slices."""
+    place. ``tables`` are the ``_density_tables``; when None (``knn_join``)
+    ``_level7_tables(df)`` is read only once a probe with fewer than
+    ``kk`` rows needs its next ring sized, so a dense call reads no
+    histogram and pre-trims every round."""
     from pyspark.sql.types import (
         DoubleType,
         IntegerType,
@@ -801,7 +822,7 @@ def _tail_literal_rounds(
 
     cand_schema = StructType(
         [
-            StructField(query_id_col, qid_type),
+            StructField("__pos", IntegerType()),
             StructField(qlat_col, DoubleType()),
             StructField(qlng_col, DoubleType()),
             StructField("__jl", IntegerType()),
@@ -809,100 +830,179 @@ def _tail_literal_rounds(
         ]
     )
     safe_np = np.array([_safe_chord2(lv) for lv in range(31)])
-    # exact ring row counts from the level-7 histogram: a ring cell at
-    # level <= 7 covers complete level-7 cells, so its row count is an
-    # exact range sum over the sorted histogram (prefix sums +
-    # searchsorted); used to pick the widened level for sparse probes
-    # so the next ring PROVABLY holds >= target rows instead of
-    # guessing a fixed jump. ``density()`` yields the histogram's
-    # ``_density_tables``; it is called on the first sparse probe only
-    hist: list[np.ndarray] = []  # [c7sorted, pref7]
+    hist: list[np.ndarray] = []  # [c7sorted, pref7] once in hand
 
-    def _exact_ring_rows(ring: np.ndarray) -> int:
+    def _histogram() -> list[np.ndarray]:
         if not hist:
-            c7s, n7s = density()[:2]
+            c7s, n7s = (tables if tables is not None else _level7_tables(df))[:2]
             hist.extend([c7s, np.concatenate([[0], np.cumsum(n7s)])])
-        c7sorted, pref7 = hist
-        u = ring.view(np.uint64)
-        lo = k.range_min(u)
-        hi = k.range_max(u)
-        a = np.searchsorted(c7sorted, lo, side="left")
-        b = np.searchsorted(c7sorted, hi, side="right")
+        return hist
+
+    if tables is not None:
+        _histogram()
+
+    def _ring_rows(owner: np.ndarray, cells: np.ndarray, lvls: np.ndarray) -> int:
+        """Candidate pairs of the probes' ring cells (``owner`` = the
+        probe of each cell) from the level-7 histogram: a cell at level
+        <= 7 covers complete level-7 cells, so its count is an exact
+        range sum (prefix sums + searchsorted); finer cells are bounded
+        by the counts of their probe's distinct level-7 ancestors."""
+        c7sorted, pref7 = _histogram()
+        u = k.parent(cells.view(np.uint64), np.minimum(lvls, _L_DET)).view(np.int64)
+        u = np.unique(np.stack([owner, u], axis=1), axis=0)[:, 1].copy().view(np.uint64)
+        a = np.searchsorted(c7sorted, k.range_min(u), side="left")
+        b = np.searchsorted(c7sorted, k.range_max(u), side="right")
         return int((pref7[b] - pref7[a]).sum())
 
     def _sparse_next_level(lat: float, lng: float, cur: int, target: int) -> int:
-        for lv in range(min(cur - 1, 7), -1, -1):
-            ring = _ring_cells_np(
-                np.array([lat]), np.array([lng]), np.array([lv])
-            )[0]
-            if _exact_ring_rows(ring) >= target:
+        # the finest level whose ring holds >= target rows FOR REAL
+        for lv in range(min(cur - 1, _L_DET), -1, -1):
+            ring = _ring_cells_np(np.array([lat]), np.array([lng]), np.array([lv]))[0]
+            z = np.zeros(len(ring), dtype=np.int64)  # one probe owns the ring
+            if _ring_rows(z, ring, z + lv) >= target:
                 return lv
         return 0
 
-    slices: list[DataFrame] = []
-    sel = [query_id_col, "rank", id_col, "dist_chord2"]
+    parts: list[pa.Table] = []
+    ranks: list[np.ndarray] = []
     pend = np.arange(len(qids))
     attempt = attempt0
     while len(pend) > 0:
         lv = jl[pend]
         rings = _ring_cells_np(qlat[pend], qlng[pend], lv)
         rep = np.repeat(pend, [len(r) for r in rings])
-        cols = [
-            [qids[i] for i in rep], qlat[rep], qlng[rep], jl[rep], np.concatenate(rings)
-        ]
+        tc = np.concatenate(rings)
+        cols = [rep.astype(np.int32), qlat[rep], qlng[rep], jl[rep], tc]
         cand_df = F.broadcast(local_frame(spark, cols, cand_schema))
         active = sorted(int(x) for x in np.unique(lv))
         src = _pushdown_candidate_ranges(df, rings, min(active), "cell_id_biased")
-        ranked = _attempt_var(
-            src, cand_df, kk, active,
-            lat_col, lng_col, id_col, query_id_col, qlat_col, qlng_col,
-        )
-        if (
+        pairs = _ring_join(
+            src, cand_df, active, id_col, lat_col, lng_col, "cell_id", qlat_col, qlng_col
+        ).select("__pos", id_col, "dist_chord2")
+        if not hist or _ring_rows(rep, tc, jl[rep]) > _DRIVER_RANK_MAX_ROWS:
+            # pre-trim: each probe's top kk in _attempt_var's order, kept
+            # per partition before the shuffle (WindowGroupLimit)
+            w = Window.partitionBy("__pos").orderBy(
+                F.col("dist_chord2").asc(), F.col(id_col).asc()
+            )
+            pairs = (
+                pairs.withColumn("__r", F.row_number().over(w))
+                .where(F.col("__r") <= kk)
+                .drop("__r")
+            )
+        got = pairs.toArrow()  # THE round action
+        sel, rank, n, kd, has_kd = _rank_on_driver(got, id_col, len(qids), kk)
+        # _attempt_var's __ok; a NaN k-th distance never resolves
+        ok = (jl == 0) | ((n >= kk) & has_kd & (kd <= safe_np[jl]))
+        last = (
             bool(np.all(gtd[pend]))
             or attempt >= _MAX_WIDEN
             or all(x == 0 for x in active)
-        ):
+        )
+        if not last:
+            keep = ok[got.column("__pos").to_numpy()[sel]]
+            sel, rank = sel[keep], rank[keep]
+        parts.append(got.take(sel))
+        ranks.append(rank)
+        if last:
             # kd-derived levels resolve by construction (the ring
             # provably covers each probe's previous k-th distance), so
-            # an all-guaranteed round needs no resolve-check job: emit
-            # lazily and let the caller's checkpoint or sink write
-            # materialize it once
-            slices.append(ranked.select(*sel))
+            # every row of an all-guaranteed round is final
             break
-        ranked = ranked.persist()
-        persisted.append(ranked)
-        slices.append(ranked.where(F.col("__ok")).select(*sel))
-        # one probe attempts one level a round, so its rank-1 row
-        # carries its flags
-        flags = (
-            ranked.where(F.col("rank") == 1)
-            .select(query_id_col, "__ok", "__n", "__kd")
-            .collect()
-        )
-        info = {r[0]: (bool(r[1]), int(r[2]), r[3]) for r in flags}
-        nxt_pend = []
-        for i in pend:
-            got = info.get(qids[i])
-            if (got is not None and got[0]) or jl[i] <= 0:
-                continue  # resolved, or level-0 best-effort already out
-            nxt_pend.append(i)
-            if got is not None and got[1] >= kk and got[2] is not None:
-                # kd-derived level: finest ring that covers the k-th
-                # distance — resolves next round by construction
-                jl[i] = min(
-                    jl[i] - 1, max(0, int(np.sum(safe_np >= got[2]) - 1))
-                )
-                gtd[i] = True
-            else:
-                # sparse probe: pick the finest level whose ring holds
-                # >= target rows FOR REAL (exact histogram range sums)
-                jl[i] = _sparse_next_level(
-                    float(qlat[i]), float(qlng[i]), int(jl[i]), 8 * kk
-                )
-                gtd[i] = False
-        pend = np.array(nxt_pend, dtype=np.int64)
+        pend = pend[~ok[pend]]  # level-0 probes are always resolved
+        # kd-derived level: the finest ring that covers the k-th
+        # distance — resolves next round by construction
+        kdd = pend[(n[pend] >= kk) & has_kd[pend]]
+        cover = (safe_np[None, :] >= kd[kdd, None]).sum(axis=1) - 1
+        jl[kdd] = np.minimum(jl[kdd] - 1, np.maximum(0, cover))
+        gtd[kdd] = True
+        # sparse probe (fewer than kk rows): the finest level whose ring
+        # holds >= 8·kk rows FOR REAL (exact histogram range sums)
+        for i in np.setdiff1d(pend, kdd):
+            jl[i] = _sparse_next_level(float(qlat[i]), float(qlng[i]), int(jl[i]), 8 * kk)
+            gtd[i] = False
         attempt += 1
-    return slices
+    return _local_result(
+        spark, df, query_id_col, id_col, qid_type, qids, parts, ranks
+    )
+
+
+def _rank_on_driver(got: pa.Table, id_col: str, n_probes: int, kk: int) -> tuple:
+    """Each probe's top ``kk`` of one literal round's (__pos, id,
+    dist_chord2) rows, ranked in ``_attempt_var``'s window order: dist
+    ascending with NULLs first and NaN after every number (Spark's
+    double order), then id ascending with NULLs first.
+
+    Returns (row indices into ``got`` in probe-then-rank order, their
+    ranks, then per probe position: __n = rows kept, __kd = the largest
+    kept distance as Spark's ``max`` gives it (NaN above every number)
+    and whether __kd is set — it is NULL when the probe has no row or
+    only NULL distances)."""
+    m = got.num_rows
+    pos = got.column("__pos").to_numpy()
+    d = got.column("dist_chord2")
+    dnull = d.is_null().to_numpy()
+    dv = d.to_numpy()  # NULL reads NaN
+    dgrp = np.where(dnull, 0, np.where(np.isnan(dv), 2, 1))
+    idkey = np.empty(m, dtype=np.int64)
+    idkey[pc.sort_indices(got.column(id_col), null_placement="at_start").to_numpy()] = (
+        np.arange(m)
+    )
+    order = np.lexsort((idkey, np.where(dgrp == 1, dv, 0.0), dgrp, pos))
+    ps = pos[order]
+    head = np.ones(m, dtype=bool)
+    head[1:] = ps[1:] != ps[:-1]
+    idx = np.arange(m)
+    rank = idx - np.maximum.accumulate(np.where(head, idx, 0)) + 1
+    keep = rank <= kk
+    sel, rank, ps = order[keep], rank[keep].astype(np.int32), ps[keep]
+    n = np.bincount(ps, minlength=n_probes)
+    # the last kept row of a probe holds its largest kept distance
+    tail = np.ones(len(ps), dtype=bool)
+    tail[:-1] = ps[1:] != ps[:-1]
+    kd = np.full(n_probes, np.nan)
+    has_kd = np.zeros(n_probes, dtype=bool)
+    kd[ps[tail]] = dv[sel[tail]]
+    has_kd[ps[tail]] = ~dnull[sel[tail]]
+    return sel, rank, n, kd, has_kd
+
+
+def _local_result(
+    spark: SparkSession,
+    df: DataFrame,
+    query_id_col: str,
+    id_col: str,
+    qid_type,
+    qids: list,
+    parts: list[pa.Table],
+    ranks: list[np.ndarray],
+) -> DataFrame:
+    """The accepted (__pos, id, dist_chord2) rows and their ranks as one
+    ``local_frame`` of (query_id, rank int, id, dist_chord2); an empty
+    frame of that schema when there are none."""
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    schema = StructType(
+        [
+            StructField(query_id_col, qid_type),
+            StructField("rank", IntegerType()),
+            StructField(id_col, df.schema[id_col].dataType),
+            StructField("dist_chord2", DoubleType()),
+        ]
+    )
+    if not parts:
+        return local_frame(spark, [[], [], [], []], schema)
+    t = pa.concat_tables(parts)
+    return local_frame(
+        spark,
+        [
+            [qids[i] for i in t.column("__pos").to_numpy()],
+            np.concatenate(ranks),
+            t.column(id_col),
+            t.column("dist_chord2"),
+        ],
+        schema,
+    )
 
 
 def mutual_knn_pairs(

@@ -286,22 +286,30 @@ def streaming_knn(
     proves coverage), which Structured Streaming cannot express as one
     continuous query. The sanctioned lift is ``foreachBatch``: each
     micro-batch runs knn_join_df's own body (``_knn_join_df_lazy``) —
-    identical semantics row-for-row — and writes its lazy result
-    straight into an IDEMPOTENT sink, without the batch operator's
-    checkpoint. A micro-batch of at most ``_TAIL_COLLECT_MAX`` probes
-    takes the driver-literal regime, so it starts no Python worker.
-    Results are written with dynamic partition overwrite keyed by the
-    micro-batch id, so a replayed batch (after failure, before the
-    offset commit) overwrites its own partition and the sink stays
-    exactly-once while the engine guarantees only at-least-once
-    execution (the ``plans.lineage`` resume discipline, applied to a
-    stream).
+    identical semantics row-for-row — and writes its result straight
+    into an IDEMPOTENT sink, without the batch operator's checkpoint.
+    A micro-batch of at most ``_TAIL_COLLECT_MAX`` probes takes the
+    driver-literal regime: it starts no Python worker, each widening
+    round is one Spark job, and the sink writes the driver-held result
+    rows without re-running any round. Results are written with
+    dynamic partition overwrite keyed by the micro-batch id, so a
+    replayed batch (after failure, before the offset commit)
+    overwrites its own partition and the sink stays exactly-once while
+    the engine guarantees only at-least-once execution (the
+    ``plans.lineage`` resume discipline, applied to a stream).
 
     ``stats`` SHOULD be the precomputed density table
     (``plans.stats.build_cell_stats(facts, levels=(7,))``, maintained
     at write time): with it, a micro-batch pays only its own join
     work; without it the wrapper builds the stats ONCE up front (one
     fact scan total — never one per batch).
+
+    The fact side is not cached: each round reads only the row groups
+    its rings cover (the merged-range pushdown), so a cache would buy a
+    batch little, while it would pin executor memory for the stream's
+    life (nothing could unpersist it once the stream stops), cannot
+    exist for a 100 TB table, and its build would land inside the first
+    micro-batch.
 
     Returns the started StreamingQuery; callers using
     ``trigger={"availableNow": True}`` await termination then read
@@ -313,24 +321,6 @@ def streaming_knn(
     spark = facts.sparkSession
     if stats is None:
         stats = build_cell_stats(facts, levels=(7,))
-    # cache the static side's kNN-relevant columns for the stream's
-    # lifetime: every micro-batch (and every widening attempt within
-    # one) re-reads the fact scan otherwise — a long-running stream
-    # pays one cache build for N batches (the standard stream-static
-    # join discipline; the projection keeps the cache narrow)
-    id_col = cols.get("id_col", "image_id")
-    keep = [
-        c
-        for c in (
-            cols.get("lat_col", "lat"),
-            cols.get("lng_col", "lng"),
-            id_col,
-            "cell_id",
-            "cell_id_biased",
-        )
-        if c in facts.columns
-    ]
-    facts = facts.select(*keep).persist()
     # materialize ONCE up front, whatever the caller passed: a lazy
     # stats frame would re-evaluate its lineage (a full fact scan +
     # aggregation) inside EVERY micro-batch's knn_join_df — exactly
@@ -344,8 +334,8 @@ def streaming_knn(
     )
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the sink write is the one read of the lazy result, made before
-        # the round frames are released: no checkpoint job and no
+        # the sink write is the one read of the result, made before any
+        # relational round frames are released: no checkpoint job and no
         # storage block per batch. coalesce(4) keeps a micro-batch from
         # committing one tiny file per shuffle partition through the
         # dynamic-overwrite protocol (guide §6 file sizing); it never

@@ -9,6 +9,7 @@ from __future__ import annotations
 import contextlib
 import inspect
 
+import numpy as np
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -318,31 +319,29 @@ def test_failed_call_releases_persisted_frames(spark, images, probes, monkeypatc
 
 
 def test_failed_literal_call_releases_persisted_frames(spark, monkeypatch):
-    """A literal-regime knn_join_df call that raises in its second round
-    (after the first round has persisted its ranks) must leave no
-    persisted RDD behind. The far probe of the adversarial set cannot
-    resolve in round 0."""
-    from rust_s2_spark.operators import knn
-
+    """A literal-regime knn_join_df call that raises in its round-1
+    collect must leave no persisted RDD behind; the literal engine
+    persists nothing, so none exists even mid-call. The far probe of the
+    adversarial set cannot resolve in round 0."""
     facts = _adv_facts(spark)
     probes = spark.createDataFrame(
         _ADV_PROBES, "query_id long, qlat double, qlng double"
     )
-    real = knn._attempt_var
+    cls = type(facts)
+    real = cls.toArrow
     mid_call: list[set[int]] = []
 
-    def boom_in_round_1(*args, **kwargs):
-        if mid_call:
-            mid_call.append(_persistent_rdd_ids(spark) - before)
+    def boom_in_round_1(self, *args, **kwargs):
+        mid_call.append(_persistent_rdd_ids(spark) - before)
+        if len(mid_call) > 1:
             raise _TailBoom()
-        mid_call.append(set())
-        return real(*args, **kwargs)
+        return real(self, *args, **kwargs)
 
-    monkeypatch.setattr(knn, "_attempt_var", boom_in_round_1)
+    monkeypatch.setattr(cls, "toArrow", boom_in_round_1)
     before = _persistent_rdd_ids(spark)
     with pytest.raises(_TailBoom):
         knn_join_df(facts, probes, 3).count()
-    assert mid_call[-1], "round 0 persisted nothing before round 1 ran"
+    assert len(mid_call) == 2 and mid_call == [set(), set()], mid_call
     leaked = _persistent_rdd_ids(spark) - before
     assert not leaked, f"persisted RDDs left after the failed call: {leaked}"
 
@@ -391,10 +390,11 @@ def test_histogram_memo_reused_off_the_frame(images, probes, monkeypatch):
 def test_small_probe_set_runs_literal_regime(spark, images, probes, monkeypatch):
     """≤ 100 probes take the driver-literal regime: no probe-prep UDF
     is built (patched to raise), the result equals brute force, and
-    the call runs at most 11 Spark jobs once the histogram is memoized.
-    Measured on these fixtures at local[4]: 11 jobs (12 while the flag
-    collect ran a distinct); the relational round 0 + tail this regime
-    replaces ran 23."""
+    the call runs at most 8 Spark jobs once the histogram is memoized.
+    Measured on these fixtures at local[4]: 8 jobs, with each literal
+    round one ``toArrow`` job plus its broadcast (11 while a round also
+    persisted its ranks and collected its flags); the relational round
+    0 + tail this regime replaces ran 23."""
     from rust_s2_spark.operators import knn
 
     def no_prep(*args, **kwargs):
@@ -417,4 +417,195 @@ def test_small_probe_set_runs_literal_regime(spark, images, probes, monkeypatch)
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert _ranks(got).equals(_brute(spark, facts, rows, 3))
-    assert n_jobs <= 11, f"{n_jobs} Spark jobs for one small-probe call"
+    assert n_jobs <= 8, f"{n_jobs} Spark jobs for one small-probe call"
+
+
+def _spark_order_brute(spark, facts, probe_rows, kk, id_col="image_id"):
+    """(query_id, rank, id) of each probe's top kk by a Spark cross join
+    ranked in the engines' order: dist ascending, then id ascending."""
+    q = spark.createDataFrame(probe_rows, "query_id long, blat double, blng double")
+    px, py, pz = xyz_cols("lat", "lng")
+    qx, qy, qz = xyz_cols("blat", "blng")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("dist_chord2").asc(), F.col(id_col).asc()
+    )
+    return sorted(
+        tuple(r)
+        for r in facts.crossJoin(q)
+        .withColumn("dist_chord2", chord2_expr(px, py, pz, qx, qy, qz))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= kk)
+        .select("query_id", "rank", id_col)
+        .collect()
+    )
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_distance_ties_break_by_id(spark, regime, id_type):
+    """Co-located facts tie on distance; every engine breaks the tie on
+    id ascending, as the rank window does: numerically for long ids,
+    byte-wise for string ids ("11" < "3" < "5" < "7")."""
+    spots = {(10.0, 10.0): [7, 3, 11, 5], (10.0, 10.01): [2, 30, 4], (10.02, 9.99): [21, 13]}
+    cast = str if id_type == "string" else int
+    facts = spark.createDataFrame(
+        [(cast(i), *spot) for spot, ids in spots.items() for i in ids],
+        f"image_id {id_type}, lat double, lng double",
+    ).withColumn("cell_id", s2_cell_from_latlng("lat", "lng"))
+    probe_rows = [(0, 10.0, 10.0), (1, 10.0, 10.01), (2, 10.02, 9.99)]
+    probes = spark.createDataFrame(
+        probe_rows, "query_id long, qlat double, qlng double"
+    )
+    regime.probes(len(probe_rows))
+    want = _spark_order_brute(spark, facts, probe_rows, 4)
+    got = sorted(
+        tuple(r)
+        for r in knn_join_df(facts, probes, 4)
+        .select("query_id", "rank", "image_id")
+        .collect()
+    )
+    assert got == want
+    # the four co-located facts of probe 0, in id order
+    assert [r[2] for r in got if r[0] == 0] == [cast(i) for i in sorted(map(cast, [3, 5, 7, 11]))]
+    with regime.unrecorded():
+        listed = sorted(
+            tuple(r)
+            for r in knn_join(spark, facts, probe_rows, 4)
+            .select("query_id", "rank", "image_id")
+            .collect()
+        )
+    assert listed == want
+
+
+def _numpy_rank(facts_rows, probe_rows, kk):
+    """Numpy brute force in the rank window's order: chord² ascending
+    with NULL first and NaN after every number, then id ascending."""
+    out = []
+    ids = np.array([r[0] for r in facts_rows])
+    lat = np.array([np.nan if r[1] is None else r[1] for r in facts_rows])
+    lng = np.array([np.nan if r[2] is None else r[2] for r in facts_rows])
+    null = np.array([r[1] is None or r[2] is None for r in facts_rows])
+
+    def xyz(la, lo):
+        la, lo = np.radians(la), np.radians(lo)
+        return np.cos(lo) * np.cos(la), np.sin(lo) * np.cos(la), np.sin(la)
+
+    fx, fy, fz = xyz(lat, lng)
+    for qid, qla, qlo in probe_rows:
+        qx, qy, qz = xyz(qla, qlo)
+        d = (fx - qx) ** 2 + (fy - qy) ** 2 + (fz - qz) ** 2
+        grp = np.where(null, 0, np.where(np.isnan(d), 2, 1))
+        order = np.lexsort((ids, np.where(grp == 1, d, 0.0), grp))[:kk]
+        out += [(qid, r + 1, int(ids[i])) for r, i in enumerate(order)]
+    return sorted(out)
+
+
+def test_planted_leaf1_rows_match_numpy_brute_force(spark, regime):
+    """Fact rows with NULL or NaN coordinates that carry the leaf-1 cell
+    id older tables hold (the kernel's id for such a row before the UDF
+    returned NULL): probes on leaf 1 see them in every ring, so NULL
+    distances rank first and NaN distances after every number, equally
+    in the literal regime, the relational regime, knn_join and a numpy
+    brute force; k = 70 > 65 facts reaches the NaN rows."""
+    from rust_s2_spark.kernels import cellid as kc
+
+    c_lat, c_lng = (float(v[0]) for v in kc.cell_to_latlng(np.array([1], np.uint64)))
+    rng = np.random.default_rng(5)
+    real = [
+        (i, c_lat + float(a), c_lng + float(b))
+        for i, (a, b) in enumerate(rng.uniform(-0.5, 0.5, size=(60, 2)), start=10)
+    ]
+    nan = float("nan")
+    planted = [
+        (1, None, c_lng), (2, c_lat, None), (3, nan, c_lng), (4, c_lat, nan), (5, nan, nan)
+    ]
+    leafs = kc.cell_from_latlng(
+        np.array([r[1] for r in real]), np.array([r[2] for r in real])
+    ).view(np.int64)
+    facts = spark.createDataFrame(
+        [(*r, int(c)) for r, c in zip(real, leafs)] + [(*r, 1) for r in planted],
+        "image_id long, lat double, lng double, cell_id long",
+    ).withColumn("cell_id_biased", F.col("cell_id").bitwiseXOR(F.lit(-(2**63))))
+    probe_rows = [
+        (0, c_lat, c_lng),
+        (1, c_lat + 1e-5, c_lng + 1e-5),
+        (2, c_lat + 2e-5, c_lng + 5e-6),
+    ]
+    probes = spark.createDataFrame(
+        probe_rows, "query_id long, qlat double, qlng double"
+    )
+    regime.probes(len(probe_rows))
+    for kk in (5, 70):
+        want = _numpy_rank(real + planted, probe_rows, kk)
+        got = sorted(
+            tuple(r)
+            for r in knn_join_df(facts, probes, kk)
+            .select("query_id", "rank", "image_id")
+            .collect()
+        )
+        assert got == want, kk
+        with regime.unrecorded():
+            listed = sorted(
+                tuple(r)
+                for r in knn_join(spark, facts, probe_rows, kk)
+                .select("query_id", "rank", "image_id")
+                .collect()
+            )
+        assert listed == want, kk
+    assert [r[2] for r in want if r[0] == 0][:2] == [1, 2]
+    assert [r[2] for r in want if r[0] == 0][-3:] == [3, 4, 5]
+
+
+def _round_plans(monkeypatch, df_cls) -> list[str]:
+    """Records the physical plan of every ``toArrow`` call (a literal
+    round's one action)."""
+    plans: list[str] = []
+    real = df_cls.toArrow
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "toArrow", spy)
+    return plans
+
+
+def test_literal_round_plan_is_one_plain_join(
+    spark, images, probes, monkeypatch, tmp_path
+):
+    """Plan pin: under the cap a literal round's collected plan is the
+    ring join over the broadcast candidate frame with nothing after it:
+    no Window, no shuffle Exchange (only the BroadcastExchange of the
+    candidate frame) and no InMemoryRelation. The facts are a parquet
+    table, so the fact side of the plan carries no exchange of its own."""
+    import re
+
+    images.write.parquet(str(tmp_path / "facts"))
+    facts = spark.read.parquet(str(tmp_path / "facts"))
+    small = probes.where(F.col("query_id") % 13 == 1).coalesce(1)
+    rows = [tuple(r) for r in small.collect()]
+    plans = _round_plans(monkeypatch, type(facts))
+    got = _ranks(knn_join_df(facts, small, 3))
+    assert got.equals(_brute(spark, facts, rows, 3))
+    assert plans, "no literal round ran"
+    for plan in plans:
+        assert "Window" not in plan, plan
+        assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+        assert not re.search(r"InMemory(Relation|TableScan)", plan), plan
+        assert "BroadcastHashJoin" in plan, plan
+
+
+def test_pre_trim_path_returns_same_rows(spark, images, probes, monkeypatch):
+    """With ``_DRIVER_RANK_MAX_ROWS`` at 0 every literal round keeps each
+    probe's top k in Spark before the collect (a Window in the round
+    plan); the rows are the same as the raw-pair path's."""
+    from rust_s2_spark.operators import knn
+
+    small = probes.where(F.col("query_id") % 13 == 1).coalesce(1)
+    rows = [tuple(r) for r in small.collect()]
+    raw = _ranks(knn_join_df(images, small, 4))
+    monkeypatch.setattr(knn, "_DRIVER_RANK_MAX_ROWS", 0)
+    plans = _round_plans(monkeypatch, type(images))
+    trimmed = _ranks(knn_join_df(images, small, 4))
+    assert plans and all("Window" in p for p in plans)
+    assert trimmed.equals(raw)
+    assert raw.equals(_brute(spark, images, rows, 4))

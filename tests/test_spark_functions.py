@@ -95,6 +95,40 @@ def test_cell_center_roundtrip_spark(images):
     assert df.where(F.col("back") != F.col("cell_id")).count() == 0
 
 
+def test_cell_from_latlng_null_for_null_or_nan_coordinates(spark):
+    """A row whose lat or lng is NULL or NaN gets a NULL cell id (the
+    kernel alone maps it to leaf id 1), and s2_biased / s2_parent carry
+    the NULL, so the row can never be a ring or ancestor candidate. The
+    UDF masks such rows before the kernel runs, so it warns nothing."""
+    import warnings
+
+    import pandas as pd
+
+    from rust_s2_spark.functions.columns import _cell_from_latlng_udf
+
+    nan = float("nan")
+    rows = [(1, nan, 0.0), (2, 0.0, nan), (3, nan, nan), (4, None, 5.0), (5, 10.0, 20.0)]
+    got = {
+        r["id"]: (r["c"], r["b"], r["p"])
+        for r in spark.createDataFrame(rows, "id long, lat double, lng double")
+        .select("id", s2_cell_from_latlng("lat", "lng").alias("c"))
+        .select("id", "c", s2_biased("c").alias("b"), s2_parent("c", 7).alias("p"))
+        .collect()
+    }
+    for i in (1, 2, 3, 4):
+        assert got[i] == (None, None, None), (i, got[i])
+    leaf = int(k.cell_from_latlng(np.array([10.0]), np.array([20.0])).view(np.int64)[0])
+    assert got[5][0] == leaf
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        ids = _cell_from_latlng_udf.func(
+            pd.Series([nan, 0.0, nan, None, 10.0]), pd.Series([0.0, nan, nan, 5.0, 20.0])
+        )
+    assert ids.isna().tolist() == [True, True, True, True, False]
+    assert int(ids.iloc[4]) == leaf
+
+
 def test_region_filter_matches_brute_force(images):
     cap = Cap.from_latlng_degrees(40.7128, -74.0060, 3.0)  # NYC hotspot
     got = region_filter(images, cap).select("image_id")

@@ -33,7 +33,8 @@ def _site() -> str:
 def patch_actions():
     from pyspark.sql.classic.dataframe import DataFrame
 
-    for name in ("collect", "count", "first", "localCheckpoint"):
+    # toArrow is the one action of each literal kNN round
+    for name in ("collect", "count", "first", "localCheckpoint", "toArrow"):
         orig = getattr(DataFrame, name)
 
         def wrapper(self, *a, _orig=orig, _name=name, **kw):
