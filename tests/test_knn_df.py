@@ -391,10 +391,9 @@ def test_small_probe_set_runs_literal_regime(spark, images, probes, monkeypatch)
     """≤ 100 probes take the driver-literal regime: no probe-prep UDF
     is built (patched to raise), the result equals brute force, and
     the call runs at most 8 Spark jobs once the histogram is memoized.
-    Measured on these fixtures at local[4]: 8 jobs, with each literal
-    round one ``toArrow`` job plus its broadcast (11 while a round also
-    persisted its ranks and collected its flags); the relational round
-    0 + tail this regime replaces ran 23."""
+    Measured on these fixtures at local[4]: 8 jobs (11 while a round
+    also persisted its ranks and collected its flags); the relational
+    round 0 + tail this regime replaces ran 23."""
     from rust_s2_spark.operators import knn
 
     def no_prep(*args, **kwargs):
