@@ -18,8 +18,9 @@ ring join's (probe, id, distance) pairs; the driver ranks them, checks
 coverage and widens in numpy, and the result is a driver-held
 ``local_frame``, so the engine persists and checkpoints nothing. Raw
 pairs are shipped only when the histogram bounds them under
-``_DRIVER_RANK_MAX_ROWS``; otherwise the round keeps each probe's top
-k in Spark first. It has three callers:
+``_DRIVER_RANK_MAX_ROWS`` (a histogram read off the fact frame, or
+injected stats that ``n_rows`` confirms); otherwise the round keeps
+each probe's top k in Spark first. It has three callers:
 
 - ``knn_join``: probes are a driver-side list, all starting at the
   level that ``radius_guess_deg`` gives.
@@ -143,7 +144,7 @@ def knn_join(
         spark, df, qids, qlat, qlng,
         np.full(len(qids), level, dtype=np.int64),
         np.zeros(len(qids), dtype=bool),
-        kk, 0, None,
+        kk, 0, None, 0,
         lat_col, lng_col, id_col, "query_id", "qlat", "qlng", LongType(),
     )
 
@@ -310,6 +311,19 @@ def _probe_prep_udf(tables: tuple, target: int):
     return _prep
 
 
+def _top_k(scored: DataFrame, kk: int, probe_cols: list[str], id_col: str) -> DataFrame:
+    """The rows of ``scored`` ranked per probe (``probe_cols``) by
+    dist_chord2 then id ascending, as ``rank``, with rank <= kk kept.
+    The one Spark definition of the kNN rank order (``_rank_on_driver``
+    is its numpy twin). The filter sits right on the row_number window,
+    so Spark keeps each probe's top k per partition before the shuffle
+    (WindowGroupLimit)."""
+    w = Window.partitionBy(*probe_cols).orderBy(
+        F.col("dist_chord2").asc(), F.col(id_col).asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= kk)
+
+
 def _attempt_var(
     df: DataFrame,
     cand: DataFrame,
@@ -337,17 +351,11 @@ def _attempt_var(
     # partitioned by (probe, attempted level): every round, relational
     # or literal, attempts ONE level per probe, so this equals
     # partitioning by probe
-    w_rank = Window.partitionBy(query_id_col, "__jl").orderBy(
-        F.col("dist_chord2").asc(), F.col(id_col).asc()
-    )
     w_all = Window.partitionBy(query_id_col, "__jl")
     safe_arr = F.array(*[F.lit(_safe_chord2(lv)) for lv in range(31)])
-    # the rank filter sits right on the row_number window, so Spark
-    # keeps each probe's top k per partition before the shuffle
-    # (WindowGroupLimit); the flags then see at most k rows a probe
+    # the flags see at most k rows a probe
     return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= kk)
+        _top_k(scored, kk, [query_id_col, "__jl"], id_col)
         .withColumn("__n", F.count("*").over(w_all))
         .withColumn("__kd", F.max("dist_chord2").over(w_all))
         .withColumn(
@@ -381,8 +389,13 @@ def _level7_tables(df: DataFrame, stats: DataFrame | None = None) -> tuple:
     ONCE per source DataFrame object (see _L7_HIST): repeat calls,
     streaming batches and injected stats reuse it. DataFrames are
     immutable plans, so the capture only goes stale if the underlying
-    FILES are rewritten under a live frame, and even then start levels
-    and ring sizes are pure performance, never correctness."""
+    FILES are rewritten under a live frame. Start levels and ring sizes
+    are pure performance, never correctness; the literal rounds also
+    bound their driver traffic with it, which is why ``knn_join_df``
+    trusts injected stats only as far as ``n_rows`` confirms them.
+
+    Rows with a NULL cell id (``s2_cell_from_latlng`` of a NULL or NaN
+    coordinate) are on no cell: their NULL group is not counted."""
     src = stats if stats is not None else df
     tables = _L7_HIST.get(src)
     if tables is None:
@@ -392,7 +405,8 @@ def _level7_tables(df: DataFrame, stats: DataFrame | None = None) -> tuple:
             hist = stats.where(F.col("level") == F.lit(_L_DET)).select(
                 F.col("cell").alias("__p"), F.col("n").alias("count")
             )
-        rows = hist.collect()  # bounded: ≤ 6·4^7 = 98,304 rows whatever |df| is
+        # bounded: ≤ 6·4^7 = 98,304 rows whatever |df| is
+        rows = hist.where(F.col("__p").isNotNull()).collect()
         tables = _density_tables(
             np.array([r["__p"] for r in rows], dtype=np.int64).view(np.uint64),
             np.array([r["count"] for r in rows], dtype=np.int64),
@@ -433,8 +447,13 @@ def knn_join_df(
     instead of re-scanning the fact table — on a REPEATED kNN
     workload at 100 TB the stats scan is paid once per dataset, not
     once per query. Start levels are pure performance (the resolution
-    contract makes any choice exact), so stale stats can only slow a
-    query down, never change its result.
+    contract makes any choice exact), so stale stats never change a
+    result. The histogram also bounds what a literal round ships to the
+    driver, and stats that undercount ``df`` would let that bound pass
+    more rows than ``_DRIVER_RANK_MAX_ROWS``. So without ``n_rows`` the
+    injected histogram is not trusted for that bound, and every literal
+    round keeps each probe's top k in Spark before its rows reach the
+    driver.
 
     ``n_rows``: the caller's known row count of ``df`` (from
     ``df.count()``, the lineage table's write metrics, or
@@ -446,7 +465,10 @@ def knn_join_df(
     full-table stats (identical result, 2.7× slower in the round-8
     bench): stats describing the wrong corpus start probes at the
     wrong density and the cost hides in extra widening rounds, so it
-    is caught here, at injection, where the fix is obvious.
+    is caught here, at injection, where the fix is obvious. Confirmed
+    stats bound the literal rounds' driver traffic, with each probe's
+    ring count raised by the rows ``n_rows`` holds beyond them (a true
+    bound for a table that only grew since its stats were built).
 
     Exactness: identical widening contract to ``knn_join`` — a probe is
     final only when it holds ≥ k results whose k-th distance fits inside
@@ -491,7 +513,8 @@ def knn_join_df(
     Driver traffic is the bounded histogram up front, plus the probes
     themselves only once they number at most ``_TAIL_COLLECT_MAX``, and
     then each literal round's pairs: at most ``_DRIVER_RANK_MAX_ROWS``
-    by the histogram's bound, or at most k per pending probe.
+    by the histogram's bound (read off ``df``, or stats that ``n_rows``
+    confirms), or at most k per pending probe.
     """
     with _knn_join_df_lazy(
         df, queries, kk,
@@ -550,10 +573,20 @@ def _knn_join_df_lazy(
 
             warnings.warn(
                 f"injected stats imply {n_tot} rows vs n_rows={n_rows} "
-                f"({ratio:.2f}x) — stale stats only slow queries down, "
-                f"but consider rebuilding",
+                f"({ratio:.2f}x) — stale stats slow queries down, "
+                f"consider rebuilding",
                 stacklevel=4,  # past contextlib's __enter__ and knn_join_df
             )
+    # rows df may hold in any region beyond the histogram's count of it:
+    # none when the histogram was read off df; the growth n_rows shows
+    # for injected stats; unknown (None: every literal round pre-trims)
+    # for stats nothing confirms
+    if stats is None:
+        slack = 0
+    elif n_rows is not None:
+        slack = max(0, n_rows - n_tot)
+    else:
+        slack = None
     spark = df.sparkSession
     qid_type = queries.schema[query_id_col].dataType
     if n_tot == 0:
@@ -580,13 +613,13 @@ def _knn_join_df_lazy(
             spark, df, qids, qlat, qlng,
             _probe_start_levels(qlat, qlng, tables, 8 * kk),
             np.zeros(len(qids), dtype=bool),
-            kk, 0, tables, *cols,
+            kk, 0, tables, slack, *cols,
         )
         return
     persisted: list[DataFrame] = []
     try:
         slices = _relational_rounds(
-            spark, df, queries, kk, persisted, src, tables, *cols
+            spark, df, queries, kk, persisted, src, tables, slack, *cols
         )
         yield _ranked_out(slices, query_id_col, id_col)
     finally:
@@ -602,6 +635,7 @@ def _relational_rounds(
     persisted: list[DataFrame],
     src: DataFrame,
     tables: tuple,
+    slack: int | None,
     lat_col: str,
     lng_col: str,
     id_col: str,
@@ -614,7 +648,7 @@ def _relational_rounds(
     DataFrame on the executors until the unresolved tail fits
     ``_TAIL_COLLECT_MAX``, which finishes in ``_tail_literal_rounds``.
     Appends every frame it persists to ``persisted``; returns the
-    accepted rank slices."""
+    accepted rank slices. ``slack`` is passed on to the literal rounds."""
     target = 8 * kk
     # the prep UDF closure carries the histogram (~MBs at full level-7
     # occupancy) — reuse the constructed UDF across repeat calls with
@@ -731,7 +765,7 @@ def _relational_rounds(
                     np.array([r[2] for r in rows], dtype=np.float64),
                     np.array([r[3] for r in rows], dtype=np.int64),
                     np.array([bool(r[4]) for r in rows]),
-                    kk, attempt, tables,
+                    kk, attempt, tables, slack,
                     lat_col, lng_col, id_col,
                     query_id_col, qlat_col, qlng_col, qid_type,
                 )
@@ -759,9 +793,16 @@ def _relational_rounds(
 
 
 # A literal round ships its raw candidate pairs to the driver only when
-# the level-7 histogram bounds them at or under this many rows (about
-# 25 MB of Arrow); over it, or with no histogram in hand, the round keeps
-# each probe's top k in Spark first, so the driver gets <= |pending|·k.
+# the level-7 histogram bounds them at or under this many rows; over it,
+# or with no histogram in hand, the round keeps each probe's top k in
+# Spark first, so the driver gets <= |pending|·k. The raw path drops the
+# Window plan, and with it that plan's JIT, from cold small rounds such
+# as perfbench spatial_query's micro-batch (bounded at 0.22-0.23M rows);
+# the two paths were not compared there. With warm plans on a dense
+# 1.2M-row table (k = 64, one round, local[4] on a 4-core VM, 2 runs
+# each) it lost 0.05-0.34 s wall at 0.32M and 0.63M shipped rows and
+# 0.75-0.77 s at 1.3M, so a cap much above 2^20 would cost more than the
+# JIT it saves; where below 2^20 the two cross was not measured.
 _DRIVER_RANK_MAX_ROWS = 1 << 20
 
 
@@ -776,6 +817,7 @@ def _tail_literal_rounds(
     kk: int,
     attempt0: int,
     tables: tuple | None,
+    slack: int | None,
     lat_col: str,
     lng_col: str,
     id_col: str,
@@ -802,9 +844,11 @@ def _tail_literal_rounds(
     Raw pairs reach the driver only when the level-7 histogram bounds
     the round under ``_DRIVER_RANK_MAX_ROWS`` (an exact range sum for
     ring cells at level <= 7, the counts of each probe's distinct
-    level-7 ancestors of finer ring cells). Over the cap, or when the
-    histogram is not in hand, the round keeps ``row_number() <= kk``
-    per probe in Spark first.
+    level-7 ancestors of finer ring cells), each probe's count raised
+    by ``slack``, the rows ``df`` may hold in any region beyond the
+    histogram. Over the cap, when the histogram is not in hand, or when
+    ``slack`` is None (injected stats that nothing confirms), the round
+    keeps ``row_number() <= kk`` per probe in Spark first.
 
     ``jl`` holds each probe's level for round ``attempt0`` and ``gtd``
     whether that level resolves it by construction; both are updated in
@@ -879,17 +923,13 @@ def _tail_literal_rounds(
         pairs = _ring_join(
             src, cand_df, active, id_col, lat_col, lng_col, "cell_id", qlat_col, qlng_col
         ).select("__pos", id_col, "dist_chord2")
-        if not hist or _ring_rows(rep, tc, jl[rep]) > _DRIVER_RANK_MAX_ROWS:
-            # pre-trim: each probe's top kk in _attempt_var's order, kept
-            # per partition before the shuffle (WindowGroupLimit)
-            w = Window.partitionBy("__pos").orderBy(
-                F.col("dist_chord2").asc(), F.col(id_col).asc()
-            )
-            pairs = (
-                pairs.withColumn("__r", F.row_number().over(w))
-                .where(F.col("__r") <= kk)
-                .drop("__r")
-            )
+        if (
+            slack is None
+            or not hist
+            or _ring_rows(rep, tc, jl[rep]) + slack * len(pend) > _DRIVER_RANK_MAX_ROWS
+        ):
+            # pre-trim: each probe's top kk in _attempt_var's order
+            pairs = _top_k(pairs, kk, ["__pos"], id_col).drop("rank")
         got = pairs.toArrow()  # THE round action
         sel, rank, n, kd, has_kd = _rank_on_driver(got, id_col, len(qids), kk)
         # _attempt_var's __ok; a NaN k-th distance never resolves

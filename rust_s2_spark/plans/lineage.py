@@ -13,6 +13,10 @@ from a crashed run is replaced wholesale — idempotent resume. Lineage
 stats (rows, min/max biased cell id per bucket) come from one cheap
 aggregate over the files just written (columnar scan of cell_id only,
 no upstream recompute) and are appended to ``<base>/_lineage``.
+
+Rows with a NULL cell id (``s2_cell_from_latlng`` of a NULL or NaN
+coordinate) are on no cell: they are kept in bucket 0, which no cell id
+equals, and that bucket's min/max biased cell ids are NULL.
 """
 
 from __future__ import annotations
@@ -30,6 +34,12 @@ LINEAGE_SCHEMA = (
     "min_cell_biased long, max_cell_biased long, wall_sec double, "
     "completed_at double"
 )
+
+
+def _bucket(level: int):
+    """The Hilbert bucket of a row: its parent cell at ``level``, or 0
+    for a row with a NULL cell id."""
+    return F.coalesce(s2_parent("cell_id", level), F.lit(0).cast("long"))
 
 
 def _lineage_path(base: str) -> str:
@@ -78,7 +88,7 @@ def pending_buckets(
 ) -> list[int]:
     all_buckets = [
         r.b
-        for r in df.select(s2_parent("cell_id", bucket_level).alias("b"))
+        for r in df.select(_bucket(bucket_level).alias("b"))
         .distinct()
         .collect()
     ]
@@ -105,7 +115,7 @@ def write_with_lineage(
     per-query fact scans. Rebuilt over the FULL table (including
     previously completed buckets) so resume keeps it consistent."""
     t0 = time.time()
-    df = df.withColumn("bucket", s2_parent("cell_id", bucket_level))
+    df = df.withColumn("bucket", _bucket(bucket_level))
     done = completed_buckets(spark, base, step)
     if done:
         done_df = local_frame(spark, [sorted(done)], "bucket long")
@@ -141,8 +151,8 @@ def write_with_lineage(
             int(r["bucket"]),
             int(r["n"]),
             int(sizes.get(int(r["bucket"]), 0)),
-            int(r["mn"]),
-            int(r["mx"]),
+            r["mn"],  # NULL for bucket 0
+            r["mx"],
             float(wall),  # wall of the shared single write job
             now,
         )

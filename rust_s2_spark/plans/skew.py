@@ -38,7 +38,7 @@ def hot_cells(
     rows = (
         df.groupBy(s2_parent(cell_col, level).alias("p"))
         .count()
-        .where(F.col("count") > threshold)
+        .where((F.col("count") > threshold) & F.col("p").isNotNull())
         .collect()
     )
     return {r["p"]: r["count"] for r in rows}
@@ -98,7 +98,9 @@ def salted_repartition(
             t0 = max(1, -(-n // (n_partitions * oversub)))
             counts = {
                 int(r["__p"]): int(r["__n"])
-                for r in cnts.where(F.col("__n") > t0).collect()
+                for r in cnts.where(
+                    (F.col("__n") > t0) & F.col("__p").isNotNull()
+                ).collect()
             }
             cnts.unpersist()
         target = max(1, -(-n // (n_partitions * oversub)))

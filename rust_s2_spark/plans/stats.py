@@ -91,8 +91,11 @@ def hot_cells_from_stats(
     pushable), so driver traffic is the hot list itself — at a sane
     threshold a handful of rows — not every cell at the level (6·4^L
     rows, the wrong shape at L ≥ 10)."""
+    # a NULL cell (rows with a NULL or NaN coordinate) is not a cell
     rows = stats.where(
-        (F.col("level") == int(level)) & (F.col("n") > int(threshold))
+        (F.col("level") == int(level))
+        & (F.col("n") > int(threshold))
+        & F.col("cell").isNotNull()
     ).collect()
     if not rows:
         has_level = (

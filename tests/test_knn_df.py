@@ -608,3 +608,99 @@ def test_pre_trim_path_returns_same_rows(spark, images, probes, monkeypatch):
     assert plans and all("Window" in p for p in plans)
     assert trimmed.equals(raw)
     assert raw.equals(_brute(spark, images, rows, 4))
+
+
+def _null_coordinate_facts(spark):
+    """Forty facts in two clusters around (0, 0) and (0, 5), plus rows at
+    (NaN, 0), (NULL, 5), (0, NaN) and (NaN, NaN); cell ids come from
+    ``s2_cell_from_latlng``, which gives the latter four a NULL cell id.
+    Returns (the valid rows, the facts frame)."""
+    rng = np.random.default_rng(11)
+    real = [
+        (i, float(a), float(b) + 5.0 * (i % 2))
+        for i, (a, b) in enumerate(rng.uniform(-0.5, 0.5, size=(40, 2)), start=10)
+    ]
+    nan = float("nan")
+    bad = [(1, nan, 0.0), (2, None, 5.0), (3, 0.0, nan), (4, nan, nan)]
+    facts = spark.createDataFrame(
+        real + bad, "image_id long, lat double, lng double"
+    ).withColumn("cell_id", s2_cell_from_latlng("lat", "lng"))
+    return real, facts
+
+
+def test_null_coordinate_facts_join_nothing(spark, regime):
+    """Fact rows whose lat or lng is NULL or NaN carry a NULL cell id, so
+    the level-7 histogram has a NULL group, whether it is read off the
+    facts or off ``build_cell_stats``. That group is skipped, the rows
+    are never ring candidates, and knn_join_df (with and without stats)
+    and knn_join match a numpy brute force over the valid rows; k = 25
+    is more than one cluster holds, so probes widen."""
+    from rust_s2_spark.plans.stats import build_cell_stats
+
+    real, facts = _null_coordinate_facts(spark)
+    stats = build_cell_stats(facts, levels=(7,))
+    probe_rows = [(0, 0.0, 0.0), (1, 0.1, 5.0), (2, 0.0, 2.5)]
+    probes = spark.createDataFrame(
+        probe_rows, "query_id long, qlat double, qlng double"
+    )
+    regime.probes(len(probe_rows))
+    for kk in (3, 25):
+        want = _numpy_rank(real, probe_rows, kk)
+        for st, n in ((None, None), (stats, None), (stats, 44)):
+            got = sorted(
+                tuple(r)
+                for r in knn_join_df(facts, probes, kk, stats=st, n_rows=n)
+                .select("query_id", "rank", "image_id")
+                .collect()
+            )
+            assert got == want, (kk, st is None, n)
+        with regime.unrecorded():
+            listed = sorted(
+                tuple(r)
+                for r in knn_join(spark, facts, probe_rows, kk)
+                .select("query_id", "rank", "image_id")
+                .collect()
+            )
+        assert listed == want, kk
+
+
+def test_injected_stats_bound_driver_rows_only_when_confirmed(
+    spark, images, probes, monkeypatch
+):
+    """Injected stats bound a literal round's raw pairs only as far as
+    ``n_rows`` confirms them. Without ``n_rows`` every round keeps each
+    probe's top k in Spark (a Window in the round plan); with a matching
+    ``n_rows`` the rounds ship raw pairs, as with a histogram read off
+    the facts. Stats built before the table grew add the growth to every
+    probe's ring count, so a cap just under the growth pre-trims every
+    round however few rows the stale rings count. Every result matches
+    brute force."""
+    import warnings
+
+    from rust_s2_spark.operators import knn
+    from rust_s2_spark.plans.stats import build_cell_stats, stats_row_count
+
+    small = probes.where(F.col("query_id") % 13 == 1).coalesce(1)
+    rows = [tuple(r) for r in small.collect()]
+    want = _brute(spark, images, rows, 3)
+    n = images.count()
+    full = build_cell_stats(images, levels=(7,))
+    plans = _round_plans(monkeypatch, type(images))
+
+    def run(stats, n_rows):
+        plans.clear()
+        got = _ranks(knn_join_df(images, small, 3, stats=stats, n_rows=n_rows))
+        assert got.equals(want)
+        assert plans, "no literal round ran"
+        return ["Window" in p for p in plans]
+
+    assert all(run(full, None))
+    assert not any(run(full, n))
+    older = build_cell_stats(
+        images.where(F.col("image_id").cast("long") % 10 < 7), levels=(7,)
+    )
+    grown = n - stats_row_count(older, 7)
+    monkeypatch.setattr(knn, "_DRIVER_RANK_MAX_ROWS", grown - 1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # the stats drift more than 25%
+        assert all(run(older, n))

@@ -244,3 +244,25 @@ def test_package_zips_for_py_files(tmp_path):
     )
     assert out.returncode == 0, out.stderr
     assert len(out.stdout.strip()) >= 8  # a real token came back
+
+
+def test_null_cells_are_never_hot(spark):
+    """Rows with a NULL or NaN coordinate get a NULL cell id from
+    ``s2_cell_from_latlng``; their NULL parent group, here the largest,
+    is no hot cell for ``hot_cells``, ``hot_cells_from_stats`` or the
+    auto salting, which keeps every row."""
+    from rust_s2_spark.functions import s2_cell_from_latlng
+    from rust_s2_spark.plans.stats import build_cell_stats, hot_cells_from_stats
+
+    nan = float("nan")
+    rows = [(i, 10.0 + i * 1e-4, 20.0) for i in range(50)]
+    rows += [(100 + i, nan if i % 2 else None, 5.0) for i in range(80)]
+    df = spark.createDataFrame(rows, "image_id long, lat double, lng double").withColumn(
+        "cell_id", s2_cell_from_latlng("lat", "lng")
+    )
+    hot = hot_cells(df, level=5, threshold=10)
+    assert list(hot.values()) == [50]
+    stats = build_cell_stats(df, levels=(5,))
+    assert hot_cells_from_stats(stats, 5, 10) == {int(c): v for c, v in hot.items()}
+    out = salted_repartition(df, level=5, threshold=0, n_partitions=4)
+    assert out.count() == len(rows)

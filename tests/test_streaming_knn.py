@@ -104,3 +104,38 @@ def test_streaming_knn_sink_is_idempotent_on_replay(spark, images):
         assert rows1 == rows2
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_streaming_knn_skips_null_coordinate_facts(spark, images):
+    """Fact rows at (NaN, 0), (NULL, 5), (0, NaN) and (NaN, NaN) get a
+    NULL cell id from ``s2_cell_from_latlng``, so the stats the stream
+    is given carry a NULL-cell group. The stream (whose stats ``n_rows``
+    counts those rows too) returns the same rows as the batch operator
+    over the valid facts alone."""
+    from rust_s2_spark.functions import s2_cell_from_latlng
+
+    valid = images.where(F.col("image_id").cast("long") % 3 == 0)
+    nan = float("nan")
+    bad = spark.createDataFrame(
+        [(-1, nan, 0.0), (-2, None, 5.0), (-3, 0.0, nan), (-4, nan, nan)],
+        "image_id long, lat double, lng double",
+    ).withColumn("cell_id", s2_cell_from_latlng("lat", "lng"))
+    facts = valid.unionByName(
+        bad.withColumn("image_id", F.col("image_id").cast(valid.schema["image_id"].dataType))
+    )
+    probes = _probes(images).limit(30)
+    tmp = tempfile.mkdtemp(prefix="s2sknn_n_")
+    try:
+        out = _run_stream(spark, facts, probes, tmp, n_files=2)
+        got = sorted(
+            (int(r["query_id"]), int(r["rank"]), int(r["image_id"]))
+            for r in out.collect()
+        )
+        want = sorted(
+            (int(r["query_id"]), int(r["rank"]), int(r["image_id"]))
+            for r in knn_join_df(valid, probes, 3).collect()
+        )
+        assert got == want
+        assert len(got) == 3 * probes.count()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -146,6 +146,32 @@ def test_lineage_write_and_resume(spark, images):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_lineage_keeps_null_cell_rows_in_bucket_zero(spark):
+    """Rows at (NaN, 5) and (NULL, 1) get a NULL cell id from
+    ``s2_cell_from_latlng``: the write keeps them in bucket 0 with NULL
+    min/max cell ids, and a resume writes nothing."""
+    from rust_s2_spark.functions import s2_cell_from_latlng
+    from rust_s2_spark.plans.lineage import read_output, write_with_lineage
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(1, 10.0, 20.0), (2, nan, 5.0), (3, None, 1.0)],
+        "image_id long, lat double, lng double",
+    ).withColumn("cell_id", s2_cell_from_latlng("lat", "lng"))
+    tmp = tempfile.mkdtemp(prefix="s2lineage_n_")
+    base = f"{tmp}/out"
+    try:
+        assert write_with_lineage(spark, df, base, step="ingest") == 2
+        assert write_with_lineage(spark, df, base, step="ingest") == 0
+        out = read_output(spark, base)
+        assert sorted(r.image_id for r in out.where(F.col("bucket") == 0).collect()) == [2, 3]
+        assert out.count() == 3
+        ln = spark.read.parquet(f"{base}/_lineage").where(F.col("bucket") == 0).collect()
+        assert [(r.n_rows, r.min_cell_biased, r.max_cell_biased) for r in ln] == [(2, None, None)]
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def test_streaming_first_seen_dedup(spark):
     """applyInPandasWithState exact-dedup stream: each key is emitted
     exactly once with its first timestamp, duplicates are swallowed."""
